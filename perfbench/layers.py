@@ -127,9 +127,7 @@ class Tracer:
 
 def streaming_listener(records: list):
     """A StreamingQueryListener appending (epoch_s, batch_ms, rows) per
-    micro-batch progress event to ``records``.  The batch durations go to
-    the spans file only: as a metric they would read 0 on every run of a
-    workload without streams."""
+    micro-batch progress event to ``records``."""
     from pyspark.sql.streaming import StreamingQueryListener
 
     class Progress(StreamingQueryListener):

@@ -3,13 +3,14 @@
 
     python3 perfbench/selftest.py [workload ...]
 
-For each workload: one untraced and two traced runs of two passes.
+For each workload: one untraced and two traced runs of the fewest
+passes.
 Asserts that
 - every metric named in BENCHMARK.json is printed, with its unit;
 - exec.jobs, registry.build_jobs and every io.*.calls count repeat
   exactly across the two traced runs;
 - build + plan + sink time reconciles with the traced pass wall within
-  10%;
+  10% (``run.py`` fails a traced run otherwise);
 - every output matches its stored digest, and no query fails;
 and, once, that a deliberately broken query is counted as failed.
 """
@@ -34,7 +35,7 @@ def bench(workload: str, trace: int, *extra: str) -> dict:
     cmd = [
         sys.executable, os.path.join(HERE, "run.py"),
         "--workload", workload, "--seed", "7", "--seconds", "1",
-        "--trace", str(trace), "--sf", str(SELFTEST_SF), "--passes", "2",
+        "--trace", str(trace), "--sf", str(SELFTEST_SF),
         *extra,
     ]
     out = subprocess.run(cmd, cwd=ROOT, capture_output=True, text=True, timeout=600)
@@ -63,8 +64,6 @@ def main() -> int:
         for r in (a, b):
             check_units(r, spec["per_layer"], name)
             assert r["correct"], (name, r)
-            ratio = r["metrics"]["trace.layer_sum_ratio"]["value"]
-            assert 0.9 <= ratio <= 1.1, f"{name}: layer sum / pass wall {ratio}"
         exact = [k for k in a["metrics"] if k in EXACT or k.endswith(".calls")]
         diff = {
             k: (a["metrics"][k]["value"], b["metrics"][k]["value"])

@@ -1,14 +1,16 @@
 """One benchmark run, in a fresh process started by ``run.py``.
 
 Set-up: session, imports, workload configuration, then one warm-up pass
-over every query of the workload (this fills the caches and checks each
-output against its stored digest).  Then a fixed number of timed passes;
-each pass runs every query, in the seed's order, through build -> plan
--> sink, one query at a time.  The timed passes are not checked again:
-a check re-executes every query, which would cost a whole pass.
+over every query of the workload (this fills the caches).  Then a fixed
+number of timed passes; each pass runs every query, in the seed's order,
+through build -> plan -> sink, one query at a time.  After them, off the
+clock, the DataFrames the last timed pass sank are collected and checked
+against the stored digests, and every timed sink must have run at least
+one Spark job.
 
 With ``--trace 1`` the timed passes alternate between tracing off and
-on, starting and ending untraced (one pass more than untraced runs);
+on, starting and ending untraced (one pass more than an untraced run
+when its pass count is even);
 per-layer metrics come from the traced passes, and the difference of
 the two pass medians is the tracing overhead.
 
@@ -46,7 +48,6 @@ class Run:
         self.attempted = 0
         self.failures: list[str] = []
         self.stream_events: list = []
-        self.check_s = 0.0  # digest checks in the warm-up, off setup_s
 
     # -- set-up --------------------------------------------------------
     def setup(self) -> None:
@@ -90,42 +91,29 @@ class Run:
 
     # -- one query -----------------------------------------------------
     def run_query(self, name: str, pass_no: int):
-        """Build, plan and sink one query; returns its latency, or None
-        when it failed.  The warm-up pass (0) sinks by collecting the
-        rows and checks them against the stored digest, off the clock."""
+        """Build, plan and sink one query; returns its latency and the
+        DataFrame, or None when it failed.  Each phase runs in its own
+        job group."""
         t = self.tracer
         t.query = name
         sc = self.spark.sparkContext
         self.attempted += 1
         try:
             t0 = time.perf_counter()
-            if t.active:
-                sc.setJobGroup(f"pb|{pass_no}|{name}|build", name)
+            sc.setJobGroup(f"pb|{pass_no}|{name}|build", name)
             with t.span("registry.build"):
                 df = self.qs[name](self.spark, self.sf_dir)
-            if t.active:
-                sc.setJobGroup(f"pb|{pass_no}|{name}|plan", name)
+            sc.setJobGroup(f"pb|{pass_no}|{name}|plan", name)
             with t.span("catalyst.plan"):
                 jplan = df._jdf.queryExecution().executedPlan()
-            if t.active:
-                sc.setJobGroup(f"pb|{pass_no}|{name}|sink", name)
+            sc.setJobGroup(f"pb|{pass_no}|{name}|sink", name)
             with t.span("exec.sink"):
-                if pass_no == 0:
-                    rows = df.collect()
-                else:
-                    self.bench.force_eval(df)
+                self.bench.force_eval(df)
             latency = time.perf_counter() - t0
+            sc.setJobGroup("pb|idle", "")
             if t.active:
-                sc.setJobGroup("pb|idle", "")
                 t.count("catalyst.plan_operators", len(jplan.treeString().splitlines()))
-            if pass_no == 0:
-                c0 = time.perf_counter()
-                why = oracle.check(self.expected[name], df.columns, rows)
-                self.check_s += time.perf_counter() - c0
-                if why is not None:
-                    self.failures.append(f"{name}: {why}")
-                    return None
-            return latency
+            return latency, df
         except Exception as ex:  # noqa: BLE001 - a failed query is a result
             self.failures.append(f"{name}: {type(ex).__name__}: {ex}"[:400])
             return None
@@ -135,11 +123,14 @@ class Run:
         args, w = self.args, self.w
         spawn_t = float(os.environ["PERFBENCH_SPAWN_T"])
         self.setup()
-        # warm-up pass: untimed, fills the caches, checks every output
-        warmup = {name: self.run_query(name, 0) for name in w.order(args.seed, 0)}
-        setup_s = time.time() - spawn_t - self.check_s
+        # warm-up pass: untimed, fills the caches
+        warmup = {}
+        for name in w.order(args.seed, 0):
+            got = self.run_query(name, 0)
+            warmup[name] = got and got[0]
+        setup_s = time.time() - spawn_t
 
-        n_passes = args.passes or w.passes(args.seconds)
+        n_passes = w.passes(args.seconds)
         if args.trace:
             # untraced-traced-untraced: the first timed pass runs slower
             # (JIT still warming), so an untraced pass on both sides of
@@ -151,6 +142,8 @@ class Run:
         traced: list[int] = []
         windows: list[tuple[float, float]] = []
         per_query: dict[str, list[float]] = {}
+        sunk: list[tuple[int, str]] = []
+        last: dict = {}  # query -> the DataFrame the last pass sank
         for p in range(1, n_passes + 1):
             self.reset()
             # traced runs alternate: even passes traced, odd ones not
@@ -159,11 +152,14 @@ class Run:
             self.tracer.pass_no = p
             c0 = layers.tree_cpu_s(self.jvm_pid) + layers.self_cpu_s()
             e0 = time.time()
+            last = {}
             for name in w.order(args.seed, p):
-                x = self.run_query(name, p)
-                if x is not None:
-                    lat.append(x)
-                    per_query.setdefault(name, []).append(x)
+                got = self.run_query(name, p)
+                if got is not None:
+                    lat.append(got[0])
+                    per_query.setdefault(name, []).append(got[0])
+                    sunk.append((p, name))
+                    last[name] = got[1]
             e1 = time.time()
             c1 = layers.tree_cpu_s(self.jvm_pid) + layers.self_cpu_s()
             self.tracer.active = False
@@ -172,6 +168,8 @@ class Run:
             if on:
                 traced.append(p)
                 windows.append((e0, e1))
+        self.check_outputs(last)
+        self.check_sinks(sunk)
         result = {
             "setup_s": setup_s,
             "passes": n_passes,
@@ -190,6 +188,29 @@ class Run:
         result["attempted"] = self.attempted
         result["failures"] = self.failures
         return result
+
+    def check_outputs(self, dfs: dict) -> None:
+        """Untimed: collect each DataFrame the last timed pass sank, on
+        the state the timed passes left (on a warm workload, df-cache
+        hits), and check its rows against the stored digest."""
+        self.spark.sparkContext.setJobGroup("pb|check", "")
+        for name, df in dfs.items():
+            self.attempted += 1
+            try:
+                why = oracle.check(self.expected[name], df.columns, df.collect())
+            except Exception as ex:  # noqa: BLE001 - a failed query is a result
+                why = f"{type(ex).__name__}: {ex}"[:400]
+            if why is not None:
+                self.failures.append(f"{name}: {why}")
+
+    def check_sinks(self, sunk: list[tuple[int, str]]) -> None:
+        """Every timed sink that returned must have run a Spark job: a
+        sink that does no work would otherwise pass as a fast one."""
+        layers.drain_listeners(self.spark)
+        st = self.spark.sparkContext.statusTracker()
+        for p, name in sunk:
+            if not st.getJobIdsForGroup(f"pb|{p}|{name}|sink"):
+                self.failures.append(f"{name}: pass {p} sink ran no Spark job")
 
     # -- per-layer metrics ----------------------------------------------
     def layer_metrics(self, traced, windows, walls) -> dict:
@@ -217,7 +238,7 @@ class Run:
             m.update(stage_sums[i])
             for fn in layers.IO_FUNCS:
                 m[f"io.{fn}.calls"] = t.counted(f"io.{fn}.calls", p)
-            m["io.read_table.s"] = t.span_seconds("io.read_table", p)
+                m[f"io.{fn}.s"] = t.span_seconds(f"io.{fn}", p)
             m["io.s"] = t.outer_seconds("io.", p)
             hits = t.counted("io.cached_df.hits", p)
             misses = t.counted("io.cached_df.misses", p)
@@ -228,6 +249,7 @@ class Run:
             lo, hi = windows[i]
             batches = [e for e in self.stream_events if lo <= e[0] <= hi]
             m["streaming.batches"] = len(batches)
+            m["streaming.batch_s"] = sum(e[1] for e in batches) / 1000.0
             m["streaming.input_rows"] = sum(e[2] for e in batches)
             m["trace.pass_wall_s"] = walls[p - 1]
             m["trace.layer_sum_ratio"] = (
@@ -262,7 +284,6 @@ def main() -> None:
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--sf-dir", required=True)
     ap.add_argument("--sf", type=float, required=True)
-    ap.add_argument("--passes", type=int, default=0)
     ap.add_argument("--break-query", default="")
     ap.add_argument("--out", required=True)
     args = ap.parse_args()

@@ -56,6 +56,12 @@ COLD_SAMPLE = (
 )
 
 
+# Query latencies a run collects at the least: query_tail_s is the
+# highest percentile with ten samples beyond it, so 30 samples put it at
+# p66.7, above the median.
+MIN_SAMPLES = 30
+
+
 @dataclass(frozen=True)
 class Workload:
     name: str
@@ -70,7 +76,10 @@ class Workload:
     nominal_pass_s: float
 
     def passes(self, seconds: float) -> int:
-        return max(2, math.ceil(seconds / self.nominal_pass_s))
+        return max(
+            math.ceil(MIN_SAMPLES / len(self.queries)),
+            math.ceil(seconds / self.nominal_pass_s),
+        )
 
     def order(self, seed: int, pass_no: int) -> list[str]:
         """The seed's query order for one pass (warm-up is pass 0)."""
