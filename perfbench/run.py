@@ -16,6 +16,7 @@ DuckDB versions.  See README.md for the workloads and metrics.
 from __future__ import annotations
 
 import argparse
+import ctypes
 import hashlib
 import importlib.metadata
 import json
@@ -114,31 +115,58 @@ def program_present() -> bool:
     )
 
 
-def reap_group(pgid: int) -> None:
-    """Kill what is left of the worker's process group and wait until
-    none of it runs (reparented grandchildren cannot be waited on)."""
-    try:
-        os.killpg(pgid, signal.SIGKILL)
-    except ProcessLookupError:
-        return
-    deadline = time.time() + 30
-    while time.time() < deadline:
-        alive = False
-        for entry in os.listdir("/proc"):
-            if not entry.isdigit():
-                continue
+PR_SET_CHILD_SUBREAPER = 36
+
+
+def become_subreaper() -> None:
+    """Make descendants orphaned during the run reparent to this process
+    instead of init, so ``reap_descendants`` can wait for them."""
+    libc = ctypes.CDLL(None, use_errno=True)
+    if libc.prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0) != 0:
+        raise OSError(ctypes.get_errno(), "prctl(PR_SET_CHILD_SUBREAPER)")
+
+
+def descendants() -> list[int]:
+    """Every process below this one, found through parent pids: Spark's
+    Python daemon moves to a process group of its own, so the worker's
+    process group does not hold all of them."""
+    children: dict[int, list[int]] = {}
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/stat") as f:
+                raw = f.read()
+        except OSError:
+            continue
+        ppid = int(raw[raw.rindex(")") + 2 :].split()[1])
+        children.setdefault(ppid, []).append(int(entry))
+    found, todo = [], [os.getpid()]
+    while todo:
+        for pid in children.get(todo.pop(), ()):
+            found.append(pid)
+            todo.append(pid)
+    return found
+
+
+def reap_descendants() -> None:
+    """Kill every process this one started, directly or not, and wait
+    until each has ended.  As a subreaper this process inherits the
+    orphans, so no child left means no descendant left."""
+    while True:
+        for pid in descendants():
             try:
-                with open(f"/proc/{entry}/stat") as f:
-                    raw = f.read()
-            except OSError:
-                continue
-            fields = raw[raw.rindex(")") + 2 :].split()
-            if int(fields[2]) == pgid and fields[0] != "Z":
-                alive = True
-                break
-        if not alive:
+                os.kill(pid, signal.SIGKILL)
+            except ProcessLookupError:
+                pass
+        try:
+            os.waitpid(-1, 0)
+        except ChildProcessError:
             return
-        time.sleep(0.2)
+
+
+def exit_on_signal(signum, _frame) -> None:
+    raise SystemExit(128 + signum)
 
 
 def run_worker(args, sf: float, sf_dir: str) -> dict | None:
@@ -188,10 +216,11 @@ def run_worker(args, sf: float, sf_dir: str) -> dict | None:
         try:
             code = proc.wait(timeout=RUN_LIMIT_S)
         except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
             code = None
         finally:
-            reap_group(proc.pid)
-            proc.wait()
+            reap_descendants()
     if code != 0 or not os.path.exists(out):
         with open(os.path.join(run_dir, "worker.log")) as f:
             sys.stderr.write(f.read()[-4000:])
@@ -312,5 +341,17 @@ def main() -> int:
     return 0
 
 
+STOP_SIGNALS = (signal.SIGTERM, signal.SIGINT, signal.SIGHUP)
+
 if __name__ == "__main__":
-    raise SystemExit(main())
+    become_subreaper()
+    for sig in STOP_SIGNALS:
+        signal.signal(sig, exit_on_signal)
+    try:
+        raise SystemExit(main())
+    finally:
+        # on every way out, a signal included: nothing this run started
+        # may outlive it
+        for sig in STOP_SIGNALS:
+            signal.signal(sig, signal.SIG_IGN)
+        reap_descendants()
