@@ -88,6 +88,15 @@ def force_eval(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def codegen_compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM so far (one histogram
+    sample per compile). Repeated builds of identical plans should hit
+    the generated-code cache and add nothing; a count that grows with
+    every rep means the cache is thrashing."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def timed_min(
     fn, n_runs: int, include_cold: bool = False
 ) -> tuple[float, list[float], float]:
@@ -225,11 +234,14 @@ def bench_block(
     duck_worst_disp = 0.0
     noisy: dict[str, float] = {}  # residual >bar after extra reps, by side
     spark_lines: dict[str, str] = {}
+    compiles = 0  # codegen compiles inside the timed Spark reps
     for name in HEADLINE:
         key = name.split("_", 1)[0]
+        c0 = codegen_compiles(spark)
         best, runs, disp = timed_min(
             lambda: force_eval(qs[name](spark, sf_dir)), n_runs
         )
+        compiles += codegen_compiles(spark) - c0
         times[key] = round(best, 2)
         worst_disp = max(worst_disp, disp)
         if disp > DISPERSION_BAR:
@@ -280,6 +292,7 @@ def bench_block(
         "worst_rep_dispersion": round(worst_disp, 2),
         "duckdb_worst_dispersion": round(duck_worst_disp, 2),
         "job_floor": job_floor,
+        "codegen_compiles": compiles,
     }
     if noisy:
         # per-query attribution: which query blew the floor, which side

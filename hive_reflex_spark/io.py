@@ -187,7 +187,13 @@ def chain_checkpoint(df: DataFrame) -> DataFrame:
     Deliberately does NOT honor the _LAZY_PLANS test hook: truncation
     here is structural (a 20-round loop's un-truncated plan is 2^20
     subtree copies — building it would hang any lazy-plan reader), and
-    no plan pin reads through a chain checkpoint."""
+    no plan pin reads through a chain checkpoint.
+
+    The reliable path needs no persist first: an eager Dataset checkpoint
+    (Spark 4) computes the round and writes its files in one job, so each
+    round is computed once (pinned by a test). The files of a dropped
+    round are removed by the session's cleanCheckpoints conf
+    (session.py)."""
     sc = df.sparkSession.sparkContext
     if sc._jsc.sc().getCheckpointDir().isDefined():
         return df.checkpoint()

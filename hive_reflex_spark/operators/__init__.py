@@ -41,7 +41,9 @@ from hive_reflex_spark import registry as _registry
 # locally this round, all behavior-identical in the driver's local mode):
 # q92/q98 (chain_checkpoint == the old localCheckpoint when no checkpoint
 # dir is set; hash r12), q263 (generator gained an unused default arg +
-# tracking-only cold persist; hash r08, re-verified at both small SFs).
+# tracking-only cold persist; hash r08, re-verified at both small SFs),
+# q272 (fp.persist() -> tracked_persist: a persist that only adds FIFO
+# tracking, same MEMORY_AND_DISK level, eviction recomputes via lineage).
 # q68/q28 stay out: rows-only by design with standing rows evidence and
 # oracled twins (q68a/q118). Every query not listed keeps its standing
 # hash-green driver row and original registration order after this block.

@@ -491,7 +491,7 @@ def q68_lstm_hidden(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSTM hidden-state trace over each user's event-value sequence
     (4 hidden units, fixed deterministic weights). Rows-only driver check —
     the recurrence is numpy-oracled in tests/test_nn.py."""
-    from hive_reflex_spark.io import corpus_checkpoint, read_table
+    from hive_reflex_spark.io import read_table
 
     events = read_table(spark, sf_dir, "events").select(
         "event_id",
@@ -996,7 +996,7 @@ def q68a_lstm_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
     user's event-value sequence (2 hidden units), replayed exactly by a
     recursive-CTE oracle. Closes J5's rows-only gap — q68 keeps the
     float LSTM (numpy-oracled), this pins the integer RTL semantics."""
-    from hive_reflex_spark.io import corpus_checkpoint, read_table
+    from hive_reflex_spark.io import read_table
 
     events = read_table(spark, sf_dir, "events").select(
         "event_id",
@@ -1269,7 +1269,7 @@ def q68b_gru_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-checked GRU twin of q68a (J5's second cell type,
     `nn_topology.h:51` LAYER_GRU): same event-value sequences, 2 hidden
     units, integer hard-gate algebra."""
-    from hive_reflex_spark.io import corpus_checkpoint, read_table
+    from hive_reflex_spark.io import read_table
 
     events = read_table(spark, sf_dir, "events").select(
         "event_id",

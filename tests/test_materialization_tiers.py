@@ -5,15 +5,35 @@ cannot accumulate unbounded storage (VERDICT r12 items 2/6)."""
 
 from __future__ import annotations
 
+import contextlib
+import gc
+import os
 import tempfile
+import time
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from hive_reflex_spark import io as hio
 
 
 def _n_persistent_rdds(spark) -> int:
     return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+@contextlib.contextmanager
+def _checkpoint_dir(spark):
+    """A temporary reliable-checkpoint dir, reset to "no dir" on exit so
+    the shared session's other tests keep the localCheckpoint fallback
+    ($-name setter needs getattr)."""
+    with tempfile.TemporaryDirectory() as d:
+        spark.sparkContext.setCheckpointDir(d)
+        try:
+            yield d
+        finally:
+            getattr(spark._jsc.sc(), "checkpointDir_$eq")(
+                spark._sc._jvm.scala.Option.empty()
+            )
 
 
 def test_tracked_persist_is_fifo_bounded(spark):
@@ -79,14 +99,8 @@ def test_iterative_query_identical_with_reliable_checkpoint(spark, sf_smoke):
 
     q = entrymod.queries()["q78_dedup_clusters"]
     base = {tuple(r) for r in q(spark, sf_smoke).collect()}
-    with tempfile.TemporaryDirectory() as d:
-        spark.sparkContext.setCheckpointDir(d)
-        try:
-            reliable = {tuple(r) for r in q(spark, sf_smoke).collect()}
-        finally:
-            getattr(spark._jsc.sc(), "checkpointDir_$eq")(
-                spark._sc._jvm.scala.Option.empty()
-            )
+    with _checkpoint_dir(spark):
+        reliable = {tuple(r) for r in q(spark, sf_smoke).collect()}
     assert base == reliable
     assert base, "fixture should produce clusters"
 
@@ -103,17 +117,52 @@ def test_chain_checkpoint_truncates_and_prefers_reliable(spark):
     )
     assert ck.count() == 20
     # with a checkpoint dir: reliable checkpoint, same truncation
-    with tempfile.TemporaryDirectory() as d:
-        spark.sparkContext.setCheckpointDir(d)
-        try:
-            ck2 = hio.chain_checkpoint(src)
-            assert "Range" not in (
-                ck2._jdf.queryExecution().analyzed().toString()
+    with _checkpoint_dir(spark):
+        ck2 = hio.chain_checkpoint(src)
+        assert "Range" not in ck2._jdf.queryExecution().analyzed().toString()
+        assert ck2.count() == 20
+
+
+def test_reliable_chain_checkpoint_computes_once_and_cleans_up(spark):
+    """An eager reliable checkpoint computes the round and writes its
+    files in one job: a Python UDF's accumulator sees every upstream row
+    exactly once per round, and reading the result later reads the
+    files. Once the rounds are dropped, the session's cleanCheckpoints
+    conf removes their files, so a long iterative session does not grow
+    its checkpoint dir without bound."""
+    n, rounds = 40, 3
+    seen = spark.sparkContext.accumulator(0)
+
+    def tick(v):
+        seen.add(1)
+        return v + 1
+
+    step = F.udf(tick, LongType())
+    with _checkpoint_dir(spark) as d:
+        df = spark.range(n).select(F.col("id").alias("v"))
+        for r in range(1, rounds + 1):
+            df = hio.chain_checkpoint(df.select(step("v").alias("v")))
+            assert seen.value == n * r, (
+                f"round {r}: {seen.value} upstream rows computed, want {n * r}"
             )
-            assert ck2.count() == 20
-        finally:
-            # reset to "no dir" so the shared session's other tests keep
-            # the localCheckpoint fallback ($-name needs getattr)
-            getattr(spark._jsc.sc(), "checkpointDir_$eq")(
-                spark._sc._jvm.scala.Option.empty()
-            )
+        assert sorted(row.v for row in df.collect()) == list(
+            range(rounds, n + rounds)
+        )
+        assert seen.value == n * rounds
+
+        def rdd_dirs() -> list[str]:
+            return [
+                e for sub in os.listdir(d)
+                for e in os.listdir(os.path.join(d, sub))
+            ]
+
+        assert rdd_dirs(), "the reliable path wrote no checkpoint files"
+        del df
+        gc.collect()
+        deadline = time.monotonic() + 30
+        while rdd_dirs() and time.monotonic() < deadline:
+            spark._jvm.System.gc()
+            time.sleep(0.5)
+        assert not rdd_dirs(), (
+            f"checkpoint files of dropped rounds remain: {rdd_dirs()}"
+        )

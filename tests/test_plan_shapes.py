@@ -367,11 +367,12 @@ def test_sized_postings_score_without_joins(spark, sf_smoke, name):
 
 
 def test_q47_expansion_is_length_pruned(spark, sf_smoke):
-    """r13 pin: q47's pair expansion carries the AllPairs length filter
-    INSIDE the lambda (filter(...) before the struct transform), so
-    provably-sub-threshold pairs (2*min(na,nb) < max) never materialize
-    as structs — visible in the Generate node's expression. q273's
-    stream must stay UNPRUNED (its recall curve buckets deciles 0-9)."""
+    """r13 pin: q47 applies the AllPairs length filter as a codegen'd
+    row filter between the pair explode and the grouped count (not
+    inside the expansion lambda, which measured slower), so provably
+    sub-threshold pairs (2*min(na,nb) < max) never reach the count —
+    visible as least/greatest in the plan. q273's stream must stay
+    UNPRUNED (its recall curve buckets deciles 0-9)."""
     plan = plan_of(spark, "q47_jaccard_pairs", sf_smoke)
     assert "least" in plan and "greatest" in plan, (
         "q47 lost the length-filter prune inside the pair expansion"

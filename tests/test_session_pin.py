@@ -27,3 +27,27 @@ def test_pin_session_reasserts_after_external_drift(spark):
         )
     finally:
         spark.conf.set("spark.sql.ansi.enabled", "false")
+
+
+def test_codegen_cache_holds_a_headline_pass(spark, sf_smoke):
+    """A second build of identical plans reuses the generated classes of
+    the first. Spark's default cache of 100 entries is smaller than one
+    headline pass, so LRU eviction recompiled most of its classes on
+    every pass; get_spark sizes the cache to the workload."""
+    import __spark_entry__ as entry
+    import bench
+
+    qs = entry.queries()
+
+    def headline_pass() -> int:
+        before = bench.codegen_compiles(spark)
+        for name in bench.HEADLINE:
+            bench.force_eval(qs[name](spark, sf_smoke))
+        return bench.codegen_compiles(spark) - before
+
+    first = headline_pass()
+    assert first > 100, f"first pass compiled only {first} classes"
+    second = headline_pass()
+    assert second <= 5, (
+        f"second identical pass recompiled {second} classes (first: {first})"
+    )
