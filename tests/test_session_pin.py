@@ -46,6 +46,8 @@ def test_codegen_cache_holds_a_headline_pass(spark, sf_smoke):
         return bench.codegen_compiles(spark) - before
 
     first = headline_pass()
+    # the pass must outgrow Spark's default cache of 100 to tell the two
+    # cache sizes apart
     assert first > 100, f"first pass compiled only {first} classes"
     second = headline_pass()
     assert second <= 5, (
