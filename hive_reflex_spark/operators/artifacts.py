@@ -17,7 +17,6 @@ from __future__ import annotations
 import hashlib
 import os
 import struct
-import tempfile
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,6 +24,7 @@ from pyspark.sql import functions as F
 
 from hive_reflex_spark.io import read_table
 from hive_reflex_spark.registry import query
+from hive_reflex_spark.session import scratch_path
 from hive_reflex_spark.sources.sinks import (
     export_c_header,
     load_model_binary,
@@ -97,9 +97,8 @@ def q157_model_pack_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     crc_ok/sha_ok are computed from the file, not asserted — a packing
     bug flips them to false and fails the value-hash."""
     weights = _pack_weights(spark, sf_dir)
-    out_dir = os.path.join(tempfile.gettempdir(), "hrs_artifacts")
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, f"q157_{os.getpid()}.bin")
+    path = scratch_path("artifacts", "q157.bin")
+    os.makedirs(os.path.dirname(path), exist_ok=True)
     manifest = pack_model_binary(weights, path)
     load_model_binary(path)  # the SDK loader contract end-to-end
 
@@ -160,9 +159,7 @@ def q161_profile_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("doc_id").alias("min_doc"),
         F.max("doc_id").alias("max_doc"),
     )
-    path = os.path.join(
-        tempfile.gettempdir(), "hrs_artifacts", f"q161_{os.getpid()}_csv"
-    )
+    path = scratch_path("artifacts", "q161_csv")
     write_profile_csv(prof, path)
     return spark.read.schema(
         "source string, n_docs bigint, total_chars bigint, "
@@ -207,11 +204,11 @@ def q162_jsonlog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("event_id") % 4).cast("int").alias("level"),
         "value",
     )
-    out_dir = os.path.join(tempfile.gettempdir(), "hrs_artifacts")
+    out_dir = scratch_path("artifacts")
     os.makedirs(out_dir, exist_ok=True)
-    log_path = os.path.join(out_dir, f"q162_{os.getpid()}_json")
+    log_path = os.path.join(out_dir, "q162_json")
     write_runtime_log_json(logs, log_path)
-    cfg_path = os.path.join(out_dir, f"q162_{os.getpid()}_cfg.json")
+    cfg_path = os.path.join(out_dir, "q162_cfg.json")
     with open(cfg_path, "w") as f:
         _json.dump({"min_level": _LOG_MIN_LEVEL, "device": "hrs-node-0"}, f)
     cfg = read_json_config(spark, cfg_path)

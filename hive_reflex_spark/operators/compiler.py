@@ -835,23 +835,15 @@ def q216_bank_profile_sizing(spark: SparkSession, sf_dir: str) -> DataFrame:
     profiles — both bounded; the config file is the single-digest
     deployment artifact every node reads once."""
     import json as _json
-    import os as _os
-    import tempfile as _tempfile
 
+    from hive_reflex_spark.session import scratch_path
     from hive_reflex_spark.sources.sinks import read_json_config
 
-    # atomic publish to a shared path: write a pid-unique temp file, then
-    # os.replace() it into place — a concurrent reader (builder sweep +
-    # driver run share this tempdir) can never observe a truncated JSON
-    cfg_path = _os.path.join(
-        _tempfile.gettempdir(), "hrs_bank_profiles.json"
-    )
-    tmp_path = f"{cfg_path}.{_os.getpid()}.tmp"
-    with open(tmp_path, "w") as f:
+    cfg_path = scratch_path("bank_profiles.json")
+    with open(cfg_path, "w") as f:
         _json.dump(
             [{"profile": p, "bank_kb": kb} for p, kb in _BANK_PROFILES], f
         )
-    _os.replace(tmp_path, cfg_path)
     cfg = read_json_config(spark, cfg_path).select(
         "profile", F.col("bank_kb").cast("long").alias("bank_kb")
     )

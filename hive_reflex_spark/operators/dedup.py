@@ -220,8 +220,8 @@ def collision_jaccard_pairs(
     either keeps ALL its expansion records (intersection count intact)
     or loses all of them. Applied as a row filter IMMEDIATELY above the
     explode — before the grouped count's exchange, so the pruned 24% of
-    expansion records / 25% of candidate pairs (measured,
-    scripts/q47_prune_study.py) never shuffle. Deliberately NOT inside
+    expansion records / 25% of candidate pairs (measured at sf0.1 and
+    sf1, OPTIMIZATION_r13.md §1) never shuffle. Deliberately NOT inside
     the expansion lambda: a filter() HOF there adds one more
     interpreted O(df^2) array pass + copy per posting list, measured
     SLOWER at sf1 (0.51 -> 0.79 s) than the codegen'd row filter; the

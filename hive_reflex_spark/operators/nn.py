@@ -153,8 +153,8 @@ def q66c_attention_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduction), not the job floor. Identical exact-integer discipline
     and the identical single-exchange shuffle shape as q66 — see q66's
     docstring for the 100-TB layout argument; scaled evidence for the
-    coordinate-join tensor tier lives in BASELINE.md r6
-    (scripts/bench_tensor_scale.py)."""
+    coordinate-join tensor tier lives in BASELINE.md ("Measured (round
+    6)", attention at 4096 queries x 512 keys/values)."""
     coords = embedding_coords(spark, sf_dir)
     n_q, kv_lo, kv_hi = 256, 256, 320
     q = (

@@ -9,11 +9,19 @@ cache is sized to the workload, not the data: one pass over the bench
 headline needs ~277 compiled classes, and Spark's default cache of 100
 evicted them before they came round again, so every pass recompiled
 (~10 ms of Janino each, on the driver) and re-warmed the JIT.
+
+Scratch files: every file the package writes (stream staging dirs, sink
+round-trips, the bucketed-table warehouse, generated fixtures) lives
+under one per-process root, ``scratch_path()``, removed at interpreter
+exit.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -21,6 +29,23 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 # pin_session re-asserts its confs every N-th call (see docstring)
 _PIN_REASSERT_EVERY = 64
+
+_SCRATCH_ROOT: str | None = None
+
+
+def scratch_path(*parts: str) -> str:
+    """A path under this process's scratch root (``<tmpdir>/hrs_*``).
+
+    The root is created on the first call, so executor-side Python
+    workers, which never call this, create nothing, and it is removed
+    with everything under it at interpreter exit. Being private to the
+    process, nothing under it needs a pid suffix, a lock or a reaper.
+    """
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="hrs_")
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+    return os.path.join(_SCRATCH_ROOT, *parts)
 
 
 def get_spark(
@@ -40,6 +65,9 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             f"{pkg_root}{os.pathsep}{pp}" if pp else pkg_root
         )
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
@@ -59,7 +87,7 @@ def get_spark(
         # errors on casts) used by the correctness oracle.
         .config("spark.sql.ansi.enabled", "false")
         # bucketed-table warehouse (functions/layout.py) out of the repo tree
-        .config("spark.sql.warehouse.dir", "/tmp/hrs_warehouse")
+        .config("spark.sql.warehouse.dir", scratch_path("warehouse"))
         # Generated-code cache: the measured working sets are ~277 classes
         # (warm headline pass) and ~220 (cold registry sample), against
         # Spark's default of 100 entries — LRU eviction then recompiled
@@ -79,9 +107,6 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
         )
     )
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        return active
     return builder.master(f"local[{cpus}]").getOrCreate()
 
 

@@ -20,8 +20,7 @@ q80a oracle's VALUES table.
 
 from __future__ import annotations
 
-import os
-import tempfile
+from hive_reflex_spark.session import scratch_path
 
 # --------------------------------------------------------------------------
 # Minimal protobuf wire-format encoder (twin of onnx_source's decoder)
@@ -150,14 +149,10 @@ def write_model(path: str, name: str, spec_nodes: list, inits: dict) -> str:
 
 
 def _model_onnx_path(name: str, spec_nodes: list, inits: dict) -> str:
-    """Write the fixture into the temp dir and return its path. Always
+    """Write the fixture into scratch and return its path. Always
     rewritten — the bytes are deterministic and cheap, and an
-    unconditional write means a stale file from an older spec version
-    (or another process) can never be parsed in place of the current
-    spec."""
-    path = os.path.join(
-        tempfile.gettempdir(), f"hrs_{name}_{os.getuid()}.onnx"
-    )
+    unconditional write means the file always encodes the current spec."""
+    path = scratch_path(f"{name}.onnx")
     write_model(path, name, spec_nodes, inits)
     return path
 

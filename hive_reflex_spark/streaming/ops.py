@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from hive_reflex_spark.registry import query
+from hive_reflex_spark.session import scratch_path
 
 _MEM_COUNTER = itertools.count()
 
@@ -63,11 +64,11 @@ def _events_ts_storage(sf_dir: str) -> str:
 
 def _stage_stream_dir(sf_dir: str) -> str:
     """Spark's file-stream source requires a *directory*; the fixture is a
-    single file. Stage a symlink dir under /tmp (one per sf_dir), which is
+    single file. Stage a symlink dir in scratch (one per sf_dir), which is
     also where a real deployment would point the source at a landing zone.
     """
     key = sf_dir.strip("/").replace("/", "_")
-    d = os.path.join("/tmp", "hrs_stream", key)
+    d = scratch_path("stream", key)
     os.makedirs(d, exist_ok=True)
     link = os.path.join(d, "events.parquet")
     if not os.path.exists(link):
@@ -552,7 +553,6 @@ def q160b_kafka_log_transport(spark: SparkSession, sf_dir: str) -> DataFrame:
     `log_read` swaps for the kafka connector with the downstream plan
     unchanged. Reference anchor: the bus rx path the log transports,
     `examples/example_reflex_node.c:109-120`."""
-    import fcntl
     import hashlib
     import shutil
 
@@ -570,105 +570,21 @@ def q160b_kafka_log_transport(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.to_timestamp(F.lit("2026-01-01 00:00:00")).alias("t0"),
     )
     # produce happens at plan-construction (a broker append is eager by
-    # nature). The log dir is keyed by a FINGERPRINT of everything the
-    # produce depends on — the fixture file's (path, size, mtime) AND a
-    # hash of the produce-path sources (this module, kafka_log.py, and
-    # io.py whose read_table feeds the wire rows) — and produced AT
-    # MOST ONCE per fingerprint, then REUSED: the produce is
-    # deterministic, so a completed log for the same fingerprint is
-    # byte-equivalent to reproducing it. Keying (rather than wiping a
-    # shared dir) is what makes this safe twice over: (a) CONCURRENT
-    # sweeps — a rebuilt fixture or changed code writes into a
-    # DIFFERENT directory, so no call ever deletes files another
-    # process's returned (lazy) plan is still scanning; (b) REGRESSION
-    # masking — any edit to the produce path changes the code hash and
-    # forces a fresh produce, so a stale green log can never vouch for
-    # new code. Two first-producers of one fingerprint serialize on an
-    # exclusive flock with the completion marker re-checked inside the
-    # lock. Every call refreshes its OWN dir's mtime, then reaps
-    # siblings (superseded fingerprint dirs, their lock files, and the
-    # legacy unsuffixed layout) once they have sat untouched for an
-    # hour — so "idle" really means "no process has reused it either",
-    # and /tmp growth stays bounded.
-    import hive_reflex_spark.io as _hio
-    import hive_reflex_spark.sources.kafka_log as _klog
-
-    code_h = hashlib.md5()
-    for mod_path in (os.path.abspath(__file__), _klog.__file__,
-                     _hio.__file__):
-        with open(mod_path, "rb") as mf:
-            code_h.update(mf.read())
-    ev_path = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(ev_path)
-    fingerprint = hashlib.md5(
-        f"{ev_path}:{st.st_size}:{st.st_mtime_ns}:"
-        f"{code_h.hexdigest()}".encode()
-    ).hexdigest()[:10]
-    base = "hrs_q160b_log_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    log_dir = os.path.join("/tmp", f"{base}_{fingerprint}")
-    # marker PRESENCE is the completion signal; the fingerprint lives
-    # in the directory name, not the marker content
+    # nature), at most once per (process, sf_dir): the produce is
+    # deterministic, so a completed log is reused while its _COMPLETE
+    # marker exists. A dir without the marker is a produce that died
+    # part-way; wipe it and produce again.
+    log_dir = scratch_path(
+        "q160b_log", hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+    )
     marker = os.path.join(log_dir, "_COMPLETE")
-
-    def _ensure_log() -> None:
-        if os.path.exists(marker):
-            return
-        with open(log_dir + ".lock", "w") as lockf:
-            fcntl.flock(lockf, fcntl.LOCK_EX)
-            try:
-                if not os.path.exists(marker):  # produced while waiting?
-                    # a dir without its marker is a crashed produce
-                    shutil.rmtree(log_dir, ignore_errors=True)
-                    log_append(
-                        wire, log_dir, "slcan", n_partitions=4,
-                        key_col="k", value_col="value", ts_col="t0",
-                    )
-                    with open(marker, "w"):
-                        pass
-            finally:
-                fcntl.flock(lockf, fcntl.LOCK_UN)
-
-    _ensure_log()
-    # refresh our dir's mtime BEFORE reaping: reuse must count as
-    # activity, or a >1h-old dir this very call returns a plan over
-    # could be reaped by a concurrent process with a different
-    # fingerprint. If a racing reaper already took the dir (it was >1h
-    # idle until this instant), reproduce under the lock and retry —
-    # the residual window is then one getmtime-vs-utime interleaving
-    # on a dir whose FIRST reuse after an hour's sleep coincides with
-    # another fingerprint's reap to the microsecond; accepted.
-    try:
-        os.utime(log_dir)
-    except OSError:
-        _ensure_log()
-        os.utime(log_dir)
-    import glob as _glob
-    import time as _time
-
-    for sib in _glob.glob(os.path.join("/tmp", f"{base}*")):
-        # NEVER unlink lock files: removing a path another process may
-        # flock splits future lockers onto a fresh inode and two
-        # producers enter the critical section together (classic
-        # unlink/reopen flock hazard). They are 0-byte; they stay.
-        if sib == log_dir or sib.endswith(".lock"):
-            continue
-        try:
-            # fingerprint-suffixed dirs ({base}_*) refresh their mtime
-            # on every reuse, so 1h idle truly means abandoned; the
-            # legacy EXACT-{base} layout (pre-fingerprint code never
-            # touches mtime on reuse) gets a 24h grace instead — note
-            # base itself ends in 10 hex, so test the "{base}_" prefix,
-            # not a suffix pattern
-            idle = _time.time() - os.path.getmtime(sib)
-            horizon = (
-                3600
-                if sib.startswith(os.path.join("/tmp", base) + "_")
-                else 86400
-            )
-            if idle > horizon:
-                shutil.rmtree(sib, ignore_errors=True)
-        except OSError:
-            pass
+    if not os.path.exists(marker):
+        shutil.rmtree(log_dir, ignore_errors=True)
+        log_append(
+            wire, log_dir, "slcan", n_partitions=4,
+            key_col="k", value_col="value", ts_col="t0",
+        )
+        open(marker, "w").close()
     lines = log_read(spark, log_dir, "slcan").select(
         F.decode("value", "UTF-8").alias("value"),
         F.col("ts").alias("ts0"),
@@ -717,7 +633,6 @@ def q217_device_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     a parallel scan — nothing driver-resident."""
     import hashlib
     import shutil
-    import tempfile
 
     from hive_reflex_spark.io import read_table
     from hive_reflex_spark.sources.sinks import write_runtime_log_json
@@ -727,11 +642,7 @@ def q217_device_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_can_frames(ticks, value_col="event_id", ts_col="ts")
     )
     tx = encode_can_frames(cmds)
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"hrs_devtx_{os.getpid()}_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
-    )
+    work = scratch_path("devtx", hashlib.md5(sf_dir.encode()).hexdigest()[:8])
     shutil.rmtree(work, ignore_errors=True)
     write_runtime_log_json(tx.drop("ts"), work)
     back = spark.read.schema("node_id int, can_id int, data array<int>").json(
@@ -781,21 +692,6 @@ def ota_feedback_loop(
     os.makedirs(out_dir, exist_ok=True)
     # stage the replay as n_chunks files → n_chunks micro-batches
     chunk_dir = os.path.join(out_dir, "chunks")
-    if os.path.exists(chunk_dir):
-        # chunk dirs staged by the pre-vintage-detection code carry ts as
-        # raw nanosecond INT64 — unreadable under the TIMESTAMP schema
-        # below; restage rather than crash on schema conversion
-        import glob as _glob
-        import shutil as _shutil
-
-        import pyarrow.parquet as _pq
-
-        files = _glob.glob(os.path.join(chunk_dir, "*.parquet"))
-        stale = not files or not str(
-            _pq.read_schema(files[0]).field("ts").type
-        ).startswith("timestamp")
-        if stale:
-            _shutil.rmtree(chunk_dir)
     if not os.path.exists(chunk_dir):
         # re-stage via the normalized batch reader so the chunks carry a
         # real TIMESTAMP column regardless of the fixture's storage vintage
@@ -1062,23 +958,17 @@ def q104_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side combined); the rewrite touches O(hours in batch) partitions,
     not the whole view — the same pattern a Delta/Iceberg MERGE performs,
     expressed on plain parquet."""
+    import hashlib
     import shutil
-    import tempfile
 
     from hive_reflex_spark.io import read_table
 
     # the view dir must outlive this function (the returned frame reads it
-    # lazily), so the workdir path is DETERMINISTIC per (process, sf_dir)
-    # and cleared at the start of each call — at most one view per input
-    # ever lives in the temp dir, and no driver-side collect of the
-    # rollup; chunks/checkpoint are deleted below, the view is not
-    import hashlib
-
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"hrs_rollup_{os.getpid()}_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
-    )
+    # lazily), so the workdir path is DETERMINISTIC per sf_dir and cleared
+    # at the start of each call — at most one view per input ever lives
+    # in scratch, and no driver-side collect of the rollup;
+    # chunks/checkpoint are deleted below, the view is not
+    work = scratch_path("rollup", hashlib.md5(sf_dir.encode()).hexdigest()[:8])
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
     chunk_dir = os.path.join(work, "chunks")
@@ -1445,7 +1335,6 @@ def q171_incremental_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     any chunking."""
     import hashlib
     import shutil
-    import tempfile
 
     from hive_reflex_spark.io import read_table
     from hive_reflex_spark.operators.dedup import (
@@ -1454,11 +1343,7 @@ def q171_incremental_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingles_of_docs,
     )
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"hrs_lshidx_{os.getpid()}_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
-    )
+    work = scratch_path("lshidx", hashlib.md5(sf_dir.encode()).hexdigest()[:8])
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
     chunk_dir = os.path.join(work, "chunks")
@@ -1510,13 +1395,8 @@ def q172_log_shipping_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream on any chunking."""
     import hashlib
     import shutil
-    import tempfile
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"hrs_logship_{os.getpid()}_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
-    )
+    work = scratch_path("logship", hashlib.md5(sf_dir.encode()).hexdigest()[:8])
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
     batched_log_shipping(spark, sf_dir, work)
@@ -1551,13 +1431,10 @@ def stream_documents(
     micro-batch, the batch clock the OTA loop also uses."""
     import hashlib
 
-    import tempfile
-
     from hive_reflex_spark.io import read_table
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"hrs_docstream_{hashlib.md5(f'{sf_dir}:{n_chunks}'.encode()).hexdigest()[:10]}",
+    work = scratch_path(
+        "docstream", hashlib.md5(f"{sf_dir}:{n_chunks}".encode()).hexdigest()[:10]
     )
     if not os.path.exists(os.path.join(work, "_STAGED")):
         import shutil

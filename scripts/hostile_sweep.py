@@ -26,6 +26,8 @@ if REPO not in pp.split(os.pathsep):
 def main() -> int:
     from pyspark.sql import SparkSession
 
+    from hive_reflex_spark.session import scratch_path
+
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     (
         SparkSession.builder.appName("hostile-sweep")
@@ -33,7 +35,7 @@ def main() -> int:
         .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.session.timeZone", "America/New_York")
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.warehouse.dir", "/tmp/hrs_warehouse")
+        .config("spark.sql.warehouse.dir", scratch_path("warehouse"))
         .config("spark.driver.memory", "32g")
         .getOrCreate()
     )

@@ -244,76 +244,30 @@ def test_hwm_from_footer_stats_matches_full_scan(spark, tmp_path):
         assert sorted(offs) == list(range(len(offs))), p
 
 
-def test_q160b_log_produced_once_and_superseded_dirs_reaped(spark):
-    """The q160b transport log is keyed by (fixture, produce-code)
-    fingerprint and produced at most once per key: a repeat call reuses
-    the same directory (no wipe — concurrent sweeps can never delete a
-    directory a live plan is scanning), and a superseded sibling
-    fingerprint older than an hour is reaped on the next call."""
-    import glob
+def test_q160b_log_produced_once_per_process(spark):
+    """The q160b transport log is produced at most once per (process,
+    sf_dir): a repeat call in the same session returns the same rows and
+    reuses the completed log (its _COMPLETE marker is not rewritten)."""
+    import hashlib
     import os
-    import time
-
-    from tests.conftest import SF_SMOKE
 
     import hive_reflex_spark.operators  # noqa: F401 — registers queries
     from hive_reflex_spark.registry import QUERIES
+    from hive_reflex_spark.session import scratch_path
 
     q = QUERIES["q160b_kafka_log_transport"]
-    import hashlib
-    import shutil
-
-    base = "/tmp/hrs_q160b_log_" + hashlib.md5(
-        SF_SMOKE.encode()
-    ).hexdigest()[:10]
-    # start clean: a sibling from an earlier run with DIFFERENT code
-    # (new fingerprint) legitimately survives the 1h reaper and would
-    # flake the exactly-one-dir assertion below
-    for leftover in glob.glob(base + "*"):
-        if leftover.endswith(".lock"):
-            # never unlink a lock file, even in test cleanup: a
-            # concurrent sweep holding that flock would be split from
-            # future lockers (fresh inode) — the module's own rule
-            continue
-        try:
-            if os.path.isdir(leftover):
-                shutil.rmtree(leftover, ignore_errors=True)
-            else:
-                os.unlink(leftover)
-        except OSError:
-            pass  # another job on this host may clean concurrently
-
     first = sorted(map(tuple, q(spark, SF_SMOKE).collect()))
     assert len(first) == 4
-    dirs0 = {d for d in glob.glob(base + "_*") if not d.endswith(".lock")}
-    assert len(dirs0) == 1, dirs0
-    marker = os.path.join(next(iter(dirs0)), "_COMPLETE")
+    marker = scratch_path(
+        "q160b_log",
+        hashlib.md5(SF_SMOKE.encode()).hexdigest()[:10],
+        "_COMPLETE",
+    )
     produced_at = os.path.getmtime(marker)
-
-    # plant superseded siblings: a fingerprint dir 2h idle (reaped —
-    # new-code reuse refreshes mtime, so 1h idle means abandoned), its
-    # lock file (NEVER reaped: unlinking a lockable path splits future
-    # flockers onto a fresh inode), the legacy unsuffixed dir at 2h
-    # (KEPT — legacy reuse never refreshes mtime, 24h grace) and at
-    # 25h (reaped)
-    stale = base + "_deadbeef00"
-    os.makedirs(stale, exist_ok=True)
-    open(stale + ".lock", "w").close()
-    os.makedirs(base, exist_ok=True)
-    for p in (stale, stale + ".lock", base):
-        os.utime(p, (time.time() - 7200, time.time() - 7200))
 
     again = sorted(map(tuple, q(spark, SF_SMOKE).collect()))
     assert again == first
     assert os.path.getmtime(marker) == produced_at, "log was re-produced"
-    assert not os.path.exists(stale), "superseded fingerprint dir kept"
-    assert os.path.exists(stale + ".lock"), "lock file must never be reaped"
-    assert os.path.exists(base), "legacy dir reaped inside its 24h grace"
-
-    os.utime(base, (time.time() - 90000, time.time() - 90000))
-    q(spark, SF_SMOKE).collect()
-    assert not os.path.exists(base), "legacy dir kept past 24h idle"
-    # stale's lock file is deliberately left behind: never-unlink-flock
 
 
 def test_local_fs_path_classification():
