@@ -122,25 +122,6 @@ def duck_exact_sum_round6(expr: str, in_scale: int = 9) -> str:
     )
 
 
-def duck_exact_sum(expr: str, scale: int = 2) -> str:
-    """DuckDB SQL twin of :func:`exact_sum`.
-
-    DuckDB widens integer SUM to HUGEINT — cast back to BIGINT so the arrow
-    schema matches Spark's LongType before the final division.
-    """
-    p = 10**scale
-    return f"CAST(SUM(CAST(ROUND(({expr}) * {p}) AS BIGINT)) AS BIGINT) / {p}.0"
-
-
-def duck_exact_sum_window(expr: str, over: str, scale: int = 2) -> str:
-    """DuckDB SQL twin of :func:`exact_sum_window`."""
-    p = 10**scale
-    return (
-        f"CAST(SUM(CAST(ROUND(({expr}) * {p}) AS BIGINT)) OVER {over} AS BIGINT)"
-        f" / {p}.0"
-    )
-
-
 def dyadic_md5_uniform(expr: str) -> Column:
     """Exact dyadic md5-derived uniform in (0, 1): the first 10 hex
     digits of md5(CAST(expr AS STRING)) as a base-16 polynomial — every

@@ -324,14 +324,3 @@ def lz4_decompress_col(col):
         return blobs.map(lambda b: lz4_decompress(bytes(b)))
 
     return fn(col)
-
-
-def lz4_compress_col(col):
-    """Encode a binary column as LZ4 blocks (the write-side twin)."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("binary")
-    def fn(payloads: pd.Series) -> pd.Series:
-        return payloads.map(lambda b: lz4_compress(bytes(b)))
-
-    return fn(col)

@@ -69,16 +69,6 @@ def quantize_symmetric(c: Column, scale: Column, qmax: int = 127) -> Column:
     ).cast("int")
 
 
-def quantize_asymmetric(
-    c: Column, scale: Column, zero_point: Column, qmin: int = 0, qmax: int = 255
-) -> Column:
-    """uint8 asymmetric: clip(round(x/scale + zp)) (quantizer.py:24-38)."""
-    return F.least(
-        F.greatest(F.round(c / scale + zero_point), F.lit(float(qmin))),
-        F.lit(float(qmax)),
-    ).cast("int")
-
-
 def dequantize(q: Column, scale: Column, zero_point: Column | None = None) -> Column:
     """(q - zp) * scale (quantization.py:54-57)."""
     if zero_point is None:

@@ -32,8 +32,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Opt-in DataFrame cache (bench mode): base tables and expensive shared
 # intermediates (shingle sets, minhash signatures) are persisted once and
 # reused across queries in the same process — what a warmed cluster with
@@ -158,12 +156,12 @@ def corpus_checkpoint(df: DataFrame) -> DataFrame:
     REBUILD of the same plan (bench reps, repeated builds in one
     session) pays a per-waist job floor for nothing — CacheManager
     already resolves an identical rebuilt plan to the cached relation —
-    so the action is skipped when the plan is already registered
+    so the action is skipped when the plan is already cached, i.e. when
+    ``df.storageLevel`` (that same CacheManager lookup) is not NONE
     (measured: eager-always regressed steady-state builds ~40%)."""
     if _LAZY_PLANS:
         return df
-    cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
-    already = cm.lookupCachedData(df._jdf).isDefined()
+    already = df.storageLevel != StorageLevel.NONE
     tracked_persist(df)
     if not already:
         df.count()

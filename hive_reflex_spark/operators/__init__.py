@@ -44,6 +44,11 @@ from hive_reflex_spark import registry as _registry
 # tracking-only cold persist; hash r08, re-verified at both small SFs),
 # q272 (fp.persist() -> tracked_persist: a persist that only adds FIFO
 # tracking, same MEMORY_AND_DISK level, eviction recomputes via lineage).
+# Builder merges (one private builder per algorithm family, every variant a
+# thin named def): q80/q80a-d, q66/q66c, q68a-d, q256/q256a, q118/q265,
+# q101/q147, q160/q160a/q160b, q246a/q246b, q54/q158 — same plan (plan
+# fingerprints byte-identical before/after), same oracle string. q297's
+# waist now goes through maybe_local_checkpoint (same localCheckpoint).
 # q68/q28 stay out: rows-only by design with standing rows evidence and
 # oracled twins (q68a/q118). Every query not listed keeps its standing
 # hash-green driver row and original registration order after this block.

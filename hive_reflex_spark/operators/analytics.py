@@ -5,6 +5,8 @@ early-exit accounting.
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -544,6 +546,36 @@ _LZ_DIGIT = (
     "WHEN {d} >= 2 THEN 2 ELSE 3 END"
 )
 
+# DuckDB replay of hll_registers' m_j aggregate over (bucket, suffix) rows
+_HLL_RHO_SQL = f"""CAST(MAX(
+                            4 * (29 - len(ltrim(suffix, '0')))
+                            + CASE WHEN ltrim(suffix, '0') = '' THEN 0
+                                   ELSE {_LZ_DIGIT.format(d="instr('0123456789abcdef', substr(ltrim(suffix, '0'), 1, 1)) - 1")}
+                              END + 1) AS BIGINT) AS m_j"""
+
+_HLL_ERROR_SQL = """CAST(ROUND(corrected.e) AS BIGINT) AS hll_users,
+           ROUND(abs(corrected.e - exact.exact_users)
+                 / exact.exact_users, 6) AS rel_error"""
+
+
+def _hll_estimate_sql(keys: str, regs: str, per: str) -> str:
+    """Oracle CTEs ``{per}``, ``est`` and ``corrected``: the HLL estimate
+    ``e`` per ``keys`` group from the registers in CTE ``regs``."""
+    return f"""{per} AS (SELECT {keys},
+                             SUM(pow(2.0, -m_j)) AS sum_pow,
+                             CAST(COUNT(*) AS BIGINT) AS n_buckets
+                      FROM {regs} GROUP BY {keys}),
+         est AS (SELECT {keys},
+                        CAST({_HLL_ALPHA} AS DOUBLE) * {HLL_M} * {HLL_M}
+                            / (sum_pow + ({HLL_M} - n_buckets)) AS e_raw,
+                        {HLL_M} - n_buckets AS zeros
+                 FROM {per}),
+         corrected AS (SELECT {keys},
+                              CASE WHEN e_raw <= CAST(2.5 AS DOUBLE) * {HLL_M} AND zeros > 0
+                                   THEN {HLL_M} * ln({HLL_M} * 1.0 / zeros)
+                                   ELSE e_raw END AS e
+                       FROM est)"""
+
 
 def hll_registers(
     df: DataFrame, group_cols: list[str], key_col: str = "user_id"
@@ -592,34 +624,15 @@ def hll_registers(
                                AS suffix
                     FROM events),
          rho AS (SELECT event_type, bucket,
-                        CAST(MAX(
-                            4 * (29 - len(ltrim(suffix, '0')))
-                            + CASE WHEN ltrim(suffix, '0') = '' THEN 0
-                                   ELSE {_LZ_DIGIT.format(d="instr('0123456789abcdef', substr(ltrim(suffix, '0'), 1, 1)) - 1")}
-                              END + 1) AS BIGINT) AS m_j
+                        {_HLL_RHO_SQL}
                  FROM hashed GROUP BY event_type, bucket),
-         per_type AS (SELECT event_type,
-                             SUM(pow(2.0, -m_j)) AS sum_pow,
-                             CAST(COUNT(*) AS BIGINT) AS n_buckets
-                      FROM rho GROUP BY event_type),
-         est AS (SELECT event_type,
-                        CAST({_HLL_ALPHA} AS DOUBLE) * {HLL_M} * {HLL_M}
-                            / (sum_pow + ({HLL_M} - n_buckets)) AS e_raw,
-                        {HLL_M} - n_buckets AS zeros
-                 FROM per_type),
-         corrected AS (SELECT event_type,
-                              CASE WHEN e_raw <= CAST(2.5 AS DOUBLE) * {HLL_M} AND zeros > 0
-                                   THEN {HLL_M} * ln({HLL_M} * 1.0 / zeros)
-                                   ELSE e_raw END AS e
-                       FROM est),
+         {_hll_estimate_sql("event_type", "rho", "per_type")},
          exact AS (SELECT event_type,
                           CAST(COUNT(DISTINCT user_id) AS BIGINT)
                               AS exact_users
                    FROM events GROUP BY event_type)
     SELECT exact.event_type, exact.exact_users,
-           CAST(ROUND(corrected.e) AS BIGINT) AS hll_users,
-           ROUND(abs(corrected.e - exact.exact_users)
-                 / exact.exact_users, 6) AS rel_error
+           {_HLL_ERROR_SQL}
     FROM exact JOIN corrected USING (event_type)
     """,
 )
@@ -639,7 +652,20 @@ def q118_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     math runs on the tiny sketch table."""
     events = read_table(spark, sf_dir, "events")
     rho = hll_registers(events.select("event_type", "user_id"), ["event_type"])
-    per_type = rho.groupBy("event_type").agg(
+    exact = events.groupBy("event_type").agg(
+        F.countDistinct("user_id").alias("exact_users")
+    )
+    return _hll_vs_exact(rho, exact, ["event_type"])
+
+
+def _hll_vs_exact(
+    rho: DataFrame, exact: DataFrame, keys: list[str]
+) -> DataFrame:
+    """``exact`` (one row per ``keys`` group, ending in ``exact_users``)
+    next to the HLL estimate from the group's registers ``rho``: alpha_m *
+    m^2 / sum(2^-m_j), linear counting below 2.5 m, and the relative
+    error."""
+    per_key = rho.groupBy(*keys).agg(
         F.sum(F.pow(F.lit(2.0), -F.col("m_j"))).alias("sum_pow"),
         F.count("*").alias("n_buckets"),
     )
@@ -648,8 +674,8 @@ def q118_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         / (F.col("sum_pow") + (HLL_M - F.col("n_buckets")))
     )
     zeros = HLL_M - F.col("n_buckets")
-    corrected = per_type.select(
-        "event_type",
+    corrected = per_key.select(
+        *keys,
         F.when(
             (e_raw <= 2.5 * HLL_M) & (zeros > 0),
             HLL_M * F.log(HLL_M * 1.0 / zeros),
@@ -657,12 +683,8 @@ def q118_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(e_raw)
         .alias("e"),
     )
-    exact = events.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("exact_users")
-    )
-    return exact.join(F.broadcast(corrected), "event_type").select(
-        "event_type",
-        "exact_users",
+    return exact.join(F.broadcast(corrected), keys).select(
+        *exact.columns,
         F.round("e").cast("long").alias("hll_users"),
         F.round(
             F.abs(F.col("e") - F.col("exact_users")) / F.col("exact_users"), 6
@@ -681,29 +703,12 @@ def q118_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                                AS suffix
                     FROM events),
          rho_hour AS (SELECT event_type, day, hr, bucket,
-                        CAST(MAX(
-                            4 * (29 - len(ltrim(suffix, '0')))
-                            + CASE WHEN ltrim(suffix, '0') = '' THEN 0
-                                   ELSE {_LZ_DIGIT.format(d="instr('0123456789abcdef', substr(ltrim(suffix, '0'), 1, 1)) - 1")}
-                              END + 1) AS BIGINT) AS m_j
+                        {_HLL_RHO_SQL}
                  FROM hashed GROUP BY event_type, day, hr, bucket),
          rho_day AS (SELECT event_type, day, bucket,
                             CAST(MAX(m_j) AS BIGINT) AS m_j
                      FROM rho_hour GROUP BY event_type, day, bucket),
-         per_key AS (SELECT event_type, day,
-                            SUM(pow(2.0, -m_j)) AS sum_pow,
-                            CAST(COUNT(*) AS BIGINT) AS n_buckets
-                     FROM rho_day GROUP BY event_type, day),
-         est AS (SELECT event_type, day,
-                        CAST({_HLL_ALPHA} AS DOUBLE) * {HLL_M} * {HLL_M}
-                            / (sum_pow + ({HLL_M} - n_buckets)) AS e_raw,
-                        {HLL_M} - n_buckets AS zeros
-                 FROM per_key),
-         corrected AS (SELECT event_type, day,
-                              CASE WHEN e_raw <= CAST(2.5 AS DOUBLE) * {HLL_M} AND zeros > 0
-                                   THEN {HLL_M} * ln({HLL_M} * 1.0 / zeros)
-                                   ELSE e_raw END AS e
-                       FROM est),
+         {_hll_estimate_sql("event_type, day", "rho_day", "per_key")},
          exact AS (SELECT event_type, CAST(ts AS DATE) AS day,
                           CAST(COUNT(DISTINCT EXTRACT(hour FROM ts)) AS BIGINT)
                               AS n_hours,
@@ -711,9 +716,7 @@ def q118_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                               AS exact_users
                    FROM events GROUP BY event_type, CAST(ts AS DATE))
     SELECT exact.event_type, exact.day, exact.n_hours, exact.exact_users,
-           CAST(ROUND(corrected.e) AS BIGINT) AS hll_users,
-           ROUND(abs(corrected.e - exact.exact_users)
-                 / exact.exact_users, 6) AS rel_error
+           {_HLL_ERROR_SQL}
     FROM exact JOIN corrected USING (event_type, day)
     """,
 )
@@ -747,25 +750,6 @@ def q265_hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     rho_day = rho_hour.groupBy("event_type", "day", "bucket").agg(
         F.max("m_j").alias("m_j")
     )
-    per_key = rho_day.groupBy("event_type", "day").agg(
-        F.sum(F.pow(F.lit(2.0), -F.col("m_j"))).alias("sum_pow"),
-        F.count("*").alias("n_buckets"),
-    )
-    e_raw = (
-        _HLL_ALPHA * HLL_M * HLL_M
-        / (F.col("sum_pow") + (HLL_M - F.col("n_buckets")))
-    )
-    zeros = HLL_M - F.col("n_buckets")
-    corrected = per_key.select(
-        "event_type",
-        "day",
-        F.when(
-            (e_raw <= 2.5 * HLL_M) & (zeros > 0),
-            HLL_M * F.log(HLL_M * 1.0 / zeros),
-        )
-        .otherwise(e_raw)
-        .alias("e"),
-    )
     # exact-audit branch: n_hours rides the same scan/aggregate as the
     # exact distinct — the sketch side reads events ONCE, the audit adds
     # the second (and last) scan of the whole query
@@ -775,21 +759,7 @@ def q265_hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct(F.hour("ts")).alias("n_hours"),
         F.countDistinct("user_id").alias("exact_users"),
     )
-    return (
-        exact.join(F.broadcast(corrected), ["event_type", "day"])
-        .select(
-            "event_type",
-            "day",
-            "n_hours",
-            "exact_users",
-            F.round("e").cast("long").alias("hll_users"),
-            F.round(
-                F.abs(F.col("e") - F.col("exact_users"))
-                / F.col("exact_users"),
-                6,
-            ).alias("rel_error"),
-        )
-    )
+    return _hll_vs_exact(rho_day, exact, ["event_type", "day"])
 
 
 # ---------------------------------------------------------------------------
@@ -4455,6 +4425,78 @@ def q249_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _day_slope_pairs(
+    spark: SparkSession, sf_dir: str, keep, x1: str, x2: str
+) -> tuple[DataFrame, DataFrame]:
+    """q256/q256a's inputs: daily cent totals per event type indexed by
+    day offset ``x``, and the slope ``s`` of every same-type day pair
+    with ``keep(a.x, b.x)`` (pair days named ``x1``/``x2``)."""
+    events = read_table(spark, sf_dir, "events")
+    daily = (
+        events.select(
+            "event_type",
+            F.expr("unix_micros(ts) div 86400000000").alias("d"),
+            "value",
+        )
+        .groupBy("event_type", "d")
+        .agg(
+            F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents")
+        )
+    )
+    wmin = Window.partitionBy("event_type")
+    idx = daily.select(
+        "event_type",
+        "cents",
+        (F.col("d") - F.min("d").over(wmin)).alias("x"),
+    )
+    a = idx.alias("a")
+    b = idx.alias("b")
+    pairs = a.join(
+        b,
+        (F.col("a.event_type") == F.col("b.event_type"))
+        & keep(F.col("a.x"), F.col("b.x")),
+    ).select(
+        F.col("a.event_type").alias("event_type"),
+        F.col("a.x").alias(x1),
+        F.col("b.x").alias(x2),
+        (
+            (F.col("b.cents") - F.col("a.cents"))
+            * 1.0
+            / ((F.col("b.x") - F.col("a.x")) * 100.0)
+        ).alias("s"),
+    )
+    return idx, pairs
+
+
+def _middle_rows(
+    df: DataFrame, part: list[str], order: list[str], cols: list[str]
+) -> DataFrame:
+    """``cols`` of the middle row (two when even) of each ``part`` group
+    in ``order``, with its rank ``rn`` and the group's row count ``m``."""
+    return df.select(
+        *cols,
+        F.row_number().over(Window.partitionBy(*part).orderBy(*order)).alias(
+            "rn"
+        ),
+        F.count("*").over(Window.partitionBy(*part)).alias("m"),
+    ).filter(
+        (F.col("rn") == F.expr("(m + 1) div 2"))
+        | (F.col("rn") == F.expr("(m + 2) div 2"))
+    )
+
+
+def _median_residuals(idx: DataFrame, fit: DataFrame) -> DataFrame:
+    """The middle residual rows ``r`` (of ``m`` days) of each type's
+    fitted ``slope`` line, joined back to ``fit``."""
+    resid = idx.join(F.broadcast(fit), "event_type").select(
+        "event_type",
+        "x",
+        (F.col("cents") / 100.0 - F.col("slope") * F.col("x")).alias("r"),
+    )
+    rr = _middle_rows(resid, ["event_type"], ["r", "x"], ["event_type", "r"])
+    return rr.join(F.broadcast(fit), "event_type")
+
+
 @query(
     "q256_theil_sen",
     oracle="""
@@ -4515,52 +4557,10 @@ def q256_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     size; daily totals are one partial-agg shuffle, medians one window
     per group. For unbounded x-domains the scale move is Siegel's
     repeated-median on a bounded sample per group."""
-    events = read_table(spark, sf_dir, "events")
-    daily = (
-        events.select(
-            "event_type",
-            F.expr("unix_micros(ts) div 86400000000").alias("d"),
-            "value",
-        )
-        .groupBy("event_type", "d")
-        .agg(
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents")
-        )
-    )
-    wmin = Window.partitionBy("event_type")
-    idx = daily.select(
-        "event_type",
-        "cents",
-        (F.col("d") - F.min("d").over(wmin)).alias("x"),
-    )
-    a = idx.alias("a")
-    b = idx.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.event_type") == F.col("b.event_type"))
-        & (F.col("a.x") < F.col("b.x")),
-    ).select(
-        F.col("a.event_type").alias("event_type"),
-        F.col("a.x").alias("xa"),
-        F.col("b.x").alias("xb"),
-        (
-            (F.col("b.cents") - F.col("a.cents"))
-            * 1.0
-            / ((F.col("b.x") - F.col("a.x")) * 100.0)
-        ).alias("s"),
-    )
-    wrank = Window.partitionBy("event_type").orderBy("s", "xa", "xb")
-    wcount = Window.partitionBy("event_type")
-    ranked = pairs.select(
-        "event_type",
-        "s",
-        F.row_number().over(wrank).alias("rn"),
-        F.count("*").over(wcount).alias("m"),
-    )
+    idx, pairs = _day_slope_pairs(spark, sf_dir, operator.lt, "xa", "xb")
     med = (
-        ranked.filter(
-            (F.col("rn") == F.expr("(m + 1) div 2"))
-            | (F.col("rn") == F.expr("(m + 2) div 2"))
+        _middle_rows(
+            pairs, ["event_type"], ["s", "xa", "xb"], ["event_type", "s"]
         )
         .groupBy("event_type")
         .agg(
@@ -4568,24 +4568,8 @@ def q256_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.avg("s").alias("slope"),
         )
     )
-    resid = idx.join(F.broadcast(med), "event_type").select(
-        "event_type",
-        "x",
-        (F.col("cents") / 100.0 - F.col("slope") * F.col("x")).alias("r"),
-    )
-    wr = Window.partitionBy("event_type").orderBy("r", "x")
-    rr = resid.select(
-        "event_type",
-        "r",
-        F.row_number().over(wr).alias("rn"),
-        F.count("*").over(wcount).alias("m"),
-    )
     return (
-        rr.filter(
-            (F.col("rn") == F.expr("(m + 1) div 2"))
-            | (F.col("rn") == F.expr("(m + 2) div 2"))
-        )
-        .join(F.broadcast(med), "event_type")
+        _median_residuals(idx, med)
         .groupBy("event_type", "n_pairs", "slope")
         .agg(
             F.max("m").cast("long").alias("n_days"),
@@ -4677,94 +4661,27 @@ def q256a_siegel_repeated_median(
     (type, day), the outer one window per type. For unbounded x-domains
     both estimators sample per group first; the repeated-median is the
     one that stays robust when the sample itself is contaminated."""
-    events = read_table(spark, sf_dir, "events")
-    daily = (
-        events.select(
-            "event_type",
-            F.expr("unix_micros(ts) div 86400000000").alias("d"),
-            "value",
-        )
-        .groupBy("event_type", "d")
-        .agg(
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents")
-        )
-    )
-    wmin = Window.partitionBy("event_type")
-    idx = daily.select(
-        "event_type",
-        "cents",
-        (F.col("d") - F.min("d").over(wmin)).alias("x"),
-    )
-    a = idx.alias("a")
-    b = idx.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.event_type") == F.col("b.event_type"))
-        & (F.col("a.x") != F.col("b.x")),
-    ).select(
-        F.col("a.event_type").alias("event_type"),
-        F.col("a.x").alias("xi"),
-        F.col("b.x").alias("xj"),
-        (
-            (F.col("b.cents") - F.col("a.cents"))
-            * 1.0
-            / ((F.col("b.x") - F.col("a.x")) * 100.0)
-        ).alias("s"),
-    )
-    wi = Window.partitionBy("event_type", "xi").orderBy("s", "xj")
-    wic = Window.partitionBy("event_type", "xi")
-    irank = pairs.select(
-        "event_type",
-        "xi",
-        "s",
-        F.row_number().over(wi).alias("rn"),
-        F.count("*").over(wic).alias("m"),
-    )
+    idx, pairs = _day_slope_pairs(spark, sf_dir, operator.ne, "xi", "xj")
     imed = (
-        irank.filter(
-            (F.col("rn") == F.expr("(m + 1) div 2"))
-            | (F.col("rn") == F.expr("(m + 2) div 2"))
+        _middle_rows(
+            pairs,
+            ["event_type", "xi"],
+            ["s", "xj"],
+            ["event_type", "xi", "s"],
         )
         .groupBy("event_type", "xi")
         .agg(F.avg("s").alias("ms"))
     )
-    wo = Window.partitionBy("event_type").orderBy("ms", "xi")
-    woc = Window.partitionBy("event_type")
-    orank = imed.select(
-        "event_type",
-        "ms",
-        F.row_number().over(wo).alias("rn"),
-        F.count("*").over(woc).alias("m"),
-    )
     omed = (
-        orank.filter(
-            (F.col("rn") == F.expr("(m + 1) div 2"))
-            | (F.col("rn") == F.expr("(m + 2) div 2"))
-        )
+        _middle_rows(imed, ["event_type"], ["ms", "xi"], ["event_type", "ms"])
         .groupBy("event_type")
         .agg(
             F.max("m").cast("long").alias("n_days"),
             F.avg("ms").alias("slope"),
         )
     )
-    resid = idx.join(F.broadcast(omed), "event_type").select(
-        "event_type",
-        "x",
-        (F.col("cents") / 100.0 - F.col("slope") * F.col("x")).alias("r"),
-    )
-    wr = Window.partitionBy("event_type").orderBy("r", "x")
-    rr = resid.select(
-        "event_type",
-        "r",
-        F.row_number().over(wr).alias("rn"),
-        F.count("*").over(woc).alias("m"),
-    )
     return (
-        rr.filter(
-            (F.col("rn") == F.expr("(m + 1) div 2"))
-            | (F.col("rn") == F.expr("(m + 2) div 2"))
-        )
-        .join(F.broadcast(omed), "event_type")
+        _median_residuals(idx, omed)
         .groupBy("event_type", "n_days", "slope")
         .agg(F.round(F.avg("r"), 6).alias("siegel_intercept"))
         .select(

@@ -171,6 +171,12 @@ def q80_onnx_compile(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-implements the pass chain in independent SQL, so the driver
     hash-checks parser AND passes together. ``sf_dir`` is unused: the
     model is planner-scale input, not data-scale."""
+    return _onnx_compile(spark, TINY_ONNX)
+
+
+def _onnx_compile(spark: SparkSession, onnx_path: str) -> DataFrame:
+    """The q80 chain shared by every model-zoo graph: parse the ``.onnx``
+    file, then fuse_matmul_add → partition_by_cost → flash_layout."""
     from hive_reflex_spark.plans.passes import (
         flash_layout,
         fuse_matmul_add,
@@ -178,7 +184,7 @@ def q80_onnx_compile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from hive_reflex_spark.sources.onnx_source import read_onnx_model
 
-    ir = read_onnx_model(spark, TINY_ONNX)
+    ir = read_onnx_model(spark, onnx_path)
     laid = flash_layout(partition_by_cost(fuse_matmul_add(ir)))
     return laid.select(
         "model",
@@ -390,13 +396,20 @@ def _compile_chain_oracle(values_sql: str) -> str:
     """
 
 
-def _bert_tiny_oracle() -> str:
-    from hive_reflex_spark.sources.model_zoo import bert_tiny_ir_values
+def _zoo(fn_name: str):
+    """Call ``sources.model_zoo.<fn_name>()``. The import stays lazy:
+    importing the sources package registers multimodal's queries, so
+    hoisting it would move them in the registry order."""
+    from hive_reflex_spark.sources import model_zoo
 
-    return _compile_chain_oracle(bert_tiny_ir_values())
+    return getattr(model_zoo, fn_name)()
 
 
-@query("q80a_onnx_bert", oracle=_bert_tiny_oracle())
+def _zoo_oracle(model: str) -> str:
+    return _compile_chain_oracle(_zoo(f"{model}_ir_values"))
+
+
+@query("q80a_onnx_bert", oracle=_zoo_oracle("bert_tiny"))
 def q80a_onnx_bert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q80 at transformer shape: a 17-node BERT-Tiny-like ONNX graph
     (structure per `model_zoo/export_bert_tiny.py:17-60` — embedding,
@@ -407,37 +420,10 @@ def q80a_onnx_bert(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 5-node tinynet cannot: multiple fusion sites, cpu-forced ops
     (Transpose/Softmax), weightless MatMuls (attention scores/context),
     1-D-initializer-only layers (LayerNorm), and an embedding Gather."""
-    from hive_reflex_spark.plans.passes import (
-        flash_layout,
-        fuse_matmul_add,
-        partition_by_cost,
-    )
-    from hive_reflex_spark.sources.model_zoo import bert_tiny_onnx_path
-    from hive_reflex_spark.sources.onnx_source import read_onnx_model
-
-    ir = read_onnx_model(spark, bert_tiny_onnx_path())
-    laid = flash_layout(partition_by_cost(fuse_matmul_add(ir)))
-    return laid.select(
-        "model",
-        "idx",
-        "name",
-        "op_type",
-        "target",
-        "partition_id",
-        "n_params",
-        "size_bytes",
-        "aligned_bytes",
-        "flash_addr",
-    )
+    return _onnx_compile(spark, _zoo("bert_tiny_onnx_path"))
 
 
-def _mobilenet_oracle() -> str:
-    from hive_reflex_spark.sources.model_zoo import mobilenet_ir_values
-
-    return _compile_chain_oracle(mobilenet_ir_values())
-
-
-@query("q80b_onnx_mobilenet", oracle=_mobilenet_oracle())
+@query("q80b_onnx_mobilenet", oracle=_zoo_oracle("mobilenet"))
 def q80b_onnx_mobilenet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q80 at CNN shape: a 48-node MobileNetV1-like graph (structure per
     `model_zoo/export_mobilenet.py:5-56` — strided initial Conv, seven
@@ -448,37 +434,10 @@ def q80b_onnx_mobilenet(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the cim-eligible op, 4-D initializer shape extraction, the long
     alternating cim/cpu island sequence (15 partitions), and a
     Reshape in cpu-forced position."""
-    from hive_reflex_spark.plans.passes import (
-        flash_layout,
-        fuse_matmul_add,
-        partition_by_cost,
-    )
-    from hive_reflex_spark.sources.model_zoo import mobilenet_onnx_path
-    from hive_reflex_spark.sources.onnx_source import read_onnx_model
-
-    ir = read_onnx_model(spark, mobilenet_onnx_path())
-    laid = flash_layout(partition_by_cost(fuse_matmul_add(ir)))
-    return laid.select(
-        "model",
-        "idx",
-        "name",
-        "op_type",
-        "target",
-        "partition_id",
-        "n_params",
-        "size_bytes",
-        "aligned_bytes",
-        "flash_addr",
-    )
+    return _onnx_compile(spark, _zoo("mobilenet_onnx_path"))
 
 
-def _micro_kws_oracle() -> str:
-    from hive_reflex_spark.sources.model_zoo import micro_kws_ir_values
-
-    return _compile_chain_oracle(micro_kws_ir_values())
-
-
-@query("q80c_onnx_micro_kws", oracle=_micro_kws_oracle())
+@query("q80c_onnx_micro_kws", oracle=_zoo_oracle("micro_kws"))
 def q80c_onnx_micro_kws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q80 at audio-KWS shape: a 31-node DS-CNN-S graph (structure per
     `model_zoo/export_micro_kws.py:5-55` — strided 10x4 Conv over the
@@ -488,37 +447,10 @@ def q80c_onnx_micro_kws(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph next to the transformer (q80a) and CNN (q80b): the
     non-square initial kernel and constant-width DS chain exercise a
     different fusion/partition profile."""
-    from hive_reflex_spark.plans.passes import (
-        flash_layout,
-        fuse_matmul_add,
-        partition_by_cost,
-    )
-    from hive_reflex_spark.sources.model_zoo import micro_kws_onnx_path
-    from hive_reflex_spark.sources.onnx_source import read_onnx_model
-
-    ir = read_onnx_model(spark, micro_kws_onnx_path())
-    laid = flash_layout(partition_by_cost(fuse_matmul_add(ir)))
-    return laid.select(
-        "model",
-        "idx",
-        "name",
-        "op_type",
-        "target",
-        "partition_id",
-        "n_params",
-        "size_bytes",
-        "aligned_bytes",
-        "flash_addr",
-    )
+    return _onnx_compile(spark, _zoo("micro_kws_onnx_path"))
 
 
-def _gesture_net_oracle() -> str:
-    from hive_reflex_spark.sources.model_zoo import gesture_net_ir_values
-
-    return _compile_chain_oracle(gesture_net_ir_values())
-
-
-@query("q80d_onnx_gesture_net", oracle=_gesture_net_oracle())
+@query("q80d_onnx_gesture_net", oracle=_zoo_oracle("gesture_net"))
 def q80d_onnx_gesture_net(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q80 at IMU-1D-CNN shape: the GestureNet graph
     (`model_zoo/export_gesture_net.py:4-41` — three Conv1d/BN/ReLU
@@ -527,28 +459,7 @@ def q80d_onnx_gesture_net(spark: SparkSession, sf_dir: str) -> DataFrame:
     → layout. Completes the model zoo's five architectures: 3-D Conv1d
     kernel shape extraction, weightless MaxPool in cpu-forced position,
     and a fusable two-layer classifier tail."""
-    from hive_reflex_spark.plans.passes import (
-        flash_layout,
-        fuse_matmul_add,
-        partition_by_cost,
-    )
-    from hive_reflex_spark.sources.model_zoo import gesture_net_onnx_path
-    from hive_reflex_spark.sources.onnx_source import read_onnx_model
-
-    ir = read_onnx_model(spark, gesture_net_onnx_path())
-    laid = flash_layout(partition_by_cost(fuse_matmul_add(ir)))
-    return laid.select(
-        "model",
-        "idx",
-        "name",
-        "op_type",
-        "target",
-        "partition_id",
-        "n_params",
-        "size_bytes",
-        "aligned_bytes",
-        "flash_addr",
-    )
+    return _onnx_compile(spark, _zoo("gesture_net_onnx_path"))
 
 
 # ---------------------------------------------------------------------------

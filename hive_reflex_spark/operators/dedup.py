@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from hive_reflex_spark.io import (
     cached_df,
     corpus_checkpoint,
-    maybe_local_checkpoint,
     read_table,
     tracked_persist,
 )

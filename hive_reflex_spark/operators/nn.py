@@ -38,82 +38,6 @@ KV_LO, KV_HI = 100, 108  # keys/values: vec_id 100..107
 SQRT_D = 8.0  # sqrt(64)
 
 
-@query(
-    "q66_attention",
-    oracle=f"""
-    WITH coords AS (SELECT * FROM {_duck_coords(None)} c),
-         q AS (SELECT vec_id AS qid, dim, v FROM coords WHERE vec_id < {N_Q}),
-         kv AS (SELECT vec_id AS kid, dim, v FROM coords
-                WHERE vec_id >= {KV_LO} AND vec_id < {KV_HI}),
-         scores AS (SELECT qid, kid,
-                           CAST(SUM(CAST(ROUND(q.v * kv.v / {SQRT_D}
-                                * 1000000000) AS BIGINT)) AS BIGINT)
-                               / 1000000000.0 AS s
-                    FROM q JOIN kv USING (dim) GROUP BY qid, kid),
-         expd AS (SELECT qid, kid,
-                         ROUND(exp(s - MAX(s) OVER (PARTITION BY qid)), 6) AS e
-                  FROM scores),
-         attn AS (SELECT qid, kid,
-                         e / (CAST(SUM(CAST(ROUND(e * 1000000) AS BIGINT))
-                              OVER (PARTITION BY qid) AS BIGINT) / 1000000.0)
-                             AS w
-                  FROM expd)
-    SELECT qid, dim AS out_dim,
-           CAST(FLOOR((CAST(SUM(CAST(ROUND(attn.w * kv.v * 1000000000) AS BIGINT))
-                 AS BIGINT) + 500) / 1000.0) AS BIGINT) / 1000000.0 AS out_v
-    FROM attn JOIN kv USING (kid)
-    GROUP BY qid, dim
-    """,
-)
-def q66_attention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scaled dot-product attention (J6): scores = Q·Kᵀ/√d → row softmax →
-    ·V, as two coordinate matmuls around the P18 softmax. K/V (the bounded
-    side) broadcast; exp pre-rounded to 6dp for engine parity.
-
-    Shuffle shape: ONE exchange. The Q side is hash-partitioned on qid
-    right after the scan; every downstream requirement — the score
-    aggregation on (qid, kid), both softmax windows on qid, and the
-    output aggregation on (qid, dim) — clusters on a superset of {qid},
-    so HashPartitioning(qid) satisfies all of them and Catalyst inserts
-    no further exchanges (K/V joins stream broadcast-side). At 100 TB
-    that is the canonical attention layout: partition by query row once,
-    keep scores, softmax and the context reduction co-located."""
-    coords = embedding_coords(spark, sf_dir)
-    q = (
-        coords.filter(F.col("vec_id") < N_Q)
-        .select(F.col("vec_id").alias("qid"), "dim", "v")
-        .repartition("qid")
-    )
-    kv = coords.filter(
-        (F.col("vec_id") >= KV_LO) & (F.col("vec_id") < KV_HI)
-    ).select(F.col("vec_id").alias("kid"), "dim", "v")
-    scores = (
-        q.alias("q")
-        .join(F.broadcast(kv.alias("k")), "dim")
-        .groupBy("qid", "kid")
-        .agg(F.expr(f"{spark_exact_sum(f'q.v * k.v / {SQRT_D}', 9)} AS s"))
-    )
-    # softmax as two parsed window expressions (plan-identical: same two
-    # qid-partitioned Window specs the Column form built; 1e6 is a DOUBLE
-    # literal, matching the Python-float divisor — never write 1000000.0
-    # in SQL, which parses as DECIMAL and changes the arithmetic)
-    attn = scores.selectExpr(
-        "qid",
-        "kid",
-        "round(exp(s - max(s) OVER (PARTITION BY qid)), 6) AS e",
-    ).selectExpr(
-        "qid",
-        "kid",
-        "e / (sum(CAST(round(e * 1e6) AS BIGINT))"
-        " OVER (PARTITION BY qid) / 1e6) AS w",
-    )
-    return (
-        attn.join(F.broadcast(kv), "kid")
-        .groupBy("qid", F.col("dim").alias("out_dim"))
-        .agg(F.expr(f"{spark_exact_sum_round6('w * v')} AS out_v"))
-    )
-
-
 def _attn_oracle(n_q: int, kv_lo: int, kv_hi: int) -> str:
     """q66's attention oracle parameterized over the Q/KV id ranges."""
     return f"""
@@ -143,20 +67,12 @@ def _attn_oracle(n_q: int, kv_lo: int, kv_hi: int) -> str:
     """
 
 
-@query("q66c_attention_scaled", oracle=_attn_oracle(256, 256, 320))
-def q66c_attention_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q66's attention chain at a NON-fixture-bound size: 256 query rows
-    against a 64-key/value block (vec_id 256..319) — 16k score pairs and
-    a 16k-row softmax instead of q66's fixed 4x8 block, so the driver's
-    check and the bench measure the PLAN (broadcast KV, one qid-keyed
-    exchange serving scores, both softmax windows, and the output
-    reduction), not the job floor. Identical exact-integer discipline
-    and the identical single-exchange shuffle shape as q66 — see q66's
-    docstring for the 100-TB layout argument; scaled evidence for the
-    coordinate-join tensor tier lives in BASELINE.md ("Measured (round
-    6)", attention at 4096 queries x 512 keys/values)."""
+def _attention(
+    spark: SparkSession, sf_dir: str, n_q: int, kv_lo: int, kv_hi: int
+) -> DataFrame:
+    """q66's attention chain over queries ``vec_id < n_q`` and keys/values
+    ``kv_lo <= vec_id < kv_hi`` (shuffle shape: see q66)."""
     coords = embedding_coords(spark, sf_dir)
-    n_q, kv_lo, kv_hi = 256, 256, 320
     q = (
         coords.filter(F.col("vec_id") < n_q)
         .select(F.col("vec_id").alias("qid"), "dim", "v")
@@ -190,6 +106,38 @@ def q66c_attention_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("qid", F.col("dim").alias("out_dim"))
         .agg(F.expr(f"{spark_exact_sum_round6('w * v')} AS out_v"))
     )
+
+
+@query("q66_attention", oracle=_attn_oracle(N_Q, KV_LO, KV_HI))
+def q66_attention(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Scaled dot-product attention (J6): scores = Q·Kᵀ/√d → row softmax →
+    ·V, as two coordinate matmuls around the P18 softmax. K/V (the bounded
+    side) broadcast; exp pre-rounded to 6dp for engine parity.
+
+    Shuffle shape: ONE exchange. The Q side is hash-partitioned on qid
+    right after the scan; every downstream requirement — the score
+    aggregation on (qid, kid), both softmax windows on qid, and the
+    output aggregation on (qid, dim) — clusters on a superset of {qid},
+    so HashPartitioning(qid) satisfies all of them and Catalyst inserts
+    no further exchanges (K/V joins stream broadcast-side). At 100 TB
+    that is the canonical attention layout: partition by query row once,
+    keep scores, softmax and the context reduction co-located."""
+    return _attention(spark, sf_dir, N_Q, KV_LO, KV_HI)
+
+
+@query("q66c_attention_scaled", oracle=_attn_oracle(256, 256, 320))
+def q66c_attention_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """q66's attention chain at a NON-fixture-bound size: 256 query rows
+    against a 64-key/value block (vec_id 256..319) — 16k score pairs and
+    a 16k-row softmax instead of q66's fixed 4x8 block, so the driver's
+    check and the bench measure the PLAN (broadcast KV, one qid-keyed
+    exchange serving scores, both softmax windows, and the output
+    reduction), not the job floor. Identical exact-integer discipline
+    and the identical single-exchange shuffle shape as q66 — see q66's
+    docstring for the 100-TB layout argument; scaled evidence for the
+    coordinate-join tensor tier lives in BASELINE.md ("Measured (round
+    6)", attention at 4096 queries x 512 keys/values)."""
+    return _attention(spark, sf_dir, 256, 256, 320)
 
 
 def attention_blocked(
@@ -943,21 +891,18 @@ def _lstm_fixed_oracle(hidden: int = _LSTM_H) -> str:
             acc += f" + ({whq[k][j]})*l.h{j}q"
         return f"(CAST(floor(({acc})/65536.0) AS BIGINT) + ({bq[k]}))"
 
-    def clamp(e: str, lo: int, hi: int) -> str:
-        return f"LEAST(GREATEST({e}, CAST({lo} AS BIGINT)), CAST({hi} AS BIGINT))"
-
     c_exprs, h_exprs = [], []
     for j in range(hidden):
-        i_g = clamp(z(j), 0, Q16)
-        f_g = clamp(z(hidden + j), 0, Q16)
-        g_g = clamp(z(2 * hidden + j), -Q16, Q16)
-        o_g = clamp(z(3 * hidden + j), 0, Q16)
+        i_g = _clamp_sql(z(j), 0, Q16)
+        f_g = _clamp_sql(z(hidden + j), 0, Q16)
+        g_g = _clamp_sql(z(2 * hidden + j), -Q16, Q16)
+        o_g = _clamp_sql(z(3 * hidden + j), 0, Q16)
         cj = (
             f"CAST(floor((({f_g})*l.c{j}q + ({i_g})*({g_g}))/65536.0)"
             " AS BIGINT)"
         )
         c_exprs.append(cj)
-        tc = clamp(cj, -Q16, Q16)
+        tc = _clamp_sql(cj, -Q16, Q16)
         h_exprs.append(
             f"CAST(floor((({o_g})*({tc}))/65536.0) AS BIGINT)"
         )
@@ -968,9 +913,20 @@ def _lstm_fixed_oracle(hidden: int = _LSTM_H) -> str:
     zero_state = ", ".join(
         f"CAST(0 AS BIGINT) AS h{j}q" for j in range(hidden)
     ) + ", " + ", ".join(f"CAST(0 AS BIGINT) AS c{j}q" for j in range(hidden))
-    out_cols = ", ".join(
-        f"h{j}q / 65536.0 AS h{j}" for j in range(hidden)
-    )
+    return _recurrence_oracle("lstm", zero_state, state_cols, hidden)
+
+
+def _clamp_sql(e: str, lo: int, hi: int) -> str:
+    return f"LEAST(GREATEST({e}, CAST({lo} AS BIGINT)), CAST({hi} AS BIGINT))"
+
+
+def _recurrence_oracle(
+    cte: str, zero_state: str, state_cols: str, hidden: int
+) -> str:
+    """The recursive CTE q68a-d's oracles share: each user's event
+    sequence in (ts, event_id) order, advanced one row per step by
+    ``state_cols`` from the previous row ``l``."""
+    out_cols = ", ".join(f"h{j}q / 65536.0 AS h{j}" for j in range(hidden))
     return f"""
     WITH RECURSIVE seq AS MATERIALIZED (
         SELECT user_id, event_id,
@@ -978,15 +934,15 @@ def _lstm_fixed_oracle(hidden: int = _LSTM_H) -> str:
                ROW_NUMBER() OVER (PARTITION BY user_id
                                   ORDER BY epoch_us(ts), event_id) AS rn
         FROM events),
-    lstm AS (
+    {cte} AS (
         SELECT user_id, CAST(NULL AS BIGINT) AS event_id, 0 AS rn,
                CAST(0 AS BIGINT) AS x, {zero_state}
         FROM (SELECT DISTINCT user_id FROM seq)
         UNION ALL
         SELECT s.user_id, s.event_id, s.rn, s.x, {state_cols}
-        FROM seq s JOIN lstm l
+        FROM seq s JOIN {cte} l
           ON s.user_id = l.user_id AND s.rn = l.rn + 1)
-    SELECT event_id, user_id, {out_cols} FROM lstm WHERE rn >= 1
+    SELECT event_id, user_id, {out_cols} FROM {cte} WHERE rn >= 1
     """
 
 
@@ -996,17 +952,22 @@ def q68a_lstm_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
     user's event-value sequence (2 hidden units), replayed exactly by a
     recursive-CTE oracle. Closes J5's rows-only gap — q68 keeps the
     float LSTM (numpy-oracled), this pins the integer RTL semantics."""
-    from hive_reflex_spark.io import read_table
+    return _fixed_cell_query(spark, sf_dir, lstm_fixed_forward, ["user_id"])
 
+
+def _fixed_cell_query(
+    spark: SparkSession, sf_dir: str, forward, key
+) -> DataFrame:
+    """q68a-d: one Q16.16 recurrence ``forward`` (per-key or blocked,
+    keyed by ``key``) over each user's event-value sequence."""
     events = read_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         F.unix_micros("ts").alias("ts_us"),
         "value",
     )
-    out = lstm_fixed_forward(
-        events, ["user_id"], ["ts_us", "event_id"], "value",
-        _LSTM_XSCALE, _LSTM_H,
+    out = forward(
+        events, key, ["ts_us", "event_id"], "value", _LSTM_XSCALE, _LSTM_H
     )
     return out.select(
         "event_id", "user_id",
@@ -1041,10 +1002,42 @@ def lstm_fixed_forward_blocked(
     per element drops from ~4·h²+4·h ops to ~1/|group| of a vector op.
     The salt count tunes group width vs padding waste (sequences of
     wildly different lengths want length-bucketed salting)."""
-    wxq, whq, bq = _lstm_fixed_weights(hidden)
-    wx = np.array(wxq, dtype="int64")  # (4h,)
-    wh = np.array(whq, dtype="int64")  # (4h, h)
-    bb = np.array(bq, dtype="int64")  # (4h,)
+    return _blocked_recurrence(
+        df, key_col, order_cols, x_col, x_scale, hidden,
+        _lstm_fixed_weights(hidden), _lstm_block_step,
+    )
+
+
+def _lstm_block_step(xt, h_st, c_st, wx, wh, bb, hidden):
+    """One LSTM step for every sequence of a batch: (h, c) -> (h', c')."""
+    acc = xt[:, None] * wx[None, :] + h_st @ wh.T  # (n, 4h)
+    z = np.floor_divide(acc, Q16) + bb[None, :]
+    i_g = np.clip(z[:, :hidden], 0, Q16)
+    f_g = np.clip(z[:, hidden : 2 * hidden], 0, Q16)
+    g_g = np.clip(z[:, 2 * hidden : 3 * hidden], -Q16, Q16)
+    o_g = np.clip(z[:, 3 * hidden :], 0, Q16)
+    c_new = np.floor_divide(f_g * c_st + i_g * g_g, Q16)
+    tc = np.clip(c_new, -Q16, Q16)
+    return np.floor_divide(o_g * tc, Q16), c_new
+
+
+def _blocked_recurrence(
+    df: DataFrame,
+    key_col: str,
+    order_cols: list[str],
+    x_col: str,
+    x_scale: float,
+    hidden: int,
+    weights: tuple[list, list, list],
+    step,
+) -> DataFrame:
+    """The salted, padded batch layout shared by the blocked LSTM and GRU:
+    ``step(xt, h, c, wx, wh, bb, hidden) -> (h', c')`` advances every
+    sequence of a group by one time step; padded slots keep their state."""
+    wxq, whq, bq = weights
+    wx = np.array(wxq, dtype="int64")  # (kh,)
+    wh = np.array(whq, dtype="int64")  # (kh, h)
+    bb = np.array(bq, dtype="int64")  # (kh,)
     hcols = ", ".join(f"h{i}:double" for i in range(hidden))
     schema = f"{df.schema.simpleString()[7:-1]},{hcols}"
 
@@ -1072,16 +1065,7 @@ def lstm_fixed_forward_blocked(
         c_st = np.zeros((n, hidden), dtype="int64")
         outs = np.zeros((n, t_max, hidden), dtype="int64")
         for t in range(t_max):
-            xt = xmat[:, t]  # (n,)
-            acc = xt[:, None] * wx[None, :] + h_st @ wh.T  # (n, 4h)
-            z = np.floor_divide(acc, Q16) + bb[None, :]
-            i_g = np.clip(z[:, :hidden], 0, Q16)
-            f_g = np.clip(z[:, hidden : 2 * hidden], 0, Q16)
-            g_g = np.clip(z[:, 2 * hidden : 3 * hidden], -Q16, Q16)
-            o_g = np.clip(z[:, 3 * hidden :], 0, Q16)
-            c_new = np.floor_divide(f_g * c_st + i_g * g_g, Q16)
-            tc = np.clip(c_new, -Q16, Q16)
-            h_new = np.floor_divide(o_g * tc, Q16)
+            h_new, c_new = step(xmat[:, t], h_st, c_st, wx, wh, bb, hidden)
             live = valid[:, t][:, None]
             c_st = np.where(live, c_new, c_st)
             h_st = np.where(live, h_new, h_st)
@@ -1106,19 +1090,8 @@ def q68c_lstm_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     (salted groups of many users, padded to the group's longest
     sequence) instead of one. Parity with q68a is pinned by test; the
     oracle hash is the cross-engine proof."""
-    events = read_table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        F.unix_micros("ts").alias("ts_us"),
-        "value",
-    )
-    out = lstm_fixed_forward_blocked(
-        events, "user_id", ["ts_us", "event_id"], "value",
-        _LSTM_XSCALE, _LSTM_H,
-    )
-    return out.select(
-        "event_id", "user_id",
-        *[F.col(f"h{j}") for j in range(_LSTM_H)],
+    return _fixed_cell_query(
+        spark, sf_dir, lstm_fixed_forward_blocked, "user_id"
     )
 
 
@@ -1219,17 +1192,11 @@ def _gru_fixed_oracle(hidden: int = _LSTM_H) -> str:
         acc = " + ".join(f"({whq[k][j]})*l.h{j}q" for j in range(hidden))
         return f"CAST(floor(({acc})/65536.0) AS BIGINT)"
 
-    def clamp(e: str, lo: int, hi: int) -> str:
-        return (
-            f"LEAST(GREATEST({e}, CAST({lo} AS BIGINT)),"
-            f" CAST({hi} AS BIGINT))"
-        )
-
     h_exprs = []
     for j in range(hidden):
-        z_g = clamp(f"{zx(j)} + {zh(j)}", 0, Q16)
-        r_g = clamp(f"{zx(hidden + j)} + {zh(hidden + j)}", 0, Q16)
-        n_g = clamp(
+        z_g = _clamp_sql(f"{zx(j)} + {zh(j)}", 0, Q16)
+        r_g = _clamp_sql(f"{zx(hidden + j)} + {zh(hidden + j)}", 0, Q16)
+        n_g = _clamp_sql(
             f"{zx(2 * hidden + j)} + CAST(floor((({r_g})*({zh(2 * hidden + j)}))"
             "/65536.0) AS BIGINT)",
             -Q16,
@@ -1244,24 +1211,7 @@ def _gru_fixed_oracle(hidden: int = _LSTM_H) -> str:
     zero_state = ", ".join(
         f"CAST(0 AS BIGINT) AS h{j}q" for j in range(hidden)
     )
-    out_cols = ", ".join(f"h{j}q / 65536.0 AS h{j}" for j in range(hidden))
-    return f"""
-    WITH RECURSIVE seq AS MATERIALIZED (
-        SELECT user_id, event_id,
-               CAST(floor(value / {_LSTM_XSCALE} * 65536) AS BIGINT) AS x,
-               ROW_NUMBER() OVER (PARTITION BY user_id
-                                  ORDER BY epoch_us(ts), event_id) AS rn
-        FROM events),
-    gru AS (
-        SELECT user_id, CAST(NULL AS BIGINT) AS event_id, 0 AS rn,
-               CAST(0 AS BIGINT) AS x, {zero_state}
-        FROM (SELECT DISTINCT user_id FROM seq)
-        UNION ALL
-        SELECT s.user_id, s.event_id, s.rn, s.x, {state_cols}
-        FROM seq s JOIN gru l
-          ON s.user_id = l.user_id AND s.rn = l.rn + 1)
-    SELECT event_id, user_id, {out_cols} FROM gru WHERE rn >= 1
-    """
+    return _recurrence_oracle("gru", zero_state, state_cols, hidden)
 
 
 @query("q68b_gru_unrolled", oracle=_gru_fixed_oracle())
@@ -1269,22 +1219,7 @@ def q68b_gru_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-checked GRU twin of q68a (J5's second cell type,
     `nn_topology.h:51` LAYER_GRU): same event-value sequences, 2 hidden
     units, integer hard-gate algebra."""
-    from hive_reflex_spark.io import read_table
-
-    events = read_table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        F.unix_micros("ts").alias("ts_us"),
-        "value",
-    )
-    out = gru_fixed_forward(
-        events, ["user_id"], ["ts_us", "event_id"], "value",
-        _LSTM_XSCALE, _LSTM_H,
-    )
-    return out.select(
-        "event_id", "user_id",
-        *[F.col(f"h{j}") for j in range(_LSTM_H)],
-    )
+    return _fixed_cell_query(spark, sf_dir, gru_fixed_forward, ["user_id"])
 
 
 def gru_fixed_forward_blocked(
@@ -1300,65 +1235,26 @@ def gru_fixed_forward_blocked(
     algebra floors zx and zh SEPARATELY before the gate sums (unlike the
     LSTM's combined accumulator) — replicated exactly so the q68b
     recursive-CTE oracle hashes green on this plan too."""
-    wxq, whq, bq = _gru_fixed_weights(hidden)
-    wx = np.array(wxq, dtype="int64")  # (3h,)
-    wh = np.array(whq, dtype="int64")  # (3h, h)
-    bb = np.array(bq, dtype="int64")  # (3h,)
-    hcols = ", ".join(f"h{i}:double" for i in range(hidden))
-    schema = f"{df.schema.simpleString()[7:-1]},{hcols}"
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.drop(columns=["_salt"])
-        pdf = pdf.sort_values([key_col, *order_cols]).reset_index(drop=True)
-        keys = pdf[key_col].to_numpy()
-        uniq, inv = np.unique(keys, return_inverse=True)
-        n = len(uniq)
-        pos = np.zeros(len(pdf), dtype="int64")
-        lens = np.zeros(n, dtype="int64")
-        for i, u in enumerate(inv):
-            pos[i] = lens[u]
-            lens[u] += 1
-        t_max = int(lens.max()) if n else 0
-        xq = np.floor(
-            pdf[x_col].to_numpy(dtype="float64") / x_scale * Q16
-        ).astype("int64")
-        xmat = np.zeros((n, t_max), dtype="int64")
-        xmat[inv, pos] = xq
-        valid = np.zeros((n, t_max), dtype=bool)
-        valid[inv, pos] = True
-        h_st = np.zeros((n, hidden), dtype="int64")
-        outs = np.zeros((n, t_max, hidden), dtype="int64")
-        for t in range(t_max):
-            xt = xmat[:, t]
-            zx = np.floor_divide(xt[:, None] * wx[None, :], Q16) + bb[None, :]
-            zh = np.floor_divide(h_st @ wh.T, Q16)
-            z_g = np.clip(
-                zx[:, :hidden] + zh[:, :hidden], 0, Q16
-            )
-            r_g = np.clip(
-                zx[:, hidden : 2 * hidden] + zh[:, hidden : 2 * hidden],
-                0,
-                Q16,
-            )
-            n_pre = zx[:, 2 * hidden :] + np.floor_divide(
-                r_g * zh[:, 2 * hidden :], Q16
-            )
-            n_g = np.clip(n_pre, -Q16, Q16)
-            h_new = np.floor_divide(
-                (Q16 - z_g) * n_g + z_g * h_st, Q16
-            )
-            live = valid[:, t][:, None]
-            h_st = np.where(live, h_new, h_st)
-            outs[:, t, :] = h_st
-        row_h = outs[inv, pos, :]
-        for j in range(hidden):
-            pdf[f"h{j}"] = row_h[:, j] / float(Q16)
-        return pdf
-
-    salted = df.withColumn(
-        "_salt", (F.col(key_col) % _LSTM_SALT).cast("int")
+    return _blocked_recurrence(
+        df, key_col, order_cols, x_col, x_scale, hidden,
+        _gru_fixed_weights(hidden), _gru_block_step,
     )
-    return salted.groupBy("_salt").applyInPandas(fn, schema)
+
+
+def _gru_block_step(xt, h_st, c_st, wx, wh, bb, hidden):
+    """One GRU step for every sequence of a batch (no cell state: ``c``
+    passes through unchanged)."""
+    zx = np.floor_divide(xt[:, None] * wx[None, :], Q16) + bb[None, :]
+    zh = np.floor_divide(h_st @ wh.T, Q16)
+    z_g = np.clip(zx[:, :hidden] + zh[:, :hidden], 0, Q16)
+    r_g = np.clip(
+        zx[:, hidden : 2 * hidden] + zh[:, hidden : 2 * hidden], 0, Q16
+    )
+    n_pre = zx[:, 2 * hidden :] + np.floor_divide(
+        r_g * zh[:, 2 * hidden :], Q16
+    )
+    n_g = np.clip(n_pre, -Q16, Q16)
+    return np.floor_divide((Q16 - z_g) * n_g + z_g * h_st, Q16), c_st
 
 
 @query("q68d_gru_blocked", oracle=_gru_fixed_oracle())
@@ -1367,19 +1263,8 @@ def q68d_gru_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     the GRU gate algebra. Both recurrence cell types now have a
     vector-lane execution tier matching the per-key trajectory
     bit-for-bit (the q68b recursive-CTE oracle is reused verbatim)."""
-    events = read_table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        F.unix_micros("ts").alias("ts_us"),
-        "value",
-    )
-    out = gru_fixed_forward_blocked(
-        events, "user_id", ["ts_us", "event_id"], "value",
-        _LSTM_XSCALE, _LSTM_H,
-    )
-    return out.select(
-        "event_id", "user_id",
-        *[F.col(f"h{j}") for j in range(_LSTM_H)],
+    return _fixed_cell_query(
+        spark, sf_dir, gru_fixed_forward_blocked, "user_id"
     )
 
 

@@ -3187,6 +3187,38 @@ def _ivj_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ivj_interval_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`_ivj_intervals` decomposed into own-width tier buckets."""
+    return multires_interval_buckets(
+        _ivj_intervals(spark, sf_dir), "i_start", "i_end",
+        _IVJ_LONG_CUTOFF_US,
+    )
+
+
+def _ivj_window_hits(joined: DataFrame) -> DataFrame:
+    """q246a/q246b's answer from their bucket-key join: the exact overlap
+    re-check, one row per (event, window), then per-window aggregates."""
+    matched = (
+        joined.filter(
+            (F.col("i_start") < F.col("w_end"))
+            & (F.col("i_end") >= F.col("w_start"))
+        )
+        .select("event_id", "user_id", "is_long", "window_id", "w_start")
+        .distinct()
+    )
+    return matched.groupBy("window_id", "w_start").agg(
+        F.count("*").alias("n_hits"),
+        F.sum("is_long").cast("long").alias("n_long_hits"),
+        F.countDistinct("user_id").alias("n_users"),
+    ).select(
+        "window_id",
+        F.timestamp_micros(F.col("w_start")).alias("window_start"),
+        "n_hits",
+        "n_long_hits",
+        "n_users",
+    )
+
+
 @query("q246a_multires_interval_join", oracle=_IVJ_MULTIRES_ORACLE)
 def q246a_multires_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q246's bucket decomposition at a SKEWED interval-length
@@ -3209,31 +3241,9 @@ def q246a_multires_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier table that is log(range)-sized; the probe side's all-tiers
     expansion is |windows| x |tiers| — dimension-scale. The equi-join
     key stays (tier, bucket): one shuffle, no theta join anywhere."""
-    iv_b = multires_interval_buckets(
-        _ivj_intervals(spark, sf_dir), "i_start", "i_end",
-        _IVJ_LONG_CUTOFF_US,
-    )
+    iv_b = _ivj_interval_buckets(spark, sf_dir)
     wins_b = _ivj_probe_buckets(_ivj_windows(spark, sf_dir))
-    matched = (
-        iv_b.join(F.broadcast(wins_b), ["tier", "bucket"])
-        .filter(
-            (F.col("i_start") < F.col("w_end"))
-            & (F.col("i_end") >= F.col("w_start"))
-        )
-        .select("event_id", "user_id", "is_long", "window_id", "w_start")
-        .distinct()
-    )
-    return matched.groupBy("window_id", "w_start").agg(
-        F.count("*").alias("n_hits"),
-        F.sum("is_long").cast("long").alias("n_long_hits"),
-        F.countDistinct("user_id").alias("n_users"),
-    ).select(
-        "window_id",
-        F.timestamp_micros(F.col("w_start")).alias("window_start"),
-        "n_hits",
-        "n_long_hits",
-        "n_users",
-    )
+    return _ivj_window_hits(iv_b.join(F.broadcast(wins_b), ["tier", "bucket"]))
 
 
 # salt fan-out for q246b: spreads one hot (tier, bucket) reducer key
@@ -3277,11 +3287,7 @@ def q246b_salted_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew-join split solves the SORT-merge flavor of this automatically;
     salting is the form that composes with the shuffle-HASH join and
     with per-key state (the hot key never materializes in one task)."""
-    iv_b = multires_interval_buckets(
-        _ivj_intervals(spark, sf_dir), "i_start", "i_end",
-        _IVJ_LONG_CUTOFF_US,
-    )
-    iv_s = iv_b.withColumn(
+    iv_s = _ivj_interval_buckets(spark, sf_dir).withColumn(
         "salt", F.pmod(F.xxhash64("event_id"), F.lit(_IVJ_SALT)).cast("int")
     )
     # sequence(int, int) yields array<int>, so the exploded salt is
@@ -3290,25 +3296,8 @@ def q246b_salted_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "*",
         F.explode(F.sequence(F.lit(0), F.lit(_IVJ_SALT - 1))).alias("salt"),
     )
-    matched = (
+    return _ivj_window_hits(
         iv_s.join(wins_s.hint("shuffle_hash"), ["tier", "bucket", "salt"])
-        .filter(
-            (F.col("i_start") < F.col("w_end"))
-            & (F.col("i_end") >= F.col("w_start"))
-        )
-        .select("event_id", "user_id", "is_long", "window_id", "w_start")
-        .distinct()
-    )
-    return matched.groupBy("window_id", "w_start").agg(
-        F.count("*").alias("n_hits"),
-        F.sum("is_long").cast("long").alias("n_long_hits"),
-        F.countDistinct("user_id").alias("n_users"),
-    ).select(
-        "window_id",
-        F.timestamp_micros(F.col("w_start")).alias("window_start"),
-        "n_hits",
-        "n_long_hits",
-        "n_users",
     )
 
 

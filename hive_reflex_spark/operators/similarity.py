@@ -1946,10 +1946,6 @@ JL_PAIR_CAP = 128  # distortion audit fence: pairs among the first 128 vectors
 
 # sign(j, d) = -1 iff first md5 hex digit of "jl{j}:{d}" >= '8' — the same
 # engine-portable pseudo-random sign convention as q53's hyperplanes
-_JL_SIGN_SQL = (
-    "CASE WHEN substr(md5('jl' || CAST({j} AS VARCHAR) || ':' "
-    "|| CAST(dim AS VARCHAR)), 1, 1) >= '8' THEN -1.0 ELSE 1.0 END"
-)
 
 
 @query(
@@ -2378,12 +2374,11 @@ def q297_cluster_label_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label"
     )
-    joint = (
+    joint = maybe_local_checkpoint(
         per_vec.select("vec_id", "own")
         .join(emb, "vec_id")
         .groupBy(F.col("own").alias("cid"), "label")
         .agg(F.count("*").cast("long").alias("n_cl"))
-        .localCheckpoint()
     )
     mc = joint.groupBy("cid").agg(F.sum("n_cl").cast("long").alias("n_c"))
     ml = joint.groupBy("label").agg(

@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 from hive_reflex_spark.io import (
     chain_checkpoint,
     corpus_checkpoint,
-    maybe_local_checkpoint,
     read_table,
     tracked_persist,
 )

@@ -178,26 +178,56 @@ def pid_controller(
 # ---------------------------------------------------------------------------
 
 
-@query(
-    "q54_iir_lowpass",
-    oracle="""
+def _ewma_units_oracle(cte: str, prev: str, step: str, out: str) -> str:
+    """Recursive-CTE replay of :func:`ewma_fixed_units` over each user's
+    event values in 1e-6 units: ``step`` is the next ``s_u`` from the
+    previous row ``{prev}.s_u`` and the input ``s.x_u``."""
+    return f"""
     WITH RECURSIVE seq AS MATERIALIZED (
         SELECT user_id, event_id,
                CAST(ROUND(value * 1000000) AS BIGINT) AS x_u,
                ROW_NUMBER() OVER (PARTITION BY user_id
                                   ORDER BY epoch_us(ts), event_id) AS rn
         FROM events),
-    iir AS (
+    {cte} AS (
         SELECT user_id, event_id, rn, x_u AS s_u
         FROM seq WHERE rn = 1
         UNION ALL
         SELECT s.user_id, s.event_id, s.rn,
-               (7 * i.s_u + 3 * s.x_u) // 10
-        FROM seq s JOIN iir i
-          ON s.user_id = i.user_id AND s.rn = i.rn + 1)
-    SELECT event_id, user_id, ROUND(s_u / 1000000.0, 6) AS filtered
-    FROM iir
-    """,
+               {step}
+        FROM seq s JOIN {cte} {prev}
+          ON s.user_id = {prev}.user_id AND s.rn = {prev}.rn + 1)
+    SELECT event_id, user_id, ROUND(s_u / 1000000.0, 6) AS {out}
+    FROM {cte}
+    """
+
+
+def _ewma_units_query(
+    spark: SparkSession, sf_dir: str, num: int, out: str
+) -> DataFrame:
+    """q54/q158: s = (num·s_prev + (10−num)·x) // 10 per user over the
+    event values in exact 1e-6 integer units, rounded back to ``out``."""
+    events = read_table(spark, sf_dir, "events").select(
+        "event_id",
+        "user_id",
+        F.unix_micros("ts").alias("ts_us"),
+        F.round(F.col("value") * 1_000_000).cast("long").alias("x_u"),
+    )
+    units = ewma_fixed_units(
+        events, ["user_id"], ["ts_us", "event_id"], "x_u", num=num, den=10
+    )
+    return units.select(
+        "event_id",
+        "user_id",
+        F.round(F.col("s_u") / 1_000_000.0, 6).alias(out),
+    )
+
+
+@query(
+    "q54_iir_lowpass",
+    oracle=_ewma_units_oracle(
+        "iir", "i", "(7 * i.s_u + 3 * s.x_u) // 10", "filtered"
+    ),
 )
 def q54_iir_lowpass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact IIR low-pass over each user's event-value series (α=0.3 =
@@ -210,42 +240,12 @@ def q54_iir_lowpass(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows at 10x SF, the same sub-ulp drift q154/q158 retired
     (BASELINE.md r6). The float library form (iir_lowpass) remains for
     callers that want it and keeps its numpy bit-parity tests."""
-    events = read_table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        F.unix_micros("ts").alias("ts_us"),
-        F.round(F.col("value") * 1_000_000).cast("long").alias("x_u"),
-    )
-    out = ewma_fixed_units(
-        events, ["user_id"], ["ts_us", "event_id"], "x_u", num=7, den=10
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        F.round(F.col("s_u") / 1_000_000.0, 6).alias("filtered"),
-    )
+    return _ewma_units_query(spark, sf_dir, 7, "filtered")
 
 
 @query(
     "q158_ewma_smooth",
-    oracle="""
-    WITH RECURSIVE seq AS MATERIALIZED (
-        SELECT user_id, event_id,
-               CAST(ROUND(value * 1000000) AS BIGINT) AS x_u,
-               ROW_NUMBER() OVER (PARTITION BY user_id
-                                  ORDER BY epoch_us(ts), event_id) AS rn
-        FROM events),
-    ew AS (
-        SELECT user_id, event_id, rn, x_u AS s_u
-        FROM seq WHERE rn = 1
-        UNION ALL
-        SELECT s.user_id, s.event_id, s.rn,
-               (9 * e.s_u + s.x_u) // 10
-        FROM seq s JOIN ew e
-          ON s.user_id = e.user_id AND s.rn = e.rn + 1)
-    SELECT event_id, user_id, ROUND(s_u / 1000000.0, 6) AS smoothed
-    FROM ew
-    """,
+    oracle=_ewma_units_oracle("ew", "e", "(9 * e.s_u + s.x_u) // 10", "smoothed"),
 )
 def q158_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W6 exponential smoothing c = β·c_prev + (1−β)·raw with β=0.9
@@ -259,20 +259,7 @@ def q158_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-ulp-per-step and crossed the 6th-decimal rounding boundary on
     10/1,000,000 rows at 10x SF (BASELINE.md r5); integer floor-division
     steps cannot drift."""
-    events = read_table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        F.unix_micros("ts").alias("ts_us"),
-        F.round(F.col("value") * 1_000_000).cast("long").alias("x_u"),
-    )
-    out = ewma_fixed_units(
-        events, ["user_id"], ["ts_us", "event_id"], "x_u", num=9, den=10
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        F.round(F.col("s_u") / 1_000_000.0, 6).alias("smoothed"),
-    )
+    return _ewma_units_query(spark, sf_dir, 9, "smoothed")
 
 
 _FIR_TAPS = 12

@@ -52,12 +52,6 @@ from pyspark.sql import functions as F
 
 from hive_reflex_spark.session import pin_session
 
-# the kafka source's record projection (value/key as binary)
-KAFKA_RECORD_SCHEMA = (
-    "topic string, partition int, offset long, "
-    "ts timestamp, key binary, value binary"
-)
-
 
 def _topic_dir(log_dir: str, topic: str) -> str:
     return os.path.join(log_dir, f"topic={topic}")

@@ -492,13 +492,24 @@ def q160_can_wire_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     8th frame) must be ignored. The oracle computes the per-node rollup
     straight from the synthesis arithmetic — only a correct
     encode→decode round-trip (sign extension included) hash-matches."""
-    from hive_reflex_spark.functions import exact_sum
+    return _can_rollup(_event_can_frames(spark, sf_dir))
+
+
+def _event_can_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every event id as a synthesized CAN frame (the q160 family's
+    input)."""
     from hive_reflex_spark.io import read_table
 
     ticks = read_table(spark, sf_dir, "events").select("event_id", "ts")
-    decoded = decode_can_frames(
-        synthesize_can_frames(ticks, value_col="event_id", ts_col="ts")
-    )
+    return synthesize_can_frames(ticks, value_col="event_id", ts_col="ts")
+
+
+def _can_rollup(frames: DataFrame) -> DataFrame:
+    """Decode ``frames`` and roll them up per node: the answer every q160
+    transport must reproduce for ``_CAN_ROLLUP_ORACLE``."""
+    from hive_reflex_spark.functions import exact_sum
+
+    decoded = decode_can_frames(frames)
     return decoded.groupBy("node_id").agg(
         F.count("*").alias("n_cmd"),
         F.round(F.min("target_angle"), 6).alias("min_angle"),
@@ -522,20 +533,9 @@ def q160a_slcan_transport(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin (`can_bus_socket_stream`) runs this identical parse+decode
     plan over readStream and is CI-verified end to end over a real TCP
     server in tests/test_sinks_allocator.py."""
-    from hive_reflex_spark.functions import exact_sum
-    from hive_reflex_spark.io import read_table
-
-    ticks = read_table(spark, sf_dir, "events").select("event_id", "ts")
-    frames = synthesize_can_frames(ticks, value_col="event_id", ts_col="ts")
+    frames = _event_can_frames(spark, sf_dir)
     wire = slcan_encode_lines(frames).withColumn("ts0", F.lit(None).cast("timestamp"))
-    decoded = decode_can_frames(parse_slcan_frames(wire, ts_col="ts0"))
-    return decoded.groupBy("node_id").agg(
-        F.count("*").alias("n_cmd"),
-        F.round(F.min("target_angle"), 6).alias("min_angle"),
-        F.round(F.max("target_angle"), 6).alias("max_angle"),
-        F.round(exact_sum(F.col("target_angle"), 9), 6).alias("sum_angle"),
-        F.round(exact_sum(F.col("compliance"), 9), 6).alias("sum_compliance"),
-    )
+    return _can_rollup(parse_slcan_frames(wire, ts_col="ts0"))
 
 
 @query("q160b_kafka_log_transport", oracle=_CAN_ROLLUP_ORACLE)
@@ -556,13 +556,9 @@ def q160b_kafka_log_transport(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import shutil
 
-    from hive_reflex_spark.functions import exact_sum
-    from hive_reflex_spark.io import read_table
     from hive_reflex_spark.sources.kafka_log import log_append, log_read
 
-    ticks = read_table(spark, sf_dir, "events").select("event_id", "ts")
-    frames = synthesize_can_frames(ticks, value_col="event_id", ts_col="ts")
-    wire = slcan_encode_lines(frames).select(
+    wire = slcan_encode_lines(_event_can_frames(spark, sf_dir)).select(
         # key = the 11-bit wire id (hex chars 2..4): per-node total order
         # within a partition, kafka's per-key ordering contract
         F.substring("value", 2, 3).alias("k"),
@@ -589,14 +585,7 @@ def q160b_kafka_log_transport(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.decode("value", "UTF-8").alias("value"),
         F.col("ts").alias("ts0"),
     )
-    decoded = decode_can_frames(parse_slcan_frames(lines, ts_col="ts0"))
-    return decoded.groupBy("node_id").agg(
-        F.count("*").alias("n_cmd"),
-        F.round(F.min("target_angle"), 6).alias("min_angle"),
-        F.round(F.max("target_angle"), 6).alias("max_angle"),
-        F.round(exact_sum(F.col("target_angle"), 9), 6).alias("sum_angle"),
-        F.round(exact_sum(F.col("compliance"), 9), 6).alias("sum_compliance"),
-    )
+    return _can_rollup(parse_slcan_frames(lines, ts_col="ts0"))
 
 
 @query(
@@ -898,6 +887,21 @@ def q101_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow replay the inner join emits exactly the batch-join
     result, so the query is fully oracle-checkable.
     """
+    return _error_click_join(
+        spark,
+        sf_dir,
+        "inner",
+        (F.unix_micros("err_ts") - F.unix_micros("click_ts")).alias("gap_us"),
+    )
+
+
+def _error_click_join(
+    spark: SparkSession, sf_dir: str, how: str, *extra_cols
+) -> DataFrame:
+    """q101/q147: each error event ``how``-joined to the same user's
+    clicks in its preceding 24 h, both streams watermarked at 1 h,
+    replayed into a memory sink as (user_id, error_event_id,
+    click_event_id, *extra_cols)."""
     errors = (
         stream_events(spark, sf_dir)
         .filter(F.col("event_type") == "error")
@@ -923,12 +927,8 @@ def q101_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("user_id") == F.col("click_user_id"))
         & (F.col("click_ts") >= F.col("err_ts") - F.expr("INTERVAL 24 HOURS"))
         & (F.col("click_ts") < F.col("err_ts")),
-    ).select(
-        "user_id",
-        "error_event_id",
-        "click_event_id",
-        (F.unix_micros("err_ts") - F.unix_micros("click_ts")).alias("gap_us"),
-    )
+        how,
+    ).select("user_id", "error_event_id", "click_event_id", *extra_cols)
     return run_to_memory(joined, mode="append")
 
 
@@ -1270,34 +1270,7 @@ def q147_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval plus the watermark delay per side, independent of stream
     length; the null-emission rule is what lets Spark drop error state
     instead of holding every unmatched row forever."""
-    errors = (
-        stream_events(spark, sf_dir)
-        .filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_event_id"),
-            "user_id",
-            F.col("ts").alias("err_ts"),
-        )
-        .withWatermark("err_ts", "1 hour")
-    )
-    clicks = (
-        stream_events(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_event_id"),
-            F.col("user_id").alias("click_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    joined = errors.join(
-        clicks,
-        (F.col("user_id") == F.col("click_user_id"))
-        & (F.col("click_ts") >= F.col("err_ts") - F.expr("INTERVAL 24 HOURS"))
-        & (F.col("click_ts") < F.col("err_ts")),
-        "left_outer",
-    ).select("user_id", "error_event_id", "click_event_id")
-    return run_to_memory(joined, mode="append")
+    return _error_click_join(spark, sf_dir, "left_outer")
 
 @query(
     "q171_incremental_lsh_index",
