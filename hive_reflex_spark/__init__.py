@@ -23,69 +23,3 @@ from hive_reflex_spark.registry import QUERIES, ORACLES, query
 __all__ = ["get_spark", "QUERIES", "ORACLES", "query"]
 __version__ = "0.1.0"
 
-
-def api():
-    """Import and return the engine's user-facing API surface in one
-    namespace (lazy — avoids importing Spark-heavy modules until used):
-
-    >>> eng = hive_reflex_spark.api()
-    >>> eng.coord_matmul(a, b, broadcast_b=True)
-    """
-    import types
-
-    from hive_reflex_spark.functions import exact_sum
-    from hive_reflex_spark.functions import tensor_fns
-    from hive_reflex_spark.functions.layout import bucket_write, colocated_join
-    from hive_reflex_spark.functions.skew import salted_join
-    from hive_reflex_spark.operators.graph import connected_components
-    from hive_reflex_spark.operators.nn import (
-        fold_batchnorm,
-        gru_forward,
-        lstm_forward,
-    )
-    from hive_reflex_spark.operators.similarity import ivf_topk, lsh_ann_topk
-    from hive_reflex_spark.operators.tensor import (
-        add_bias,
-        argmax,
-        coord_matmul,
-        csr_from_coords,
-        magnitude_prune_threshold,
-        softmax,
-        sparse_matmul,
-    )
-    from hive_reflex_spark.operators.timeseries import (
-        asof_join_pandas,
-        complementary_filter,
-        ewma,
-        iir_lowpass,
-        pid_controller,
-    )
-    from hive_reflex_spark.plans import (
-        flash_layout,
-        fuse_matmul_add,
-        liveness,
-        partition_by_cost,
-    )
-    from hive_reflex_spark.plans.passes import allocate_buffers
-    from hive_reflex_spark.sources.multimodal import (
-        decode_frames,
-        extract_features,
-        with_binary_payload,
-    )
-    from hive_reflex_spark.sources.sinks import (
-        load_model_binary,
-        pack_model_binary,
-    )
-
-    ns = types.SimpleNamespace(**{
-        k: v for k, v in locals().items() if not k.startswith("_") and k != "types"
-    })
-    for name in dir(tensor_fns):
-        obj = getattr(tensor_fns, name)
-        if (
-            not name.startswith("_")
-            and callable(obj)
-            and getattr(obj, "__module__", None) == tensor_fns.__name__
-        ):
-            setattr(ns, name, obj)
-    return ns

@@ -35,12 +35,6 @@ def exact_sum_unit(col: Column, scale: int = 2) -> Column:
     return F.sum((col * p + F.lit(0.5)).cast("long")) / float(p)
 
 
-def exact_sum_window(col: Column, window, scale: int = 2) -> Column:
-    """Windowed variant of :func:`exact_sum`."""
-    p = 10**scale
-    return F.sum(F.round(col * p).cast("long")).over(window) / float(p)
-
-
 def spark_exact_sum(expr: str, scale: int = 2) -> str:
     """Spark-SQL-text twin of :func:`exact_sum` for F.expr construction.
 

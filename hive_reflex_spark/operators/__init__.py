@@ -49,6 +49,10 @@ from hive_reflex_spark import registry as _registry
 # q101/q147, q160/q160a/q160b, q246a/q246b, q54/q158 — same plan (plan
 # fingerprints byte-identical before/after), same oracle string. q297's
 # waist now goes through maybe_local_checkpoint (same localCheckpoint).
+# Bounded stream replays (one stager, one drain in streaming/ops.py): q62,
+# q63, q64, q97, q101, q104, q121, q147, q171, q172, q250a, q265a, q268a,
+# q290a — the same rows by construction (io.read_table's frame, staged
+# as files and replayed to the end), same oracle strings.
 # q68/q28 stay out: rows-only by design with standing rows evidence and
 # oracled twins (q68a/q118). Every query not listed keeps its standing
 # hash-green driver row and original registration order after this block.

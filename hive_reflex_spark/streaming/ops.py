@@ -2,10 +2,11 @@
 (SURVEY §2A ST1-ST8): tumbling/session windows, stream-static joins,
 stateful per-key aggregation with timeouts.
 
-Replay model: the parquet file is a file-stream source driven to
-completion with an availableNow trigger + memory sink (FIXTURES.md oracle
-policy) — deterministic in CI, and the exact code path a Kafka/CAN-bus
-source would feed in production (swap the reader, keep the plan).
+Replay model: the fixture table is staged once as a file-stream source
+(``_replay_stream``) and driven to its end by one drain (``_drain``) into
+a memory sink or a foreachBatch writer (FIXTURES.md oracle policy) —
+deterministic in CI, and the exact code path a Kafka/CAN-bus source
+would feed in production (swap the reader, keep the plan).
 
 Scale notes: windowed aggregations keep O(open windows × keys) state;
 watermarks (ST3) bound that state by evicting closed windows — without
@@ -16,96 +17,101 @@ the state store, not executor heap.
 
 from __future__ import annotations
 
+import hashlib
 import itertools
+import json
 import os
+import shutil
 from collections.abc import Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import StructType
 
+from hive_reflex_spark.io import read_table
 from hive_reflex_spark.registry import query
 from hive_reflex_spark.session import scratch_path
 
-_MEM_COUNTER = itertools.count()
-
-EVENTS_SCHEMA = (
-    "event_id long, ts long, user_id long, event_type string, "
-    "value double, props string"
-)
-# normalized shape once ts is a real timestamp (chunk re-stage, micros files)
-EVENTS_SCHEMA_TS = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
-EVENTS_SCHEMA_NTZ = (
-    "event_id long, ts timestamp_ntz, user_id long, event_type string, "
-    "value double, props string"
-)
+_REPLAYS = itertools.count()
 
 
-def _events_ts_storage(sf_dir: str) -> str:
-    """Physical timestamp storage of the events fixture: 'ns' (TIMESTAMP
-    NANOS — pre-round-2 fixtures), 'us_ntz' (micros, isAdjustedToUTC=false)
-    or 'us_tz'. Streaming sources need an explicit schema, so the reader
-    must match the file, not assume one vintage."""
-    import pyarrow.parquet as pq
-
-    t = str(
-        pq.read_schema(os.path.join(sf_dir, "events.parquet"))
-        .field("ts")
-        .type
+def _replay_stream(
+    spark: SparkSession, sf_dir: str, table: str, n_chunks: int
+) -> DataFrame:
+    """A fixture table as a bounded file stream: the one stager behind
+    every replay. Spark's file source needs a directory of files, so
+    ``io.read_table``'s frame (the only reader of the fixture's storage
+    vintages) is staged once per (process, sf_dir, table, n_chunks) as
+    ``n_chunks`` ranges of the table's first column (its ingestion key:
+    ``event_id`` runs in ``ts`` order, ``doc_id`` in ingestion order),
+    written one at a time so the source's oldest-first pickup replays
+    key order. The marker holds the staged schema, so a reuse runs no
+    Spark job. Read with maxFilesPerTrigger=1: one chunk per
+    micro-batch."""
+    work = scratch_path(
+        "stream",
+        hashlib.md5(f"{sf_dir}:{table}:{n_chunks}".encode()).hexdigest()[:10],
     )
-    if t.startswith("timestamp[ns"):
-        return "ns"
-    return "us_tz" if "tz=" in t else "us_ntz"
+    marker = os.path.join(work, "_SCHEMA")
+    if not os.path.exists(marker):
+        shutil.rmtree(work, ignore_errors=True)
+        df = read_table(spark, sf_dir, table)
+        parts = [df]
+        if n_chunks > 1:
+            key = F.col(df.columns[0])
+            lo, hi = df.agg(F.min(key), F.max(key)).first()
+            span = (hi - lo + n_chunks) // n_chunks
+            parts = [
+                df.filter((key >= lo + i * span) & (key < lo + (i + 1) * span))
+                for i in range(n_chunks)
+            ]
+        for part in parts:  # sequential writes -> mtime order
+            part.coalesce(1).write.mode("append").parquet(work)
+        with open(marker, "w") as f:
+            f.write(df.schema.json())
+    with open(marker) as f:
+        schema = StructType.fromJson(json.load(f))
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(work)
+    )
 
 
-def _stage_stream_dir(sf_dir: str) -> str:
-    """Spark's file-stream source requires a *directory*; the fixture is a
-    single file. Stage a symlink dir in scratch (one per sf_dir), which is
-    also where a real deployment would point the source at a landing zone.
-    """
-    key = sf_dir.strip("/").replace("/", "_")
-    d = scratch_path("stream", key)
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.join(sf_dir, "events.parquet"), link)
-    return d
+def _drain(writer: DataStreamWriter) -> None:
+    """Run one bounded replay to its end: the only place a replay starts.
+    availableNow consumes every staged file and stops; the checkpoint is
+    fresh and under the scratch root, and is removed afterwards, so a
+    repeated replay starts from the first file again and leaves nothing
+    behind."""
+    ckpt = scratch_path("stream", f"ckpt_{next(_REPLAYS)}")
+    try:
+        writer.option("checkpointLocation", ckpt).trigger(
+            availableNow=True
+        ).start().awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet as a file-stream source, ts normalized to TIMESTAMP
-    micros whatever the physical storage (matching io.read_table)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    staged = _stage_stream_dir(sf_dir)
-    storage = _events_ts_storage(sf_dir)
-    if storage == "ns":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = spark.readStream.schema(EVENTS_SCHEMA).parquet(staged)
-        return raw.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    schema = EVENTS_SCHEMA_NTZ if storage == "us_ntz" else EVENTS_SCHEMA_TS
-    raw = spark.readStream.schema(schema).parquet(staged)
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    """events.parquet as a file-stream source, ts a plain TIMESTAMP
+    whatever the physical storage (it is ``io.read_table``'s frame)."""
+    return _replay_stream(spark, sf_dir, "events", 1)
 
 
 def run_to_memory(df: DataFrame, mode: str = "complete") -> DataFrame:
-    """Drive a streaming DataFrame to completion (availableNow) into a
-    memory sink; return the sink table."""
-    name = f"hrs_mem_{next(_MEM_COUNTER)}"
-    q = (
-        df.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return df.sparkSession.table(name)
+    """Drive a streaming DataFrame to completion into a memory sink and
+    return the sink's rows. The temp view is dropped once the frame is
+    held: the frame is analyzed against the sink itself, not its name,
+    so the session keeps no view per replay."""
+    name = f"hrs_mem_{next(_REPLAYS)}"
+    _drain(df.writeStream.outputMode(mode).format("memory").queryName(name))
+    out = df.sparkSession.table(name)
+    df.sparkSession.catalog.dropTempView(name)
+    return out
 
 
 @query(
@@ -123,7 +129,7 @@ def run_to_memory(df: DataFrame, mode: str = "complete") -> DataFrame:
 def q62_streaming_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time tumbling windows (ST1, `can_sync.c:35-51`'s sync-period
     alignment): 1-hour windows × event_type via readStream → window() →
-    availableNow → memory sink. The oracle is the batch equivalent —
+    bounded replay → memory sink. The oracle is the batch equivalent —
     streaming and batch must agree on a bounded replay."""
     stream = stream_events(spark, sf_dir)
     agg = stream.groupBy(F.window("ts", "1 hour"), "event_type").agg(
@@ -192,7 +198,7 @@ def q63_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q64_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows in streaming (ST8): session_window(ts, 30 min) per
-    user with a 1-hour watermark, availableNow replay. Append mode emits
+    user with a 1-hour watermark, bounded replay. Append mode emits
     exactly the sessions whose end+gap precedes the final watermark
     (max event time − 1 h) — a deterministic set on a bounded replay, so
     the oracle is batch sessionization (q20's islands) filtered by that
@@ -498,8 +504,6 @@ def q160_can_wire_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _event_can_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every event id as a synthesized CAN frame (the q160 family's
     input)."""
-    from hive_reflex_spark.io import read_table
-
     ticks = read_table(spark, sf_dir, "events").select("event_id", "ts")
     return synthesize_can_frames(ticks, value_col="event_id", ts_col="ts")
 
@@ -553,9 +557,6 @@ def q160b_kafka_log_transport(spark: SparkSession, sf_dir: str) -> DataFrame:
     `log_read` swaps for the kafka connector with the downstream plan
     unchanged. Reference anchor: the bus rx path the log transports,
     `examples/example_reflex_node.c:109-120`."""
-    import hashlib
-    import shutil
-
     from hive_reflex_spark.sources.kafka_log import log_append, log_read
 
     wire = slcan_encode_lines(_event_can_frames(spark, sf_dir)).select(
@@ -620,10 +621,6 @@ def q217_device_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: encode/decode are pure column expressions (whole-stage
     codegen); the sink is a distributed partitioned write, the readback
     a parallel scan — nothing driver-resident."""
-    import hashlib
-    import shutil
-
-    from hive_reflex_spark.io import read_table
     from hive_reflex_spark.sources.sinks import write_runtime_log_json
 
     ticks = read_table(spark, sf_dir, "events").select("event_id", "ts")
@@ -670,31 +667,13 @@ def ota_feedback_loop(
       weight rescale) → package (pack_model_binary, versioned, CRC'd)
       → validate (load_model_binary) → ship (JSON feedback log).
 
-    The event fixture is re-staged as ``n_chunks`` files and streamed with
-    maxFilesPerTrigger=1, so foreachBatch runs one loop iteration per
+    The event fixture is replayed as ``n_chunks`` event_id-range files,
+    one per micro-batch, so foreachBatch runs one loop iteration per
     chunk — the reference's collect/optimize/wait cycle with micro-batches
     as the clock. Every gate mirrors the reference: <100 samples skips
     (ai_feedback.py:449-451), confidence < 0.7 skips (:456-458), versions
     increment 2.1.N (:469-471). Returns the loop summary."""
-    import json
-
     os.makedirs(out_dir, exist_ok=True)
-    # stage the replay as n_chunks files → n_chunks micro-batches
-    chunk_dir = os.path.join(out_dir, "chunks")
-    if not os.path.exists(chunk_dir):
-        # re-stage via the normalized batch reader so the chunks carry a
-        # real TIMESTAMP column regardless of the fixture's storage vintage
-        from hive_reflex_spark.io import read_table
-
-        read_table(spark, sf_dir, "events").repartition(n_chunks).write.parquet(
-            chunk_dir
-        )
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA_TS)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunk_dir)
-    )
-
     if weights is None:
         # seed model: ReflexNet-shaped fc layer as a coordinate table
         weights = spark.range(64).select(
@@ -757,13 +736,10 @@ def ota_feedback_loop(
         with open(log_path, "a") as f:
             f.write(json.dumps(entry) + "\n")
 
-    q = (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _replay_stream(spark, sf_dir, "events", n_chunks)
+        .writeStream.foreachBatch(step)
     )
-    q.awaitTermination()
     state["current"].unpersist()
     return {
         "iterations": len(state["log"]),
@@ -780,7 +756,6 @@ def batched_log_shipping(
     event stream flushed as JSON batch files via foreachBatch — the
     exactly-once sink pattern (each epoch writes one atomic directory).
     Returns the written batch paths."""
-    stream = stream_events(spark, sf_dir)
     written: list[str] = []
 
     def sink(df: DataFrame, epoch_id: int) -> None:
@@ -792,13 +767,7 @@ def batched_log_shipping(
         )
         written.append(path)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(out_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream_events(spark, sf_dir).writeStream.foreachBatch(sink))
     return written
 
 
@@ -884,7 +853,7 @@ def q101_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     range, so Spark bounds the join state to the interval plus the
     watermark delay per side — the production stream-stream shape whose
     state does NOT grow with stream length at 100 TB. On the bounded
-    availableNow replay the inner join emits exactly the batch-join
+    replay the inner join emits exactly the batch-join
     result, so the query is fully oracle-checkable.
     """
     return _error_click_join(
@@ -958,27 +927,14 @@ def q104_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side combined); the rewrite touches O(hours in batch) partitions,
     not the whole view — the same pattern a Delta/Iceberg MERGE performs,
     expressed on plain parquet."""
-    import hashlib
-    import shutil
-
-    from hive_reflex_spark.io import read_table
-
     # the view dir must outlive this function (the returned frame reads it
-    # lazily), so the workdir path is DETERMINISTIC per sf_dir and cleared
-    # at the start of each call — at most one view per input ever lives
-    # in scratch, and no driver-side collect of the rollup;
-    # chunks/checkpoint are deleted below, the view is not
-    work = scratch_path("rollup", hashlib.md5(sf_dir.encode()).hexdigest()[:8])
-    shutil.rmtree(work, ignore_errors=True)
-    os.makedirs(work)
-    chunk_dir = os.path.join(work, "chunks")
-    view_dir = os.path.join(work, "view")
-    # time-range chunks: each micro-batch carries a contiguous slice of
-    # event time, so an upsert touches ~1/4 of the day partitions — the
-    # late-data-plus-fresh-tail arrival pattern, not a full-view rewrite
-    read_table(spark, sf_dir, "events").repartitionByRange(
-        4, "ts"
-    ).write.parquet(chunk_dir)
+    # lazily), so its path is DETERMINISTIC per sf_dir and cleared at the
+    # start of each call — at most one view per input ever lives in
+    # scratch, and no driver-side collect of the rollup
+    view_dir = scratch_path(
+        "rollup", hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    )
+    shutil.rmtree(view_dir, ignore_errors=True)
 
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
         # hourly rows inside daily partitions: the rewrite unit is a day,
@@ -1016,24 +972,16 @@ def q104_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             delta.repartition("day").write.partitionBy("day").parquet(view_dir)
 
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA_TS)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunk_dir)
+    # event_id-range chunks are time-range chunks (ids run in ts order):
+    # each micro-batch carries a contiguous slice of event time, so an
+    # upsert touches ~1/4 of the day partitions — the late-data-plus-
+    # fresh-tail arrival pattern, not a full-view rewrite
+    _drain(
+        _replay_stream(spark, sf_dir, "events", 4)
+        .writeStream.foreachBatch(upsert)
     )
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    # drop only the stream plumbing; the view dir stays alive so the
-    # returned plan is a lazy parquet read (hour x event_type rollup),
-    # evaluated whenever the caller acts on it
-    shutil.rmtree(chunk_dir, ignore_errors=True)
-    shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
+    # the returned plan is a lazy parquet read of the view (hour x
+    # event_type rollup), evaluated whenever the caller acts on it
     return spark.read.parquet(view_dir).select(
         F.col("window_start").cast("string"),
         "event_type",
@@ -1261,7 +1209,7 @@ def q147_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     out as they join; a null row emits when the global watermark
     (min over both inputs' max event time, minus the 1-hour delay)
     passes the error's timestamp and its join state is evicted — so on
-    the bounded availableNow replay the result equals the batch left
+    the bounded replay the result equals the batch left
     join RESTRICTED to errors older than the final watermark, which is
     exactly what the oracle computes (the q64 final-watermark
     technique, applied to outer-join state eviction).
@@ -1306,23 +1254,16 @@ def q171_incremental_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate JOIN ever sees the global index. The oracle recomputes the
     full index from scratch — the streamed union must hash-match it on
     any chunking."""
-    import hashlib
-    import shutil
-
-    from hive_reflex_spark.io import read_table
     from hive_reflex_spark.operators.dedup import (
         bands_from_minhash,
         minhash_from_shingles,
         shingles_of_docs,
     )
 
-    work = scratch_path("lshidx", hashlib.md5(sf_dir.encode()).hexdigest()[:8])
-    shutil.rmtree(work, ignore_errors=True)
-    os.makedirs(work)
-    chunk_dir = os.path.join(work, "chunks")
-    index_dir = os.path.join(work, "index")
-    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs.repartitionByRange(4, "doc_id").write.parquet(chunk_dir)
+    index_dir = scratch_path(
+        "lshidx", hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    )
+    shutil.rmtree(index_dir, ignore_errors=True)
 
     def append_index(batch_df: DataFrame, epoch_id: int) -> None:
         bands = bands_from_minhash(
@@ -1330,21 +1271,11 @@ def q171_incremental_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select("doc_id", F.col("band").cast("int").alias("band"), "band_sig")
         bands.write.mode("append").parquet(index_dir)
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunk_dir)
+    _drain(
+        stream_documents(spark, sf_dir).writeStream.foreachBatch(append_index)
     )
-    q = (
-        stream.writeStream.foreachBatch(append_index)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(chunk_dir, ignore_errors=True)
-    shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
     return spark.read.parquet(index_dir)
+
 
 @query(
     "q172_log_shipping_roundtrip",
@@ -1366,9 +1297,6 @@ def q172_log_shipping_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     source, so a dropped epoch, duplicated flush, or JSON precision loss
     fails the hash — shipping must be a lossless partition of the
     stream on any chunking."""
-    import hashlib
-    import shutil
-
     work = scratch_path("logship", hashlib.md5(sf_dir.encode()).hexdigest()[:8])
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
@@ -1402,34 +1330,7 @@ def stream_documents(
     order, so the file source's oldest-first pickup replays ingestion
     order) and read with maxFilesPerTrigger=1 — one corpus slice per
     micro-batch, the batch clock the OTA loop also uses."""
-    import hashlib
-
-    from hive_reflex_spark.io import read_table
-
-    work = scratch_path(
-        "docstream", hashlib.md5(f"{sf_dir}:{n_chunks}".encode()).hexdigest()[:10]
-    )
-    if not os.path.exists(os.path.join(work, "_STAGED")):
-        import shutil
-
-        shutil.rmtree(work, ignore_errors=True)
-        os.makedirs(work)
-        docs = read_table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "text"
-        )
-        lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-        span = (int(hi) - int(lo) + n_chunks) // n_chunks
-        for i in range(n_chunks):  # sequential writes → mtime order
-            docs.filter(
-                (F.col("doc_id") >= int(lo) + i * span)
-                & (F.col("doc_id") < int(lo) + (i + 1) * span)
-            ).coalesce(1).write.mode("append").parquet(work)
-        open(os.path.join(work, "_STAGED"), "w").close()
-    return (
-        spark.readStream.schema("doc_id long, source string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(work)
-    )
+    return _replay_stream(spark, sf_dir, "documents", n_chunks)
 
 
 @query(

@@ -201,11 +201,15 @@ def test_resample_grid_contiguous_and_bounded(spark, sf_smoke):
 def test_events_reader_normalizes_both_timestamp_vintages(spark, tmp_path):
     """io.read_table / streaming stream must yield plain TIMESTAMP `ts`
     for BOTH fixture vintages: TIMESTAMP(NANOS) (round-1 testdata) and
-    TIMESTAMP(MICROS, isAdjustedToUTC=false) → TIMESTAMP_NTZ (round-2)."""
+    TIMESTAMP(MICROS, isAdjustedToUTC=false) → TIMESTAMP_NTZ (round-2).
+    Neither path may leave the nanos-as-long reader flag on the shared
+    session."""
     import datetime
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+
+    from hive_reflex_spark.streaming.ops import run_to_memory, stream_events
 
     base = datetime.datetime(2024, 1, 1, 12, 0, 0)
     stamps = [base + datetime.timedelta(seconds=i) for i in range(4)]
@@ -223,19 +227,54 @@ def test_events_reader_normalizes_both_timestamp_vintages(spark, tmp_path):
             {**cols, "ts": pa.array(stamps, pa.timestamp(unit))}
         )
         pq.write_table(tbl, str(d / "events.parquet"))
-        df = read_table(spark, str(d), "events")
-        assert dict(df.dtypes)["ts"] == "timestamp", unit
-        got = [
-            r["us"]
-            for r in df.select(
-                F.unix_micros("ts").alias("us")
-            ).orderBy("us").collect()
-        ]
         want = [
             int(s.replace(tzinfo=datetime.timezone.utc).timestamp() * 1e6)
             for s in stamps
         ]
-        assert got == want, unit
+        batch = read_table(spark, str(d), "events")
+        streamed = run_to_memory(stream_events(spark, str(d)), mode="append")
+        for path, df in (("batch", batch), ("stream", streamed)):
+            assert dict(df.dtypes)["ts"] == "timestamp", (unit, path)
+            got = [
+                r["us"]
+                for r in df.select(
+                    F.unix_micros("ts").alias("us")
+                ).orderBy("us").collect()
+            ]
+            assert got == want, (unit, path)
+        conf = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
+        assert conf is None, (unit, conf)
+
+
+def test_log_shipping_replays_in_full_on_every_call(spark, sf_smoke, tmp_path):
+    """Each call into the same out_dir replays the whole stream: the
+    replay's checkpoint belongs to the call, not to the out_dir."""
+    from hive_reflex_spark.streaming.ops import batched_log_shipping
+
+    n_src = read_table(spark, sf_smoke, "events").count()
+    for call in (1, 2):
+        paths = batched_log_shipping(spark, sf_smoke, str(tmp_path))
+        assert paths, call
+        shipped = spark.read.json(paths)
+        assert shipped.count() == n_src, call
+        assert shipped.select("event_id").distinct().count() == n_src, call
+
+
+def test_memory_sink_replays_leave_no_views(spark, sf_smoke):
+    """q62 built three times registers no lasting memory-sink view, and
+    each returned frame still reads the same rows after its view is
+    dropped."""
+    import __spark_entry__ as entrymod
+
+    q62 = entrymod.queries()["q62_streaming_hourly"]
+    frames = [q62(spark, sf_smoke) for _ in range(3)]
+    views = [
+        t.name for t in spark.catalog.listTables()
+        if t.name.startswith("hrs_mem_")
+    ]
+    assert views == []
+    rows = [sorted(map(tuple, df.collect())) for df in frames]
+    assert rows[0] and rows[0] == rows[1] == rows[2]
 
 
 def test_resize_payload_matches_numpy_pooling(spark):
