@@ -49,6 +49,9 @@ from hive_reflex_spark import registry as _registry
 # q101/q147, q160/q160a/q160b, q246a/q246b, q54/q158 — same plan (plan
 # fingerprints byte-identical before/after), same oracle string. q297's
 # waist now goes through maybe_local_checkpoint (same localCheckpoint).
+# The IVF coarse quantizer (similarity._coarse_ranked): q54a and q106 —
+# same plan (fingerprints byte-identical), same oracle string; its other
+# callers q54b, q102b and q269 already ride window slots below.
 # Bounded stream replays (one stager, one drain in streaming/ops.py): q62,
 # q63, q64, q97, q101, q104, q121, q147, q171, q172, q250a, q265a, q268a,
 # q290a — the same rows by construction (io.read_table's frame, staged

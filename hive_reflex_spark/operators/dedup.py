@@ -708,8 +708,8 @@ def q51a_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     via the coordinate join. Exactness baseline, FENCED: the registered
     query compares only vec_id < NEARDUP_CORPUS_CAP (512) so no registered
     plan is unbounded O(n²) — at 100 TB the same threshold runs inside LSH
-    buckets (similarity.lsh_ann_topk) so only near-colliding vectors are
-    ever compared."""
+    buckets (the q178/q228 bucket probe) so only near-colliding vectors
+    are ever compared."""
     from hive_reflex_spark.functions import exact_sum
     from hive_reflex_spark.operators.tensor import embedding_coords
 
@@ -751,6 +751,7 @@ SEMDEDUP_TAU = 0.4  # fixture-calibrated: the gaussian tail (same as q51a)
 
 from hive_reflex_spark.operators.similarity import (  # noqa: E402
     N_CENTROIDS_STRIDE as _SEM_STRIDE,
+    _coarse_ranked,
 )
 
 
@@ -841,15 +842,6 @@ def q269_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_reflex_spark.operators.tensor import embedding_coords
 
     coords = embedding_coords(spark, sf_dir).select("vec_id", "dim", "v")
-    cents = coords.filter(
-        F.col("vec_id") % _SEM_STRIDE == 0
-    ).select(F.col("vec_id").alias("cid"), "dim", F.col("v").alias("cv"))
-    cdots = (
-        coords.join(F.broadcast(cents), "dim")
-        .groupBy("vec_id", "cid")
-        .agg(exact_sum(F.col("v") * F.col("cv"), 9).alias("dot"))
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("dot"), "cid")
     # (vec_id, cid) assignment and per-vector norms are each referenced
     # twice downstream (ac self-join legs + members; na/nb broadcasts) —
     # materialized so the corpus-scale IVF assignment and the norm
@@ -857,7 +849,7 @@ def q269_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Corpus tier (r13): one row per vector — lazy persist keeps lineage
     # (executor-loss-recoverable at cluster scale) and evictable blocks
     assign = (
-        cdots.withColumn("rn", F.row_number().over(w))
+        _coarse_ranked(coords)
         .filter(F.col("rn") == 1)
         .select("vec_id", "cid")
         .transform(corpus_checkpoint)

@@ -7,9 +7,14 @@ Three tiers, trading exactness for scale:
 2. q52 JVM array fast path — zip_with/aggregate fold over the arrays,
    no explode, no per-dim shuffle rows; the per-row cost is a tight
    codegen loop. Same results, ~64× fewer intermediate rows.
-3. q53 random-hyperplane LSH buckets — the ANN scale path: 8 signed
-   projections → 8-bit bucket; at 100 TB only same-bucket vectors are
-   compared (the bucket is the join key), turning ANN into an equi-join.
+3. ANN indexes, each with ONE search path — its registered,
+   oracle-checked query:
+   - q53 random-hyperplane LSH buckets: 8 signed projections → 8-bit
+     bucket; q178/q228 probe it with one equi-join on bucket, so only
+     near-colliding vectors are compared;
+   - IVF: one coarse quantizer (:func:`_coarse_ranked`, stride-seeded
+     centroids, max-dot) assigns (q54a, q106, q269) and probes
+     (q54b; q102b composes it with q102a's PQ ADC scoring).
 
 Hyperplanes are pseudo-random but engine-portable: the sign of plane p at
 dim d is derived from a hex digit of md5(p||':'||d).
@@ -330,7 +335,7 @@ def q53_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def lsh_bucket_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, bucket): the LSH index itself — the precomputed structure
-    every ANN probe joins against, shared by q53 and lsh_ann_topk and
+    every ANN probe joins against, shared by q53, q178 and q228 and
     persisted once in bench mode (an ANN index is built once, probed many
     times)."""
     from hive_reflex_spark.io import cached_df
@@ -383,88 +388,60 @@ def _lsh_bucket_assignment_cold(spark: SparkSession, sf_dir: str) -> DataFrame:
     return proj.select("vec_id", bucket.alias("bucket"))
 
 
-def lsh_ann_topk(
-    spark: SparkSession,
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = TOP_K,
-) -> DataFrame:
-    """Library scale path: bucket both sides with the q53 hyperplanes and
-    join on bucket before scoring — only same-bucket candidates are ranked.
-    (Recall < 1 by construction; multiply probe buckets for higher recall.)
-    """
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-    def with_bucket(df: DataFrame, id_col: str) -> DataFrame:
-        # same driver-side broadcast sign matrix as q53: signs are model
-        # constants, so no per-row md5 and no planes × dims row explosion
-        import hashlib
-
-        n_dims = int(df.select(F.size("e").alias("n")).first()["n"])
-        sign_rows = [
-            tuple(
-                [d]
-                + [
-                    -1.0
-                    if hashlib.md5(f"{p}:{d}".encode()).hexdigest()[0] >= "8"
-                    else 1.0
-                    for p in range(N_PLANES)
-                ]
-            )
-            for d in range(n_dims)
-        ]
-        schema = "dim int, " + ", ".join(
-            f"s{p} double" for p in range(N_PLANES)
-        )
-        signs = spark.createDataFrame(sign_rows, schema)
-        coords = df.select(F.col(id_col), F.posexplode("e").alias("dim", "v"))
-        proj = (
-            coords.join(F.broadcast(signs), "dim")
-            .groupBy(id_col)
-            .agg(
-                *[
-                    exact_sum(F.col("v") * F.col(f"s{p}"), 9).alias(f"proj{p}")
-                    for p in range(N_PLANES)
-                ]
-            )
-        )
-        bucket = sum(
-            [
-                F.when(F.col(f"proj{p}") > 0, F.lit(1 << p)).otherwise(F.lit(0))
-                for p in range(N_PLANES)
-            ],
-            F.lit(0),
-        ).cast("long")
-        return df.join(proj.select(id_col, bucket.alias("bucket")), id_col)
-
-    corpus_b = with_bucket(emb, "vec_id")
-    queries_b = with_bucket(queries, "query_id")
-    norm = lambda a: F.sqrt(dot(a, a))  # noqa: E731
-    qe = queries_b.select("query_id", F.col("e").alias("qe"), "bucket")
-    scored = (
-        corpus_b.join(F.broadcast(qe), "bucket")
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (dot(F.col("qe"), F.col("e")) / (norm(F.col("qe")) * norm(F.col("e"))))
-            .alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(
-        F.col("rnk") <= k
-    )
-
-
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN: coarse quantizer + cluster-restricted search
 # ---------------------------------------------------------------------------
 
 N_CENTROIDS_STRIDE = 50  # centroids = vec_id % 50 == 0 (deterministic seed)
 N_PROBE = 2
+
+
+def _coarse_ranked(coords: DataFrame, cid: str = "cid") -> DataFrame:
+    """The IVF coarse quantizer: (vec_id, <cid>, dot, rn) — every vector
+    of the (vec_id, dim, v) coordinate frame scored against the stride
+    seed centroids (vec_id % N_CENTROIDS_STRIDE == 0) by exact_sum dot,
+    ranked by (dot desc, cid). rn = 1 is the vector's cluster, rn <= n
+    its n nearest. One corpus × centroids coordinate join — centroids
+    broadcast, corpus streams; embeddings are ~unit-norm, so max-dot ≡
+    max-cosine. ``cid`` names the cluster column (q102b's is ``ccid``,
+    beside its PQ code ``cid``)."""
+    cents = coords.filter(
+        F.col("vec_id") % N_CENTROIDS_STRIDE == 0
+    ).select(F.col("vec_id").alias(cid), "dim", F.col("v").alias("cv"))
+    w = Window.partitionBy("vec_id").orderBy(F.desc("dot"), cid)
+    return (
+        coords.join(F.broadcast(cents), "dim")
+        .groupBy("vec_id", cid)
+        .agg(exact_sum(F.col("v") * F.col("cv"), 9).alias("dot"))
+        .withColumn("rn", F.row_number().over(w))
+    )
+
+
+def _probe_candidates(
+    coords: DataFrame, n_queries: int, cid: str = "cid"
+) -> DataFrame:
+    """(<cid>, query_id, vec_id): the IVF probe — each query vector
+    (vec_id < n_queries) paired with every other vector assigned to one
+    of its N_PROBE nearest clusters. One materialized pass keeps the
+    assignment rows plus the queries' probe rows (corpus tier: one row
+    per vector), so the corpus-scale scoring window runs once, not once
+    per reference; each consumer re-applies its own predicate. The probe
+    list is tiny and broadcasts; the assignment streams."""
+    is_probe = (F.col("vec_id") < n_queries) & (F.col("rn") <= N_PROBE)
+    keep = corpus_checkpoint(
+        _coarse_ranked(coords, cid)
+        .filter((F.col("rn") == 1) | is_probe)
+        .select("vec_id", cid, "rn")
+    )
+    assign = keep.filter(F.col("rn") == 1).select("vec_id", cid)
+    probes = keep.filter(is_probe).select(
+        F.col("vec_id").alias("query_id"), cid
+    )
+    return (
+        F.broadcast(probes)
+        .join(assign, cid)
+        .filter(F.col("query_id") != F.col("vec_id"))
+    )
 
 
 @query(
@@ -490,25 +467,12 @@ N_PROBE = 2
 )
 def q54a_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF coarse quantization (the inverted-file ANN tier next to LSH):
-    every vector assigned to its max-dot centroid (deterministic seed
-    centroids: vec_id multiples of 50). The assignment is one
-    corpus × centroids coordinate join — centroids broadcast, corpus
-    streams; the resulting cluster id becomes the partition key for
-    cluster-restricted search (ivf_topk below). Embeddings are ~unit-norm
-    so max-dot ≡ max-cosine."""
-    coords = embedding_coords(spark, sf_dir)
-    cents = coords.filter(
-        F.col("vec_id") % N_CENTROIDS_STRIDE == 0
-    ).select(F.col("vec_id").alias("cid"), "dim", F.col("v").alias("cv"))
-    dots = (
-        coords.join(F.broadcast(cents), "dim")
-        .groupBy("vec_id", "cid")
-        .agg(exact_sum(F.col("v") * F.col("cv"), 9).alias("dot"))
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("dot"), "cid")
-    assign = (
-        dots.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+    every vector assigned to its max-dot centroid by the shared coarse
+    quantizer (deterministic seed centroids: vec_id multiples of 50);
+    the resulting cluster id becomes the partition key for the
+    cluster-restricted search q54b."""
+    assign = _coarse_ranked(embedding_coords(spark, sf_dir)).filter(
+        F.col("rn") == 1
     )
     return assign.groupBy(F.col("cid").alias("centroid_id")).agg(
         F.count("*").alias("n_assigned"),
@@ -568,47 +532,16 @@ def q54a_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q54b_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN search end-to-end, driver-checked: centroid scoring →
-    corpus assignment → per-query n_probe cluster probe → exact cosine
+    """IVF ANN search end-to-end, driver-checked — the IVF index's one
+    search path: centroid scoring → corpus assignment → per-query
+    n_probe cluster probe (:func:`_probe_candidates`) → exact cosine
     rank restricted to probed clusters. The cluster id is the partition
     key, so at 100 TB each query only touches n_probe/n_centroids of the
     corpus. Coordinate/exact_sum formulation for engine-deterministic
-    floats; the array-fold `ivf_topk` below is the throughput path
-    (recall-tested against brute force)."""
+    floats; recall against q51's brute force is tested."""
     coords = embedding_coords(spark, sf_dir)
-    cents = coords.filter(
-        F.col("vec_id") % N_CENTROIDS_STRIDE == 0
-    ).select(F.col("vec_id").alias("cid"), "dim", F.col("v").alias("cv"))
-    cdots = (
-        coords.join(F.broadcast(cents), "dim")
-        .groupBy("vec_id", "cid")
-        .agg(exact_sum(F.col("v") * F.col("cv"), 9).alias("dot"))
-    )
-    wv = Window.partitionBy("vec_id").orderBy(F.desc("dot"), "cid")
-    ranked = cdots.withColumn("rn", F.row_number().over(wv))
-    # one materialized pass keeps the assignment rows + the queries'
-    # probe rows — the r11 shape referenced ranked twice and re-ran the
-    # corpus-scale centroid scoring per reference; the downstream
-    # filters re-apply their own predicates (r12, guide §3.3/§5).
-    # Corpus tier (r13): one row per vector
-    keep = corpus_checkpoint(
-        ranked.filter(
-            (F.col("rn") == 1)
-            | ((F.col("vec_id") < N_QUERIES) & (F.col("rn") <= N_PROBE))
-        ).select("vec_id", "cid", "rn")
-    )
-    assign = keep.filter(F.col("rn") == 1).select("vec_id", "cid")
-    probes = (
-        keep.filter(
-            (F.col("vec_id") < N_QUERIES) & (F.col("rn") <= N_PROBE)
-        )
-        .select(F.col("vec_id").alias("query_id"), "cid")
-    )
-    cand = (
-        F.broadcast(probes)
-        .join(assign, "cid")
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
+    cand = _probe_candidates(coords, N_QUERIES).select(
+        "query_id", F.col("vec_id").alias("neighbor_id")
     )
     # per-vector norms feed both broadcast legs — materialized
     # (corpus tier r13: one row per vector)
@@ -643,62 +576,6 @@ def q54b_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.withColumn("rnk", F.row_number().over(wr).cast("long"))
         .filter(F.col("rnk") <= TOP_K)
-    )
-
-
-def ivf_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    query_ids: list[int],
-    k: int = TOP_K,
-    n_probe: int = N_PROBE,
-) -> DataFrame:
-    """IVF search: score queries against centroids, probe the n_probe
-    nearest clusters, rank only vectors assigned there — the
-    corpus-partitioned ANN that replaces brute force at 100 TB (recall
-    governed by n_probe; tests measure it against q51)."""
-    emb = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    norm = lambda a: F.sqrt(dot(a, a))  # noqa: E731
-    cents = emb.filter(F.col("vec_id") % N_CENTROIDS_STRIDE == 0).select(
-        F.col("vec_id").alias("cid"), F.col("e").alias("ce")
-    )
-    # corpus -> cluster assignment (broadcasted centroid scoring)
-    wv = Window.partitionBy("vec_id").orderBy(F.desc("cdot"), "cid")
-    assigned = (
-        emb.join(F.broadcast(cents))
-        .withColumn("cdot", dot(F.col("e"), F.col("ce")))
-        .withColumn("rn", F.row_number().over(wv))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "e", "cid")
-    )
-    queries = emb.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("qdot"), "cid")
-    probes = (
-        queries.join(F.broadcast(cents))
-        .withColumn("qdot", dot(F.col("qe"), F.col("ce")))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
-        .select("query_id", "qe", "cid")
-    )
-    wr = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        assigned.join(F.broadcast(probes), "cid")
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (dot(F.col("qe"), F.col("e")) / (norm(F.col("qe")) * norm(F.col("e"))))
-            .alias("cosine"),
-        )
-        .withColumn("rnk", F.row_number().over(wr))
-        .filter(F.col("rnk") <= k)
     )
 
 
@@ -1174,26 +1051,23 @@ def pq_topk(
     sf_dir: str,
     query_ids: list[int],
     k: int = TOP_K,
-    exact: bool = False,
     cand: DataFrame | None = None,
 ) -> DataFrame:
     """PQ search by Asymmetric Distance Computation (ADC): the query
     scores each codebook entry ONCE (a k x M distance table, M=4
     subspaces), then every corpus vector's approximate L2 distance is
     just the sum of M table lookups over its stored codes — the original
-    vectors are never touched at scoring time.
-
-    ``exact=True`` switches both aggregations to the rounded
-    integer-unit form (order-independent) so results can cross the
-    DuckDB oracle boundary — the q102a path; the default float sums are
-    the fast production path.
+    vectors are never touched at scoring time. Both aggregations are
+    rounded integer-unit sums (order-independent), so the results cross
+    the DuckDB oracle boundary (q102a; q102b with ``cand``).
 
     Scale shape: the distance table (n_queries x k x M rows) broadcasts;
     the codes table (n x M rows, ~4 bytes/vector of true payload) is the
     only big operand and it streams through one hash join + one
-    aggregation. At 100 TB this composes with IVF (q54b) — probe clusters
-    first, ADC-score only the probed partitions. Recall vs exact L2 is
-    measured in pytest (approximation governed by codebook size)."""
+    aggregation. At 100 TB this composes with IVF (q102b) — probe
+    clusters first, ADC-score only the probed partitions. Recall vs
+    exact L2 is measured in pytest (approximation governed by codebook
+    size)."""
     coords = _pq_coords(spark, sf_dir)
     codebook, assignment, _ = pq_train(spark, coords)
     codes = assignment.select("vec_id", "sub", "cid")
@@ -1202,16 +1076,10 @@ def pq_topk(
         F.col("v").alias("qv"),
     )
     sq = (F.col("qv") - F.col("cv")) * (F.col("qv") - F.col("cv"))
-    dpart_agg = (
-        F.round(exact_sum(sq, 9), 6) if exact else F.sum(sq)
-    ).alias("dpart")
-    adist_agg = (
-        exact_sum(F.col("dpart"), 6) if exact else F.sum("dpart")
-    ).alias("adist")
     dtab = (
         q.join(F.broadcast(codebook), ["sub", "dim"])
         .groupBy("query_id", "sub", "cid")
-        .agg(dpart_agg)
+        .agg(F.round(exact_sum(sq, 9), 6).alias("dpart"))
     )
     wr = Window.partitionBy("query_id").orderBy(
         F.asc("adist"), F.asc("neighbor_id")
@@ -1227,7 +1095,7 @@ def pq_topk(
         base = codes.join(F.broadcast(dtab), ["sub", "cid"])
     return (
         base.groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(adist_agg)
+        .agg(exact_sum(F.col("dpart"), 6).alias("adist"))
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("rnk", F.row_number().over(wr).cast("long"))
         .filter(F.col("rnk") <= k)
@@ -1236,16 +1104,14 @@ def pq_topk(
 
 @query("q102a_pq_adc_topk", oracle=_pq_adc_oracle())
 def q102a_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-checked ADC search: :func:`pq_topk` in exact-sum mode for
-    the first 4 vectors as queries — distance table from the trained
-    codebooks, approximate L2 as the order-independent integer-unit sum
+    """Driver-checked ADC search: :func:`pq_topk` for the first 4
+    vectors as queries — distance table from the trained codebooks,
+    approximate L2 as the order-independent integer-unit sum
     of 4 code lookups, ranked top-5 per query. The oracle extends the
     q102 CTE chain with the distance table and the lookup aggregation,
     so the entire IVF-PQ scoring path (train -> encode -> ADC rank) is
     hash-checked end to end."""
-    return pq_topk(
-        spark, sf_dir, list(range(PQ_N_QUERIES)), k=TOP_K, exact=True
-    )
+    return pq_topk(spark, sf_dir, list(range(PQ_N_QUERIES)), k=TOP_K)
 
 
 def _ivfpq_oracle() -> str:
@@ -1295,150 +1161,17 @@ def _ivfpq_oracle() -> str:
 
 @query("q102b_ivfpq_topk", oracle=_ivfpq_oracle())
 def q102b_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-checked IVF-PQ: coarse probing (pinned max-dot assignment,
-    the q54a/q54b quantizer) restricts each query to N_PROBE clusters,
-    then the q102a exact-mode ADC scores ONLY the restricted candidates
-    from their PQ codes. Every stage of the production billion-vector
-    composition — coarse train/assign/probe, PQ train/encode, distance
-    table, candidate-restricted ranking — hash-checks against one CTE
-    graph. `ivfpq_topk` below stays the float-fold throughput path."""
-    coords = _pq_coords(spark, sf_dir)
-    cents = coords.filter(
-        F.col("vec_id") % N_CENTROIDS_STRIDE == 0
-    ).select(F.col("vec_id").alias("ccid"), "dim", F.col("v").alias("cv"))
-    cdots = (
-        coords.join(F.broadcast(cents), "dim")
-        .groupBy("vec_id", "ccid")
-        .agg(exact_sum(F.col("v") * F.col("cv"), 9).alias("dot"))
-    )
-    wv = Window.partitionBy("vec_id").orderBy(F.desc("dot"), "ccid")
-    cranked = cdots.withColumn("rn", F.row_number().over(wv))
-    # one materialized pass keeps exactly the rows either consumer needs
-    # (assignment rn=1 rows + the queries' probe rows) — the r11 shape
-    # referenced cranked twice and re-ran the corpus-scale coarse
-    # scoring window per reference (r12, guide §3.3/§5); the downstream
-    # filters re-apply their own predicates, so values are identical.
-    # Corpus tier (r13): one row per vector
-    keep = corpus_checkpoint(
-        cranked.filter(
-            (F.col("rn") == 1)
-            | ((F.col("vec_id") < PQ_N_QUERIES) & (F.col("rn") <= N_PROBE))
-        ).select("vec_id", "ccid", "rn")
-    )
-    cassign = keep.filter(F.col("rn") == 1).select("vec_id", "ccid")
-    probes = keep.filter(
-        (F.col("vec_id") < PQ_N_QUERIES) & (F.col("rn") <= N_PROBE)
-    ).select(F.col("vec_id").alias("query_id"), "ccid")
-    cand = (
-        F.broadcast(probes)
-        .join(cassign, "ccid")
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select("query_id", "vec_id")
-    )
+    """Driver-checked IVF-PQ: coarse probing (the q54b probe,
+    :func:`_probe_candidates`) restricts each query to N_PROBE clusters,
+    then the q102a ADC scores ONLY the restricted candidates from their
+    PQ codes. Every stage of the production billion-vector composition —
+    coarse train/assign/probe, PQ train/encode, distance table,
+    candidate-restricted ranking — hash-checks against one CTE graph."""
+    cand = _probe_candidates(
+        _pq_coords(spark, sf_dir), PQ_N_QUERIES, cid="ccid"
+    ).select("query_id", "vec_id")
     return pq_topk(
-        spark, sf_dir, list(range(PQ_N_QUERIES)), k=TOP_K, exact=True,
-        cand=cand,
-    )
-
-
-def ivfpq_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    query_ids: list[int],
-    k: int = TOP_K,
-    n_probe: int = N_PROBE,
-) -> DataFrame:
-    """IVF-PQ: the full billion-vector production composition — coarse
-    IVF probing restricts each query to ``n_probe`` clusters, then PQ
-    ADC scores only the restricted candidates from their 4-byte codes.
-
-    Memory/IO shape at 100 TB: the index is codes (4 B/vector) + two
-    small broadcast tables (coarse centroids, PQ codebooks). A query
-    touches n_probe/k_coarse of the code stream and never the original
-    vectors. Both approximations compose: recall is governed by n_probe
-    x codebook size, measured against full ADC in pytest."""
-    emb = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    cents = emb.filter(F.col("vec_id") % N_CENTROIDS_STRIDE == 0).select(
-        F.col("vec_id").alias("coarse_cid"), F.col("e").alias("ce")
-    )
-    # corpus -> coarse cluster (L2 argmin, matching the PQ distance space)
-    l2 = F.aggregate(
-        F.zip_with(
-            F.col("e"), F.col("ce"), lambda x, y: (x - y) * (x - y)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wv = Window.partitionBy("vec_id").orderBy("cd2", "coarse_cid")
-    assigned = (
-        emb.join(F.broadcast(cents))
-        .withColumn("cd2", l2)
-        .withColumn("rn", F.row_number().over(wv))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "coarse_cid")
-    )
-    # query -> n_probe nearest coarse clusters
-    queries = emb.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    wq = Window.partitionBy("query_id").orderBy("qd2", "coarse_cid")
-    ql2 = F.aggregate(
-        F.zip_with(
-            F.col("qe"), F.col("ce"), lambda x, y: (x - y) * (x - y)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    probes = (
-        queries.join(F.broadcast(cents))
-        .withColumn("qd2", ql2)
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
-        .select("query_id", "coarse_cid")
-    )
-    # PQ codes + per-query distance table (the ADC machinery)
-    coords = _pq_coords(spark, sf_dir)
-    codebook, assignment, _ = pq_train(spark, coords)
-    codes = assignment.select("vec_id", "sub", "cid")
-    q = coords.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), "sub", "dim",
-        F.col("v").alias("qv"),
-    )
-    dtab = (
-        q.join(F.broadcast(codebook), ["sub", "dim"])
-        .groupBy("query_id", "sub", "cid")
-        .agg(
-            F.sum(
-                (F.col("qv") - F.col("cv")) * (F.col("qv") - F.col("cv"))
-            ).alias("dpart")
-        )
-    )
-    # candidate restriction: (query, vector) pairs whose coarse cluster
-    # is probed — the broadcast probe list prunes the code stream BEFORE
-    # any scoring work
-    cand = assigned.join(F.broadcast(probes), "coarse_cid").select(
-        "query_id", "vec_id"
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.asc("adist"), F.asc("neighbor_id")
-    )
-    # cand scales with the corpus (~n_queries * n/k_coarse * n_probe rows),
-    # so it joins as a plain shuffle hash join on vec_id — only the two
-    # genuinely small tables (probe list above, distance table here)
-    # broadcast at 100 TB
-    return (
-        codes.join(cand, "vec_id")
-        .join(F.broadcast(dtab), ["query_id", "sub", "cid"])
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("dpart").alias("adist"))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("rnk", F.row_number().over(wr))
-        .filter(F.col("rnk") <= k)
+        spark, sf_dir, list(range(PQ_N_QUERIES)), k=TOP_K, cand=cand
     )
 
 
@@ -1477,22 +1210,12 @@ def q106_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     of embedding space are downsampled hardest while small clusters
     survive whole.
 
-    Same shape as q54a's assignment (broadcast centroids, corpus
-    streams) plus ONE window over the cluster partitioning — the keep
-    decision never leaves the cluster's partition, so the sample scales
-    with the corpus, not with pairwise comparisons."""
-    coords = embedding_coords(spark, sf_dir)
-    cents = coords.filter(
-        F.col("vec_id") % N_CENTROIDS_STRIDE == 0
-    ).select(F.col("vec_id").alias("cid"), "dim", F.col("v").alias("cv"))
-    dots = (
-        coords.join(F.broadcast(cents), "dim")
-        .groupBy("vec_id", "cid")
-        .agg(exact_sum(F.col("v") * F.col("cv"), 9).alias("dot"))
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("dot"), "cid")
+    q54a's assignment (the shared coarse quantizer) plus ONE window
+    over the cluster partitioning — the keep decision never leaves the
+    cluster's partition, so the sample scales with the corpus, not with
+    pairwise comparisons."""
     assign = (
-        dots.withColumn("rn", F.row_number().over(w))
+        _coarse_ranked(embedding_coords(spark, sf_dir))
         .filter(F.col("rn") == 1)
         .select("vec_id", "cid", "dot")
     )

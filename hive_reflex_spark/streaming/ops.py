@@ -672,7 +672,9 @@ def ota_feedback_loop(
     chunk — the reference's collect/optimize/wait cycle with micro-batches
     as the clock. Every gate mirrors the reference: <100 samples skips
     (ai_feedback.py:449-451), confidence < 0.7 skips (:456-458), versions
-    increment 2.1.N (:469-471). Returns the loop summary."""
+    increment 2.1.N (:469-471). Each call starts a fresh log in
+    ``out_dir``, so the log holds exactly this run's iterations. Returns
+    the loop summary."""
     os.makedirs(out_dir, exist_ok=True)
     if weights is None:
         # seed model: ReflexNet-shaped fc layer as a coordinate table
@@ -685,6 +687,7 @@ def ota_feedback_loop(
 
     state = {"version": 0, "current": weights.persist(), "log": []}
     log_path = os.path.join(out_dir, "feedback_log.jsonl")
+    open(log_path, "w").close()
 
     def step(batch_df: DataFrame, epoch_id: int) -> None:
         from hive_reflex_spark.sources.sinks import (
@@ -1300,11 +1303,13 @@ def q172_log_shipping_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = scratch_path("logship", hashlib.md5(sf_dir.encode()).hexdigest()[:8])
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
-    batched_log_shipping(spark, sf_dir, work)
+    # read the shipped paths, not a batch_* glob: a glob path makes the
+    # file source stat it for a _spark_metadata dir and log a
+    # FileNotFoundException on every build
     back = spark.read.schema(
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string, epoch long"
-    ).json(os.path.join(work, "batch_*"))
+    ).json(batched_log_shipping(spark, sf_dir, work))
     return back.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.min("event_id").alias("min_event"),

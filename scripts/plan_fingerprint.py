@@ -2,7 +2,8 @@
 """Structural plan fingerprint for plan-identity checks (guide §7.2):
 
 prints, per query, the result schema plus the formatted physical plan
-with expression IDs (#123), plan IDs and codegen IDs stripped — two
+with expression IDs (#123), plan IDs, codegen IDs and the per-process
+scratch root (``hrs_*``, see ``session.scratch_path``) stripped — two
 builder variants that analyze to the same tree produce byte-identical
 fingerprints. Used to prove a py4j-chatter rewrite (selectExpr batching)
 changed HOW the plan is built, not WHAT is built.
@@ -44,6 +45,7 @@ def main() -> int:
             plan = re.sub(r"#\d+", "#x", plan)
             plan = re.sub(r"plan_id=\d+", "plan_id=x", plan)
             plan = re.sub(r"\[codegen id : \d+\]", "[codegen id : x]", plan)
+            plan = re.sub(r"(?<=/)hrs_[a-z0-9_]{8}(?![a-z0-9_])", "hrs_x", plan)
             fh.write(f"==== {name}\nschema: {df.schema.simpleString()}\n")
             fh.write(plan)
             fh.write("\n")

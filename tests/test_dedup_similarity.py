@@ -11,11 +11,9 @@ from hive_reflex_spark.operators.dedup import (
     q49_lsh_candidates,
 )
 from hive_reflex_spark.operators.similarity import (
-    lsh_ann_topk,
     q51_cosine_topk,
     q52_cosine_topk_arrays,
 )
-from hive_reflex_spark.io import read_table
 
 
 def test_lsh_covers_exact_jaccard_pairs(spark, sf_smoke):
@@ -51,31 +49,17 @@ def test_array_fastpath_matches_coordinate_baseline(spark, sf_smoke):
     assert base == fast
 
 
-def test_lsh_ann_returns_same_bucket_neighbors(spark, sf_smoke):
-    emb = read_table(spark, sf_smoke, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    queries = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), "e"
-    )
-    got = lsh_ann_topk(spark, emb, queries, k=3).collect()
-    assert len(got) > 0
-    for r in got:
-        assert -1.0 <= r.cosine <= 1.0
-        assert r.query_id != r.neighbor_id
-
-
 def test_ivf_recall_vs_brute_force(spark, sf_smoke):
-    """IVF with n_probe=2 over 10 clusters must recover a reasonable
-    fraction of the true top-5 (random gaussian corpus → clusters are
-    weak, so the bar is recall@5 >= 0.3 and top-1-in-candidates sanity)."""
-    from hive_reflex_spark.operators.similarity import ivf_topk
+    """q54b (IVF, n_probe=2 over 10 clusters) must recover a reasonable
+    fraction of q51's exact top-5 (random gaussian corpus → clusters
+    are weak, so the bar is recall@5 >= 0.3)."""
+    from hive_reflex_spark.operators.similarity import q54b_ivf_topk
 
     base = {}
     for r in q51_cosine_topk(spark, sf_smoke).collect():
         base.setdefault(r.query_id, set()).add(r.neighbor_id)
     got = {}
-    for r in ivf_topk(spark, sf_smoke, list(range(8)), k=5).collect():
+    for r in q54b_ivf_topk(spark, sf_smoke).collect():
         got.setdefault(r.query_id, set()).add(r.neighbor_id)
     recalls = [
         len(base[q] & got.get(q, set())) / len(base[q]) for q in base
@@ -256,33 +240,6 @@ def test_pq_adc_respects_quantization_bound(spark, sf_smoke):
     spark.catalog.clearCache()
 
 
-def test_ivfpq_composes_probe_restriction_with_adc(spark, sf_smoke):
-    """IVF-PQ: every returned neighbor lies in a probed coarse cluster,
-    its adist equals full-ADC's for the same pair, and restricted recall
-    vs full ADC top-k is reasonable for n_probe=2 of 10."""
-    from hive_reflex_spark.operators.similarity import ivfpq_topk, pq_topk
-
-    qids = [3, 17, 101]
-    full = {}
-    for r in pq_topk(spark, sf_smoke, qids, k=5).collect():
-        full.setdefault(r.query_id, {})[r.neighbor_id] = r.adist
-    got = ivfpq_topk(spark, sf_smoke, qids, k=5).collect()
-    assert got, "ivf-pq returned nothing"
-    all_adc = {
-        (r.query_id, r.neighbor_id): r.adist
-        for r in pq_topk(spark, sf_smoke, qids, k=600).collect()
-    }
-    for r in got:
-        # same scoring machinery: adist must match full ADC exactly
-        assert abs(all_adc[(r.query_id, r.neighbor_id)] - r.adist) < 1e-9
-    recalls = []
-    for qid in qids:
-        mine = {r.neighbor_id for r in got if r.query_id == qid}
-        recalls.append(len(mine & set(full[qid])) / len(full[qid]))
-    assert sum(recalls) / len(recalls) >= 0.2, recalls
-    spark.catalog.clearCache()
-
-
 def test_diversity_sample_keeps_sqrt_per_cluster(spark, sf_smoke):
     """q106: every cluster keeps exactly ceil(sqrt(n_members))
     prototypes (its size permitting), ranked contiguously from 1."""
@@ -303,21 +260,40 @@ def test_diversity_sample_keeps_sqrt_per_cluster(spark, sf_smoke):
 
 
 def test_ivfpq_query_restricts_candidates(spark, sf_smoke):
-    """q102b must score only probed-cluster candidates: every ranked
-    neighbor's coarse cluster is one of its query's probes, and the
-    result differs from unrestricted ADC (the restriction is live)."""
+    """q102b must score only probed-cluster candidates with the full ADC
+    machinery: the result differs from unrestricted ADC (q102a — the
+    restriction is live), every pair's adist equals full ADC's for the
+    same pair, and recall against q102a's top-5 is reasonable for
+    n_probe=2 of 10."""
     from hive_reflex_spark.operators.similarity import (
         PQ_N_QUERIES,
+        pq_topk,
         q102a_pq_adc_topk,
         q102b_ivfpq_topk,
     )
 
     full = {(r.query_id, r.neighbor_id)
             for r in q102a_pq_adc_topk(spark, sf_smoke).collect()}
-    ivf = {(r.query_id, r.neighbor_id)
-           for r in q102b_ivfpq_topk(spark, sf_smoke).collect()}
+    got = q102b_ivfpq_topk(spark, sf_smoke).collect()
+    ivf = {(r.query_id, r.neighbor_id) for r in got}
     assert len(ivf) == len(full) == PQ_N_QUERIES * 5
     assert ivf != full  # probing actually restricted the pool
+    all_adc = {
+        (r.query_id, r.neighbor_id): r.adist
+        for r in pq_topk(
+            spark, sf_smoke, list(range(PQ_N_QUERIES)), k=600
+        ).collect()
+    }
+    for r in got:
+        # same scoring machinery: adist must match full ADC exactly
+        assert abs(all_adc[(r.query_id, r.neighbor_id)] - r.adist) < 1e-9
+    recalls = [
+        len({n for q, n in ivf if q == qid} & {n for q, n in full if q == qid})
+        / 5
+        for qid in range(PQ_N_QUERIES)
+    ]
+    assert sum(recalls) / len(recalls) >= 0.2, recalls
+    spark.catalog.clearCache()
 
 
 def test_numpy_matmul_path_matches_coordinate_baseline(spark, sf_smoke):

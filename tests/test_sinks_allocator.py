@@ -194,6 +194,22 @@ def test_ota_feedback_loop_end_to_end(spark, sf_smoke):
         assert summary["final_version"] == "2.1.4"
 
 
+def test_ota_feedback_loop_log_holds_one_run(spark, sf_smoke, tmp_path):
+    """A second run into the same out_dir starts a fresh log: the log
+    holds exactly that run's iterations, and every artifact it names
+    exists."""
+    from hive_reflex_spark.streaming.ops import ota_feedback_loop
+
+    for call in (1, 2):
+        summary = ota_feedback_loop(spark, sf_smoke, str(tmp_path), n_chunks=4)
+        with open(summary["log_path"]) as f:
+            log = [json.loads(line) for line in f]
+        assert len(log) == summary["iterations"], call
+        for e in log:
+            if "artifact" in e:
+                assert os.path.exists(e["artifact"]), (call, e["artifact"])
+
+
 def test_lz4_block_roundtrip(spark):
     """C2: LZ4 block codec — round-trip on repetitive, random, empty and
     short payloads; repetitive data must actually compress; the Spark
