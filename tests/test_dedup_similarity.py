@@ -259,41 +259,65 @@ def test_diversity_sample_keeps_sqrt_per_cluster(spark, sf_smoke):
         assert sorted(r.rnk for r in kept) == list(range(1, want + 1))
 
 
-def test_ivfpq_query_restricts_candidates(spark, sf_smoke):
-    """q102b must score only probed-cluster candidates with the full ADC
-    machinery: the result differs from unrestricted ADC (q102a — the
-    restriction is live), every pair's adist equals full ADC's for the
-    same pair, and recall against q102a's top-5 is reasonable for
+def test_ivfpq_composes_probe_restriction_with_adc(spark, sf_smoke):
+    """IVF-PQ (q102b): every returned neighbor lies in one of its query's
+    probed coarse clusters, its adist equals full ADC's for the same
+    pair, and recall vs full ADC top-5 (q102a) is reasonable for
     n_probe=2 of 10."""
     from hive_reflex_spark.operators.similarity import (
+        N_PROBE,
         PQ_N_QUERIES,
+        _coarse_ranked,
+        _pq_coords,
         pq_topk,
+        q102a_pq_adc_topk,
+        q102b_ivfpq_topk,
+    )
+
+    qids = list(range(PQ_N_QUERIES))
+    full = {(r.query_id, r.neighbor_id)
+            for r in q102a_pq_adc_topk(spark, sf_smoke).collect()}
+    got = q102b_ivfpq_topk(spark, sf_smoke).collect()
+    assert got, "ivf-pq returned nothing"
+    ranked = _coarse_ranked(_pq_coords(spark, sf_smoke)).collect()
+    cluster = {r.vec_id: r.cid for r in ranked if r.rn == 1}
+    probes = {}
+    for r in ranked:
+        if r.vec_id in qids and r.rn <= N_PROBE:
+            probes.setdefault(r.vec_id, set()).add(r.cid)
+    all_adc = {
+        (r.query_id, r.neighbor_id): r.adist
+        for r in pq_topk(spark, sf_smoke, qids, k=600).collect()
+    }
+    for r in got:
+        assert cluster[r.neighbor_id] in probes[r.query_id], r
+        # same scoring machinery: adist must match full ADC exactly
+        assert abs(all_adc[(r.query_id, r.neighbor_id)] - r.adist) < 1e-9
+    recalls = [
+        len({r.neighbor_id for r in got if r.query_id == qid}
+            & {n for q, n in full if q == qid}) / 5
+        for qid in qids
+    ]
+    assert sum(recalls) / len(recalls) >= 0.2, recalls
+    spark.catalog.clearCache()
+
+
+def test_ivfpq_query_restricts_candidates(spark, sf_smoke):
+    """q102b must score only probed-cluster candidates: the result
+    differs from unrestricted ADC (q102a — the restriction is live) and
+    both rank exactly top-5 per query."""
+    from hive_reflex_spark.operators.similarity import (
+        PQ_N_QUERIES,
         q102a_pq_adc_topk,
         q102b_ivfpq_topk,
     )
 
     full = {(r.query_id, r.neighbor_id)
             for r in q102a_pq_adc_topk(spark, sf_smoke).collect()}
-    got = q102b_ivfpq_topk(spark, sf_smoke).collect()
-    ivf = {(r.query_id, r.neighbor_id) for r in got}
+    ivf = {(r.query_id, r.neighbor_id)
+           for r in q102b_ivfpq_topk(spark, sf_smoke).collect()}
     assert len(ivf) == len(full) == PQ_N_QUERIES * 5
     assert ivf != full  # probing actually restricted the pool
-    all_adc = {
-        (r.query_id, r.neighbor_id): r.adist
-        for r in pq_topk(
-            spark, sf_smoke, list(range(PQ_N_QUERIES)), k=600
-        ).collect()
-    }
-    for r in got:
-        # same scoring machinery: adist must match full ADC exactly
-        assert abs(all_adc[(r.query_id, r.neighbor_id)] - r.adist) < 1e-9
-    recalls = [
-        len({n for q, n in ivf if q == qid} & {n for q, n in full if q == qid})
-        / 5
-        for qid in range(PQ_N_QUERIES)
-    ]
-    assert sum(recalls) / len(recalls) >= 0.2, recalls
-    spark.catalog.clearCache()
 
 
 def test_numpy_matmul_path_matches_coordinate_baseline(spark, sf_smoke):
