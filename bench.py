@@ -153,15 +153,9 @@ def configure_for(spark, sf_dir: str) -> tuple[int, bool]:
     coalesces over-provisioned shuffles, so the toy floor does not
     generalize upward."""
     in_bytes = input_bytes(sf_dir)
-    n_shuffle = int(
-        os.environ.get(
-            "SPARK_GRAFT_SHUFFLE",
-            min(512, max(8, in_bytes // (12 << 20))),
-        )
-    )
+    n_shuffle = min(512, max(8, in_bytes // (12 << 20)))
     spark.conf.set("spark.sql.shuffle.partitions", str(n_shuffle))
-    aqe_env = os.environ.get("SPARK_GRAFT_AQE", "")
-    aqe_on = aqe_env == "on" or (aqe_env != "off" and in_bytes >= (1 << 30))
+    aqe_on = in_bytes >= (1 << 30)
     spark.conf.set("spark.sql.adaptive.enabled", str(aqe_on).lower())
     return n_shuffle, aqe_on
 

@@ -22,19 +22,6 @@ def exact_sum(col: Column, scale: int = 2) -> Column:
     return F.sum(F.round(col * p).cast("long")) / float(p)
 
 
-def exact_sum_unit(col: Column, scale: int = 2) -> Column:
-    """:func:`exact_sum` fast path for UNIT-EXACT NONNEGATIVE columns —
-    see :func:`spark_exact_sum_unit` for the full contract. The scaled
-    value is k ± a-few-ulps by data quantization, so floor(y+0.5) (a
-    codegen multiply-add-cast) lands on the same k as Spark's
-    per-value-BigDecimal round() and DuckDB's ROUND — no rounding
-    decision exists to disagree on. Never use on possibly-negative
-    values (cast truncates toward zero: -3 ± eps would emit -2) or on
-    expressions carrying more precision than the unit."""
-    p = 10**scale
-    return F.sum((col * p + F.lit(0.5)).cast("long")) / float(p)
-
-
 def spark_exact_sum(expr: str, scale: int = 2) -> str:
     """Spark-SQL-text twin of :func:`exact_sum` for F.expr construction.
 
@@ -67,7 +54,7 @@ def spark_exact_sum_unit(expr: str, scale: int = 2) -> str:
     and the .5-epsilon class reappears — keep :func:`spark_exact_sum`
     (its BigDecimal matches DuckDB's ROUND on the shared binary value).
     Equality with the round() form on unit-exact data is pinned by
-    test_properties.py."""
+    ``tests/test_properties.py::test_unit_exact_sum_equals_round_form``."""
     p = 10**scale
     return f"sum(CAST(({expr}) * {p} + 0.5D AS BIGINT)) / {p}.0D"
 

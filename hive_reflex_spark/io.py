@@ -7,6 +7,11 @@ Scale note: `spark.read.parquet` gives us the vectorized columnar reader
 with predicate pushdown and column pruning for free; at 100 TB the same
 call reads a partitioned directory tree and Catalyst prunes partitions.
 Nothing here collects to the driver.
+
+Session confs: these helpers read with the caller's session as it is;
+registered queries reach them already pinned to UTC and ANSI off by the
+registry wrapper. The one conf a read needs (``nanosAsLong`` for the
+nanos ``events`` vintage) is set only inside ``session.conf_scope``.
 """
 
 from __future__ import annotations
@@ -17,7 +22,7 @@ from collections import deque
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
-from hive_reflex_spark.session import pin_session
+from hive_reflex_spark.session import conf_scope
 
 TABLES = (
     "region",
@@ -218,9 +223,9 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Spark's reader by default → nanos-as-long + truncate to micros) and as
     TIMESTAMP(MICROS, isAdjustedToUTC=false) (read as TIMESTAMP_NTZ →
     cast). Either way ``ts`` comes back as a plain TIMESTAMP in the
-    UTC-pinned session, matching DuckDB's reading of the same file.
+    UTC-pinned session (the registry wrapper pins it), matching DuckDB's
+    reading of the same file.
     """
-    pin_session(spark)
     if _DF_CACHE is not None:
         return cached_df(
             ("table", sf_dir, name), lambda: _read_table_cold(spark, sf_dir, name)
@@ -231,21 +236,14 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _read_table_cold(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        conf_key = "spark.sql.legacy.parquet.nanosAsLong"
-        prev = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, "true")
-        try:
+        # Parquet has no per-read option for nanosAsLong, so scope the
+        # session conf to the read; resolve the schema inside the scope,
+        # since the relation captures the conf at analysis
+        with conf_scope(
+            spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}
+        ):
             df = spark.read.parquet(path)
-            # force plan resolution (schema read) while the conf is set;
-            # the parquet scan itself re-reads the conf at execution time,
-            # but nanosAsLong is captured into the relation at analysis
             df.schema
-        finally:
-            # scope the legacy flag: don't leak it into the shared session
-            if prev is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prev)
         from pyspark.sql import functions as F
 
         ts_type = dict(df.dtypes).get("ts")
@@ -255,8 +253,9 @@ def _read_table_cold(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type == "timestamp_ntz":
             # TIMESTAMP(MICROS, isAdjustedToUTC=false) storage: Spark 4 reads
             # NTZ, but unix_micros()/window() need TIMESTAMP. Session tz is
-            # pinned UTC (session.py), so the cast is value-preserving and
-            # matches DuckDB's naive-timestamp reading of the same file.
+            # pinned UTC (session.pin_session), so the cast is
+            # value-preserving and matches DuckDB's naive-timestamp reading
+            # of the same file.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
     return spark.read.parquet(path)
@@ -266,5 +265,4 @@ def load_tables(
     spark: SparkSession, sf_dir: str, *names: str
 ) -> dict[str, DataFrame]:
     """Read the named fixture tables (all of TABLES when none given)."""
-    pin_session(spark)
     return {n: read_table(spark, sf_dir, n) for n in (names or TABLES)}

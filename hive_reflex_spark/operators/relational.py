@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from hive_reflex_spark.functions import (
     exact_sum,
-    exact_sum_unit,
     spark_exact_sum,
     spark_exact_sum_unit,
 )

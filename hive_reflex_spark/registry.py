@@ -29,6 +29,8 @@ import functools
 from collections.abc import Callable
 from typing import Any
 
+from hive_reflex_spark.session import pin_session
+
 QUERIES: dict[str, Callable[..., Any]] = {}
 ORACLES: dict[str, str] = {}
 
@@ -43,16 +45,15 @@ def query(name: str, oracle: str | None = None):
     Every registered callable is wrapped to ``pin_session`` first: the
     driver hands us a session we did not build (observed ANSI-on), and the
     whole oracle contract assumes UTC timestamps + DuckDB-permissive
-    arithmetic. Pinning at the registry boundary covers queries that read
-    through any IO path (parquet tables, JSON configs, ONNX fixtures,
-    rate streams) — not just the parquet helpers.
+    arithmetic. The pin happens at this boundary only, on every build:
+    it covers queries that read through any IO path (parquet tables,
+    JSON configs, ONNX fixtures, rate streams), and the library functions
+    underneath leave the caller's session confs as they found them.
     """
 
     def deco(fn):
         @functools.wraps(fn)
         def pinned(spark, *args, **kwargs):
-            from hive_reflex_spark.session import pin_session
-
             pin_session(spark)
             return fn(spark, *args, **kwargs)
 

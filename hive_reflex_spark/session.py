@@ -10,6 +10,12 @@ headline needs ~277 compiled classes, and Spark's default cache of 100
 evicted them before they came round again, so every pass recompiled
 (~10 ms of Janino each, on the driver) and re-warmed the JIT.
 
+Session confs are owned here. ``get_spark`` builds a session;
+``pin_session`` sets the two confs every registered query's oracle
+assumes (the registry wrapper is its only caller); ``conf_scope`` sets
+a temporary conf for one block and restores it. Nothing else in the
+package sets or unsets a session conf.
+
 Scratch files: every file the package writes (stream staging dirs, sink
 round-trips, the bucketed-table warehouse, generated fixtures) lives
 under one per-process root, ``scratch_path()``, removed at interpreter
@@ -19,16 +25,12 @@ exit.
 from __future__ import annotations
 
 import atexit
+import contextlib
 import os
 import shutil
 import tempfile
 
 from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-# pin_session re-asserts its confs every N-th call (see docstring)
-_PIN_REASSERT_EVERY = 64
 
 _SCRATCH_ROOT: str | None = None
 
@@ -73,7 +75,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         # AQE: runtime shuffle re-planning, small-partition coalescing and
         # skew-join splitting — the main lever that makes one plan survive
@@ -104,14 +106,24 @@ def get_spark(
         # deployment sizes executors via spark-submit as usual.
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_heap(),
         )
     )
     return builder.master(f"local[{cpus}]").getOrCreate()
 
 
+def _default_heap() -> str:
+    """A quarter of physical RAM, at least 2g and at most 32g.
+
+    A fixed 32g heap let the test JVM on a 15 GB host grow to 12.4 GB
+    RSS, and a second Spark process beside it was killed by the kernel.
+    """
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(32 << 10, max(2 << 10, ram_mb // 4))}m"
+
+
 def pin_session(spark: SparkSession) -> SparkSession:
-    """Pin runtime-settable confs on a session we did not build.
+    """Pin the confs every registered query's oracle assumes.
 
     The driver passes us its own SparkSession; oracle comparisons require
     UTC timestamps regardless of how that session was built, and the
@@ -119,28 +131,33 @@ def pin_session(spark: SparkSession) -> SparkSession:
     wrap-on-overflow casts) require ANSI mode OFF — a driver session
     built ANSI-on would otherwise throw DIVIDE_BY_ZERO / CAST_OVERFLOW
     on edges every one of the registered queries is exposed to.
-    Both confs are runtime-settable (SQLConf), so pinning here covers
-    sessions of any provenance; read_table routes every registered
-    query through this function.
+
+    The registry wrapper (``registry.query``) calls this before every
+    build and is its only caller, so library functions called directly
+    leave the caller's session alone. It is not memoized: two conf sets
+    (~0.4 ms) per build, so a conf flipped between builds is repaired
+    on the next one.
     """
-    # Memoized per session object: the registry wrapper pins on EVERY
-    # query build and read_table pins again per table — at 2 py4j RPCs
-    # per pin that was ~10-20 ms of pure chatter per bench rep (guide
-    # §7.3 driver overhead). The flag lives on the session instance, so
-    # a fresh driver session always pins once; nothing in the repo
-    # mutates these two confs afterwards (grep-audited r12).
-    #
-    # Re-assert guard (r13, VERDICT #4): the memo trusts the instance
-    # flag, so a caller that re-sets ansi/timezone EXTERNALLY after the
-    # first pin would silently run queries unpinned. Every
-    # _PIN_REASSERT_EVERY-th call re-runs the two conf sets — 2 RPCs
-    # per 64 calls keeps ~98% of the r12 chatter saving while bounding
-    # how long an external drift can survive.
-    n = getattr(spark, "_hrs_pin_calls", 0)
-    spark._hrs_pin_calls = n + 1
-    if getattr(spark, "_hrs_pinned", False) and n % _PIN_REASSERT_EVERY:
-        return spark
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark._hrs_pinned = True
     return spark
+
+
+@contextlib.contextmanager
+def conf_scope(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on ``spark`` for the ``with`` block only.
+
+    On exit each key gets back the value it had before, or is unset if
+    it had none, so the session leaves the block as it entered.
+    """
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -50,8 +50,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hive_reflex_spark.session import pin_session
-
 
 def _topic_dir(log_dir: str, topic: str) -> str:
     return os.path.join(log_dir, f"topic={topic}")
@@ -185,7 +183,6 @@ def log_append(
     read below and the append are not one atomic step — exactly like a
     broker, one leader per topic assigns offsets."""
     spark = df.sparkSession
-    pin_session(spark)
     part = F.pmod(F.xxhash64(F.col(key_col).cast("string")), n_partitions)
     recs = df.select(
         F.lit(topic).alias("topic"),
@@ -242,7 +239,6 @@ def log_read(
     offset >= start for their partition (int = every partition, dict =
     per-partition, None/0 = from the beginning — kafka's earliest).
     The offset predicate composes with partition pruning on the scan."""
-    pin_session(spark)
     df = spark.read.parquet(_topic_dir(log_dir, topic)).withColumn(
         "topic", F.lit(topic)
     )
@@ -276,7 +272,6 @@ def log_read_stream(
     the topic directory (schema pinned; each append's files arrive as
     new data — the broker-poll shape). ``max_files_per_trigger`` paces
     a replay the way kafka's maxOffsetsPerTrigger does."""
-    pin_session(spark)
     reader = (
         spark.readStream.schema(
             "topic string, offset long, ts timestamp, "

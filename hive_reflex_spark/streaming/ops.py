@@ -961,17 +961,14 @@ def q104_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy("day", "window_start", "event_type")
                 .agg(F.sum("n").alias("n"), F.sum("units").alias("units"))
             )
-            prev = s.conf.get("spark.sql.sources.partitionOverwriteMode")
-            s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                # one task per touched day (each day's rows hash to one
-                # shuffle partition) — the per-partition rewrite unit that
-                # holds at any scale, and one file per day locally
-                merged.repartition("day").write.mode("overwrite").partitionBy(
-                    "day"
-                ).parquet(view_dir)
-            finally:
-                s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            # one task per touched day (each day's rows hash to one
+            # shuffle partition) — the per-partition rewrite unit that
+            # holds at any scale, and one file per day locally. Dynamic
+            # overwrite is a per-write option, so the session's
+            # partitionOverwriteMode is never touched
+            merged.repartition("day").write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("day").parquet(view_dir)
         else:
             delta.repartition("day").write.partitionBy("day").parquet(view_dir)
 

@@ -1,5 +1,5 @@
-"""Planted exact-.5 rounding fixture builder (shared by
-tests/test_planted_ties.py and the hostile sweep's tie pass).
+"""Planted exact-.5 rounding fixture builder for
+tests/test_planted_ties.py.
 
 1e9 = 2^9 * 5^9, so a product of dyadic values a*b = p * 2^-10 with p
 odd scales to p * 5^9 / 2 EXACTLY — an odd multiple of 0.5, i.e. an
@@ -19,24 +19,6 @@ N_TIE = 128      # vec_id 0..127: odd m * 2^-5  (Gram tie grid)
 N_Q = 256        # vec_id 128..255: odd m * 2^-3 (attention Q tie grid)
 N_KV = 320       # vec_id 256..319: odd m * 2^-4 (attention KV grid)
 DIM = 64
-
-TIE_QUERIES = [
-    # every registered query that reads ONLY the embeddings table and
-    # crosses a ROUND(x * 1e9) term — coordinate chains (Spark ROUND is
-    # BigDecimal HALF_UP on the double's decimal expansion == C
-    # std::round for all doubles) and the numpy-blocked tier
-    "q30_coord_matmul_gram",
-    "q30a_gram_matmul_array",
-    "q30b_gram_matmul_numpy",
-    "q66_attention",
-    "q66a_causal_attention",
-    "q66b_multihead_attention",
-    "q66c_attention_scaled",
-    "q66d_attention_blocked",
-    "q67_conv2d",
-    "q67a_depthwise_conv1d",
-    "q67b_conv2d_blocked",
-]
 
 
 def _grid(rng: np.random.Generator, n: int, exp: int, m_max: int) -> np.ndarray:

@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
+from hive_reflex_spark.session import conf_scope
 
 
 def plan_of(spark, name: str, sf_dir: str) -> str:
@@ -184,15 +185,11 @@ def test_bucketed_join_skips_shuffle(spark, sf_smoke):
     )
     bucket_write(orders, "hrs_orders_b", "o_custkey", 8)
     bucket_write(customer, "hrs_customer_b", "o_custkey", 8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with conf_scope(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         joined = colocated_join(spark, "hrs_orders_b", "hrs_customer_b", "o_custkey")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
         assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_q87_benchmark_side_broadcasts(spark, sf_smoke):
@@ -635,20 +632,11 @@ def test_dynamic_partition_pruning_from_dim_filter(spark, sf_smoke, tmp_path):
         "spark.sql.optimizer.dynamicPartitionPruning.useStats": "false",
         "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio": "10.0",
     }
-    prev = {k: spark.conf.get(k, None) for k in knobs}
-    for k, v in knobs.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_scope(spark, knobs):
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "dynamicpruning" in plan.lower(), plan[:2000]
         # semantics unchanged: DPP only prunes, never drops matches
         assert joined.count() == ev.filter("event_type = 'error'").count()
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_q148_semi_anti_topk_shape(spark, sf_smoke):

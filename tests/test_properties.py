@@ -12,6 +12,7 @@ from hive_reflex_spark.functions.tensor_fns import (
     dequantize,
     quantize_symmetric,
 )
+from hive_reflex_spark.session import conf_scope
 
 money = st.decimals(
     min_value=-99999, max_value=99999, places=2, allow_nan=False
@@ -326,21 +327,17 @@ def test_queries_are_shuffle_partition_invariant(spark):
         "q30b_gram_matmul_numpy",
     ]
     qs = entrymod.queries()
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        outs = {}
-        for n_parts in ("1", "7", "64"):
-            spark.conf.set("spark.sql.shuffle.partitions", n_parts)
+    outs = {}
+    for n_parts in ("1", "7", "64"):
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": n_parts}):
             for name in names:
                 df = qs[name](spark, SF_SMOKE)
                 rows = sorted(map(tuple, df.collect()))
                 outs.setdefault(name, []).append(rows)
-        for name, versions in outs.items():
-            assert versions[0] == versions[1] == versions[2], (
-                f"{name} output depends on shuffle partition count"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    for name, versions in outs.items():
+        assert versions[0] == versions[1] == versions[2], (
+            f"{name} output depends on shuffle partition count"
+        )
 
 
 def test_exact_sum_round6_cross_engine_on_boundary_sums(spark):

@@ -18,6 +18,7 @@ from hive_reflex_spark.operators.retrieval import (
     QUERY_TERMS,
 )
 from hive_reflex_spark.operators.sampling import N_SHARDS
+from hive_reflex_spark.session import conf_scope
 
 
 def q(spark, name, sf_dir):
@@ -478,16 +479,12 @@ def test_shard_and_sample_invariant_to_partitioning(spark, sf_smoke):
         return sorted(map(tuple, q(spark, name, sf_smoke).collect()))
 
     before = {n: snap(n) for n in ("q113_shard_manifest", "q124_weighted_sample")}
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    old_bytes = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "3")
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "65536")
+    with conf_scope(spark, {
+        "spark.sql.shuffle.partitions": "3",
+        "spark.sql.files.maxPartitionBytes": "65536",
+    }):
         for n, rows in before.items():
             assert snap(n) == rows, f"{n} changed under repartitioning"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old_bytes)
 
 
 def test_mmr_rerank_greedy_invariants(spark, sf_smoke):
