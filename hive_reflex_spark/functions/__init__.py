@@ -71,6 +71,19 @@ def spark_exact_sum_unit(expr: str, scale: int = 2) -> str:
 # integer unless exact).
 
 
+def duck_unit_sum(expr: str, scale: int = 2) -> str:
+    """DuckDB oracle twin of the integer-unit SUM inside :func:`exact_sum`:
+    the BIGINT count of 10^-``scale`` units (the outer CAST undoes
+    DuckDB's widening of a BIGINT SUM to HUGEINT)."""
+    p = 10**scale
+    return f"CAST(SUM(CAST(ROUND(({expr}) * {p}) AS BIGINT)) AS BIGINT)"
+
+
+def duck_exact_sum(expr: str, scale: int = 2) -> str:
+    """DuckDB oracle twin of :func:`exact_sum`."""
+    return f"{duck_unit_sum(expr, scale)} / {10**scale}.0"
+
+
 def exact_sum_round6(col: Column, in_scale: int = 9) -> Column:
     """Exact sum in 1e-``in_scale`` units, emitted half-up-rounded to 6
     decimals via integer arithmetic (engine-parity-safe)."""
@@ -94,12 +107,10 @@ def spark_exact_sum_round6(expr: str, in_scale: int = 9) -> str:
 
 def duck_exact_sum_round6(expr: str, in_scale: int = 9) -> str:
     """DuckDB oracle twin of :func:`exact_sum_round6`."""
-    p_in = 10**in_scale
-    div = p_in // 1_000_000
-    half = div // 2
+    div = 10**in_scale // 1_000_000
     return (
-        f"CAST(FLOOR((CAST(SUM(CAST(ROUND(({expr}) * {p_in}) AS BIGINT))"
-        f" AS BIGINT) + {half}) / {div}.0) AS BIGINT) / 1000000.0"
+        f"CAST(FLOOR(({duck_unit_sum(expr, in_scale)} + {div // 2})"
+        f" / {div}.0) AS BIGINT) / 1000000.0"
     )
 
 

@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 
 from hive_reflex_spark.functions import (
     duck_dyadic_md5_uniform,
+    duck_exact_sum,
+    duck_unit_sum,
     dyadic_md5_uniform,
     exact_sum,
 )
@@ -78,9 +80,7 @@ def _softmax_cols(prefix: str) -> str:
     oracle=f"""
     WITH sm AS {_softmax_cols('sm')}
     SELECT t.vec_id AS teacher_id, t.vec_id + 250 AS student_id,
-           CAST(SUM(CAST(ROUND(
-               ROUND(t.p * ln(t.p / s.p), 9) * 1000000000) AS BIGINT))
-               AS BIGINT) / 1000000000.0 AS kl_div
+           {duck_exact_sum("ROUND(t.p * ln(t.p / s.p), 9)", 9)} AS kl_div
     FROM sm t JOIN sm s ON s.vec_id = t.vec_id + 250 AND s.dim = t.dim
     WHERE t.vec_id < 8
     GROUP BY t.vec_id
@@ -125,16 +125,15 @@ def q73_distillation_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q74_log_stats",
-    oracle="""
+    oracle=f"""
     SELECT event_type,
            COUNT(*) AS n,
-           CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) / 100.0
+           {duck_exact_sum("value")}
                / COUNT(*) AS mean_value,
            ROUND(sqrt((CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)
                        * CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT)
                        / 10000.0
-                       - pow(CAST(SUM(CAST(ROUND(value * 100) AS BIGINT))
-                             AS BIGINT) / 100.0, 2) / COUNT(*))
+                       - pow({duck_exact_sum("value")}, 2) / COUNT(*))
                       / (COUNT(*) - 1)), 6) AS std_value,
            ROUND(quantile_cont(value, 0.99), 4) AS p99_value
     FROM events
@@ -205,7 +204,7 @@ def run_cascade(events: DataFrame) -> DataFrame:
     oracle=f"""
     SELECT exit_stage,
            COUNT(*) AS n_exits,
-           CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) / 100.0
+           {duck_exact_sum("value")}
                / COUNT(*) AS mean_value,
            ROUND(COUNT(*) * CAST(CASE exit_stage WHEN 1 THEN {STAGE_COST[1]!r}
                  WHEN 2 THEN {STAGE_COST[1] + STAGE_COST[2]!r}
@@ -257,13 +256,11 @@ def q75_cascade_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT vec_id AS tensor_id,
            COUNT(*) AS n,
            MIN(v) AS min_v, MAX(v) AS max_v,
-           CAST(SUM(CAST(ROUND(v * 1000000000) AS BIGINT)) AS BIGINT)
-               / 1000000000.0 / COUNT(*) AS mean_v,
+           {duck_exact_sum("v", 9)} / COUNT(*) AS mean_v,
            ROUND(sqrt((CAST(SUM(CAST(ROUND(v * 1000000000) AS BIGINT)
                        * CAST(ROUND(v * 1000000000) AS BIGINT)) AS BIGINT)
                        / 1e18
-                       - pow(CAST(SUM(CAST(ROUND(v * 1000000000) AS BIGINT))
-                             AS BIGINT) / 1000000000.0, 2) / COUNT(*))
+                       - pow({duck_exact_sum("v", 9)}, 2) / COUNT(*))
                       / (COUNT(*) - 1)), 6) AS std_v,
            ROUND(greatest(abs(MIN(v)), abs(MAX(v))) / 127.0, 9)
                AS derived_scale
@@ -300,9 +297,9 @@ def q76_weight_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH err AS (
         SELECT vec_id,
-               CAST(SUM(CAST(ROUND(pow(v - ROUND(least(greatest(
-                   ROUND(v / (mx / 127.0)), -127), 127)) * (mx / 127.0), 2)
-                   * 1000000000) AS BIGINT)) AS BIGINT) / 1000000000.0
+               {duck_exact_sum(
+                   "pow(v - ROUND(least(greatest(ROUND(v / (mx / 127.0)),"
+                   " -127), 127)) * (mx / 127.0), 2)", 9)}
                    / COUNT(*) AS mse
         FROM (SELECT vec_id, v, MAX(abs(v)) OVER (PARTITION BY vec_id) AS mx
               FROM {_duck_coords(None)})
@@ -1316,10 +1313,9 @@ def q120_wow_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q123_metric_correlation",
-    oracle="""
+    oracle=f"""
     WITH hourly AS (SELECT date_trunc('hour', ts) AS hour, event_type,
-                           CAST(SUM(CAST(ROUND(value * 100) AS BIGINT))
-                                AS BIGINT) AS cents
+                           {duck_unit_sum("value")} AS cents
                     FROM events GROUP BY 1, 2),
          pairs AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
                           CAST(COUNT(*) AS BIGINT) AS n,
@@ -1389,12 +1385,11 @@ def q123_metric_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q128_trend_ols",
-    oracle="""
+    oracle=f"""
     WITH hourly AS (SELECT event_type,
                            CAST(epoch(date_trunc('hour', ts)) // 3600
                                 AS BIGINT) AS h,
-                           CAST(SUM(CAST(ROUND(value * 100) AS BIGINT))
-                                AS BIGINT) AS cents
+                           {duck_unit_sum("value")} AS cents
                     FROM events GROUP BY 1, 2),
          idx AS (SELECT event_type, cents,
                         h - MIN(h) OVER (PARTITION BY event_type) AS x
@@ -1586,7 +1581,7 @@ CUSUM_H = 100.0  # decision threshold
         SELECT event_type,
                strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS h,
                CAST(COUNT(*) AS BIGINT) AS n,
-               (CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT)
+               ({duck_unit_sum("value")}
                 * 10000) // CAST(COUNT(*) AS BIGINT) AS m_u
         FROM events GROUP BY 1, 2),
     seq AS (
@@ -1900,7 +1895,7 @@ _SHRINK_K = 200  # pseudo-count: cells with n >> k keep their own mean
     WITH cells AS (
         SELECT event_type, CAST(hour(ts) AS INTEGER) AS hr,
                COUNT(*) AS n,
-               CAST(SUM(CAST(ROUND(value * 1000000) AS BIGINT)) AS BIGINT)
+               {duck_unit_sum("value", 6)}
                    AS units
         FROM events GROUP BY 1, 2),
     g AS (SELECT CAST(SUM(units) AS BIGINT) AS gu,
@@ -2622,11 +2617,10 @@ def bucketed_ordered_prefix(
 
 @query(
     "q196_abc_classification",
-    oracle="""
+    oracle=f"""
     WITH rev AS (
         SELECT l_partkey,
-               CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount)
-                    * 10000) AS BIGINT)) AS BIGINT) AS units
+               {duck_unit_sum("l_extendedprice * (1 - l_discount)", 4)} AS units
         FROM lineitem GROUP BY l_partkey),
     ranked AS (
         SELECT l_partkey, units,
@@ -2785,10 +2779,10 @@ def q199_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q204_revenue_gini",
-    oracle="""
+    oracle=f"""
     WITH rev AS (
         SELECT o_custkey,
-               CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               {duck_unit_sum("o_totalprice")}
                    AS units
         FROM orders GROUP BY o_custkey),
     ranked AS (
@@ -2995,12 +2989,11 @@ def q208_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q213_tail_expectation",
-    oracle="""
+    oracle=f"""
     WITH p AS (SELECT quantile_cont(o_totalprice, 0.95) AS p95 FROM orders)
     SELECT ROUND(p.p95, 6) AS p95,
            CAST(COUNT(*) AS BIGINT) AS n_tail,
-           ROUND(CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-                 AS BIGINT) / 100.0 / COUNT(*), 6) AS cvar_95,
+           ROUND({duck_exact_sum("o_totalprice")} / COUNT(*), 6) AS cvar_95,
            ROUND(MAX(o_totalprice), 6) AS max_value
     FROM orders, p WHERE o_totalprice > p.p95 GROUP BY p.p95
     """,
@@ -3230,11 +3223,12 @@ def q218_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q229_invoice_reconciliation",
-    oracle="""
+    oracle=f"""
     WITH lt AS (
         SELECT l_orderkey,
-               CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount)
-                    * (1 + l_tax) * 100) AS BIGINT)) AS BIGINT) AS line_cents
+               {duck_unit_sum(
+                   "l_extendedprice * (1 - l_discount) * (1 + l_tax)")}
+                   AS line_cents
         FROM lineitem GROUP BY l_orderkey),
     rec AS (
         SELECT o_orderkey,
@@ -4499,11 +4493,10 @@ def _median_residuals(idx: DataFrame, fit: DataFrame) -> DataFrame:
 
 @query(
     "q256_theil_sen",
-    oracle="""
+    oracle=f"""
     WITH daily AS (SELECT event_type,
                           CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS d,
-                          CAST(SUM(CAST(ROUND(value * 100) AS BIGINT))
-                               AS BIGINT) AS cents
+                          {duck_unit_sum("value")} AS cents
                    FROM events GROUP BY 1, 2),
          idx AS (SELECT event_type, cents,
                         d - MIN(d) OVER (PARTITION BY event_type) AS x
@@ -4592,11 +4585,10 @@ def q256_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q256a_siegel_repeated_median",
-    oracle="""
+    oracle=f"""
     WITH daily AS (SELECT event_type,
                           CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS d,
-                          CAST(SUM(CAST(ROUND(value * 100) AS BIGINT))
-                               AS BIGINT) AS cents
+                          {duck_unit_sum("value")} AS cents
                    FROM events GROUP BY 1, 2),
          idx AS (SELECT event_type, cents,
                         d - MIN(d) OVER (PARTITION BY event_type) AS x
@@ -4829,10 +4821,9 @@ def q280_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The exact daily-cents reduction shared by q281/q286/q289 (q256/q279
 # predate it and keep their inlined twins): one grouped aggregate from
 # events to |types| x |days| exact integer cents.
-_DUCK_DAILY_CENTS = """daily AS (SELECT event_type,
+_DUCK_DAILY_CENTS = f"""daily AS (SELECT event_type,
                           CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS d,
-                          CAST(SUM(CAST(ROUND(value * 100) AS BIGINT))
-                               AS BIGINT) AS cents
+                          {duck_unit_sum("value")} AS cents
                    FROM events GROUP BY 1, 2)"""
 
 

@@ -22,6 +22,7 @@ import zlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hive_reflex_spark.functions import duck_exact_sum, exact_sum
 from hive_reflex_spark.io import read_table
 from hive_reflex_spark.registry import query
 from hive_reflex_spark.session import scratch_path
@@ -179,8 +180,7 @@ _LOG_MIN_LEVEL = 2
         FROM events)
     SELECT level, COUNT(*) AS n_events,
            CAST(MIN(event_id) AS BIGINT) AS min_event,
-           ROUND(CAST(SUM(CAST(ROUND(value * 1000000) AS BIGINT)) AS BIGINT)
-                 / 1000000.0, 6) AS total_value
+           ROUND({duck_exact_sum("value", 6)}, 6) AS total_value
     FROM logs WHERE level >= {_LOG_MIN_LEVEL}
     GROUP BY level
     """,
@@ -194,8 +194,6 @@ def q162_jsonlog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     inlined, so a JSON double-precision or schema round-trip bug fails
     the hash (`tools/ai_feedback.py:88-118` log shipping semantics)."""
     import json as _json
-
-    from hive_reflex_spark.functions import exact_sum
 
     events = read_table(spark, sf_dir, "events")
     logs = events.select(

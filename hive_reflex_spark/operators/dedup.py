@@ -23,17 +23,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hive_reflex_spark.functions import (
+    duck_exact_sum,
+    duck_unit_sum,
+    exact_sum,
+)
 from hive_reflex_spark.io import (
     cached_df,
     corpus_checkpoint,
     read_table,
     tracked_persist,
 )
+from hive_reflex_spark.operators.tensor import _duck_coords, embedding_coords
 from hive_reflex_spark.operators.text import (
     DUCK_SHINGLES,
     DUCK_WORDS,
     doc_shingles,
     doc_words,
+    word_shingles,
 )
 from hive_reflex_spark.registry import query
 
@@ -323,20 +330,19 @@ def bands_from_minhash(mh: DataFrame) -> DataFrame:
     )
 
 
+# DuckDB twin of bands_from_minhash over the ``mh`` (doc_id, seed, sig)
+# relation in scope, as a FROM-able subquery.
+_DUCK_BANDS = f"""(
+    SELECT doc_id, seed // {BAND_SIZE} AS band,
+           MIN(CASE WHEN seed % {BAND_SIZE} = 0 THEN sig END)
+           || MIN(CASE WHEN seed % {BAND_SIZE} = 1 THEN sig END) AS band_sig
+    FROM mh GROUP BY doc_id, seed // {BAND_SIZE})"""
+
+
 def shingles_of_docs(docs: DataFrame) -> DataFrame:
     """(doc_id, text) → distinct (doc_id, shingle), doc-local — the
     per-batch twin of text.doc_shingles for incremental maintenance."""
-    with_tokens = docs.select("doc_id", F.split("text", " ").alias("ws"))
-    shingles = F.expr(
-        "CASE WHEN size(ws) >= 3 THEN "
-        "transform(sequence(0, size(ws) - 3), "
-        "i -> concat_ws(' ', ws[i], ws[i+1], ws[i+2])) "
-        "ELSE array() END"
-    )
-    return (
-        with_tokens.select("doc_id", F.explode(shingles).alias("shingle"))
-        .distinct()
-    )
+    return word_shingles(docs, 3).distinct()
 
 
 def _minhash_signatures_cold(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -369,11 +375,7 @@ def q48_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q49_lsh_candidates",
     oracle=f"""
     WITH mh AS {_DUCK_MINHASH},
-         bands AS (SELECT doc_id, seed // {BAND_SIZE} AS band,
-                          MIN(CASE WHEN seed % {BAND_SIZE} = 0 THEN sig END)
-                          || MIN(CASE WHEN seed % {BAND_SIZE} = 1 THEN sig END)
-                              AS band_sig
-                   FROM mh GROUP BY doc_id, seed // {BAND_SIZE})
+         bands AS {_DUCK_BANDS}
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
            COUNT(*) AS n_shared_bands
     FROM bands a JOIN bands b
@@ -434,11 +436,7 @@ def star_candidates(bands: DataFrame) -> DataFrame:
     "q49a_lsh_candidates_star",
     oracle=f"""
     WITH mh AS MATERIALIZED {_DUCK_MINHASH},
-         bands AS (SELECT doc_id, seed // {BAND_SIZE} AS band,
-                          MIN(CASE WHEN seed % {BAND_SIZE} = 0 THEN sig END)
-                          || MIN(CASE WHEN seed % {BAND_SIZE} = 1 THEN sig END)
-                              AS band_sig
-                   FROM mh GROUP BY doc_id, seed // {BAND_SIZE}),
+         bands AS {_DUCK_BANDS},
          hubs AS (SELECT band, band_sig, MIN(doc_id) AS hub,
                          COUNT(*) AS bucket_size
                   FROM bands GROUP BY band, band_sig)
@@ -526,11 +524,7 @@ _RECALL_THEORY_CASE = (
                  JOIN sizes sa ON doc_a = sa.doc_id
                  JOIN sizes sb ON doc_b = sb.doc_id),
          mh AS {_DUCK_MINHASH},
-         bands AS (SELECT doc_id, seed // {BAND_SIZE} AS band,
-                          MIN(CASE WHEN seed % {BAND_SIZE} = 0 THEN sig END)
-                          || MIN(CASE WHEN seed % {BAND_SIZE} = 1 THEN sig END)
-                              AS band_sig
-                   FROM mh GROUP BY doc_id, seed // {BAND_SIZE}),
+         bands AS {_DUCK_BANDS},
          cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
                   FROM bands a JOIN bands b
                     ON a.band = b.band AND a.band_sig = b.band_sig
@@ -677,21 +671,14 @@ def q50_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q51a_embedding_neardup",
-    oracle="""
-    WITH coords AS (SELECT vec_id, CAST(dim AS INTEGER) AS dim,
-                           CAST(v AS DOUBLE) AS v
-                    FROM (SELECT vec_id,
-                                 unnest(range(len(embedding))) AS dim,
-                                 unnest(embedding) AS v
-                          FROM embeddings
-                          WHERE vec_id < 512)),
+    oracle=f"""
+    WITH coords AS (SELECT vec_id, dim, v
+                    FROM {_duck_coords(NEARDUP_CORPUS_CAP)} c),
          norms AS (SELECT vec_id,
-                          sqrt(CAST(SUM(CAST(ROUND(v * v * 1000000000)
-                               AS BIGINT)) AS BIGINT) / 1000000000.0) AS nrm
+                          sqrt({duck_exact_sum("v * v", 9)}) AS nrm
                    FROM coords GROUP BY vec_id),
          dots AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                         CAST(SUM(CAST(ROUND(a.v * b.v * 1000000000)
-                              AS BIGINT)) AS BIGINT) / 1000000000.0 AS dot
+                         {duck_exact_sum("a.v * b.v", 9)} AS dot
                   FROM coords a JOIN coords b ON a.dim = b.dim
                        AND a.vec_id < b.vec_id
                   GROUP BY a.vec_id, b.vec_id)
@@ -710,9 +697,6 @@ def q51a_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan is unbounded O(n²) — at 100 TB the same threshold runs inside LSH
     buckets (the q178/q228 bucket probe) so only near-colliding vectors
     are ever compared."""
-    from hive_reflex_spark.functions import exact_sum
-    from hive_reflex_spark.operators.tensor import embedding_coords
-
     coords = embedding_coords(spark, sf_dir).filter(
         F.col("vec_id") < NEARDUP_CORPUS_CAP
     )
@@ -750,40 +734,24 @@ def q51a_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEMDEDUP_TAU = 0.4  # fixture-calibrated: the gaussian tail (same as q51a)
 
 from hive_reflex_spark.operators.similarity import (  # noqa: E402
-    N_CENTROIDS_STRIDE as _SEM_STRIDE,
     _coarse_ranked,
+    _duck_coarse_ranked,
 )
 
 
 @query(
     "q269_semantic_dedup",
     oracle=f"""
-    WITH coords AS (SELECT * FROM
-        (SELECT vec_id, CAST(dim AS INTEGER) AS dim, CAST(v AS DOUBLE) AS v
-         FROM (SELECT vec_id, unnest(range(len(embedding))) AS dim,
-                      unnest(embedding) AS v
-               FROM embeddings))),
-         cents AS (SELECT vec_id AS cid, dim, v AS cv FROM coords
-                   WHERE vec_id % {_SEM_STRIDE} = 0),
-         cdots AS (SELECT x.vec_id, c.cid,
-                          CAST(SUM(CAST(ROUND(x.v * c.cv * 1000000000)
-                               AS BIGINT)) AS BIGINT) / 1000000000.0 AS dot
-                   FROM coords x JOIN cents c USING (dim)
-                   GROUP BY x.vec_id, c.cid),
-         assign AS (SELECT vec_id, cid FROM (
-                        SELECT vec_id, cid,
-                               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                                  ORDER BY dot DESC, cid) AS rn
-                        FROM cdots) WHERE rn = 1),
+    WITH coords AS (SELECT vec_id, dim, v FROM {_duck_coords(None)} c),
+         assign AS (SELECT vec_id, cid FROM {_duck_coarse_ranked()} r
+                    WHERE rn = 1),
          norms AS (SELECT vec_id,
-                          sqrt(CAST(SUM(CAST(ROUND(v * v * 1000000000)
-                               AS BIGINT)) AS BIGINT) / 1000000000.0) AS nrm
+                          sqrt({duck_exact_sum("v * v", 9)}) AS nrm
                    FROM coords GROUP BY vec_id),
          ac AS (SELECT s.cid, a.vec_id, a.dim, a.v
                 FROM coords a JOIN assign s ON s.vec_id = a.vec_id),
          dots AS (SELECT a.cid, a.vec_id AS vec_a, b.vec_id AS vec_b,
-                         CAST(SUM(CAST(ROUND(a.v * b.v * 1000000000)
-                              AS BIGINT)) AS BIGINT) / 1000000000.0 AS dot
+                         {duck_exact_sum("a.v * b.v", 9)} AS dot
                   FROM ac a JOIN ac b ON a.cid = b.cid AND a.dim = b.dim
                        AND a.vec_id < b.vec_id
                   GROUP BY a.cid, a.vec_id, b.vec_id),
@@ -838,9 +806,6 @@ def q269_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`optimizer/sparsity_optimizer.py` magnitude tiers) shares the
     keep-one-representative policy; here the representative set is
     embedding-space rather than weight-space."""
-    from hive_reflex_spark.functions import exact_sum
-    from hive_reflex_spark.operators.tensor import embedding_coords
-
     coords = embedding_coords(spark, sf_dir).select("vec_id", "dim", "v")
     # (vec_id, cid) assignment and per-vector norms are each referenced
     # twice downstream (ac self-join legs + members; na/nb broadcasts) —
@@ -971,11 +936,7 @@ def neardup_dropped_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
                  (SELECT shingle FROM dsh_all
                   GROUP BY shingle HAVING COUNT(*) > {MAX_SHINGLE_DF})),
          mh AS {_DUCK_MINHASH},
-         bands AS (SELECT doc_id, seed // {BAND_SIZE} AS band,
-                          MIN(CASE WHEN seed % {BAND_SIZE} = 0 THEN sig END)
-                          || MIN(CASE WHEN seed % {BAND_SIZE} = 1 THEN sig END)
-                              AS band_sig
-                   FROM mh GROUP BY doc_id, seed // {BAND_SIZE}),
+         bands AS {_DUCK_BANDS},
          cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
                   FROM bands a JOIN bands b
                     ON a.band = b.band AND a.band_sig = b.band_sig
@@ -1049,11 +1010,7 @@ def q94_neardup_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q267_bleu_candidate_score",
     oracle=f"""
     WITH mh AS {_DUCK_MINHASH},
-         bands AS (SELECT doc_id, seed // {BAND_SIZE} AS band,
-                          MIN(CASE WHEN seed % {BAND_SIZE} = 0 THEN sig END)
-                          || MIN(CASE WHEN seed % {BAND_SIZE} = 1 THEN sig END)
-                              AS band_sig
-                   FROM mh GROUP BY doc_id, seed // {BAND_SIZE}),
+         bands AS {_DUCK_BANDS},
          hubs AS (SELECT band, band_sig, MIN(doc_id) AS hub,
                          COUNT(*) AS bucket_size
                   FROM bands GROUP BY band, band_sig),
@@ -2025,8 +1982,7 @@ def _lsh_planner_oracle() -> str:
     SELECT CAST(b AS INTEGER) AS bands, CAST(r AS INTEGER) AS rows_per_band,
            ROUND(power(1.0 / b, 1.0 / r), 6) AS j_at_half,
            CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           ROUND(CAST(SUM(CAST(ROUND(pcand * 1000000000) AS BIGINT))
-                 AS BIGINT) / (COUNT(*) * 1000000000.0), 6)
+           ROUND({duck_unit_sum("pcand", 9)} / (COUNT(*) * 1000000000.0), 6)
                AS expected_recall,
            ROUND(1 - power(1 - power(0.5, r * 1.0), b * 1.0), 6) AS p_at_05,
            ROUND(1 - power(1 - power(0.7, r * 1.0), b * 1.0), 6) AS p_at_07,

@@ -19,12 +19,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hive_reflex_spark.functions import (
+    duck_exact_sum,
+    duck_unit_sum,
+    exact_sum,
+)
 from hive_reflex_spark.operators.dedup import (
-    BAND_SIZE,
+    _DUCK_BANDS,
     _DUCK_MINHASH,
     q49a_lsh_candidates_star,
 )
-from hive_reflex_spark.io import chain_checkpoint, corpus_checkpoint
+from hive_reflex_spark.io import (
+    chain_checkpoint,
+    corpus_checkpoint,
+    read_table,
+)
+from hive_reflex_spark.operators.tensor import _duck_coords, embedding_coords
 from hive_reflex_spark.registry import query
 
 
@@ -97,11 +107,7 @@ def connected_components(
     "q78_dedup_clusters",
     oracle=f"""
     WITH RECURSIVE mh AS MATERIALIZED (SELECT * FROM {_DUCK_MINHASH} m),
-    bands AS MATERIALIZED (SELECT doc_id, seed // {BAND_SIZE} AS band,
-                     MIN(CASE WHEN seed % {BAND_SIZE} = 0 THEN sig END)
-                     || MIN(CASE WHEN seed % {BAND_SIZE} = 1 THEN sig END)
-                         AS band_sig
-              FROM mh GROUP BY doc_id, seed // {BAND_SIZE}),
+    bands AS MATERIALIZED {_DUCK_BANDS},
     edges AS MATERIALIZED (SELECT a.doc_id AS src, b.doc_id AS dst
               FROM bands a JOIN bands b
                 ON a.band = b.band AND a.band_sig = b.band_sig
@@ -392,47 +398,46 @@ _KNN_CAP = 512  # q51a's all-pairs fence (NEARDUP_CORPUS_CAP)
 @query(
     "q248_knn_graph_triangles",
     oracle=f"""
-    WITH coords AS (SELECT vec_id, CAST(dim AS INTEGER) AS dim,
-                           CAST(v AS DOUBLE) AS v
-                    FROM (SELECT vec_id,
-                                 unnest(range(len(embedding))) AS dim,
-                                 unnest(embedding) AS v
-                          FROM embeddings
-                          WHERE vec_id < {_KNN_CAP})),
-         norms AS (SELECT vec_id,
-                          sqrt(CAST(SUM(CAST(ROUND(v * v * 1000000000)
-                               AS BIGINT)) AS BIGINT) / 1000000000.0) AS nrm
-                   FROM coords GROUP BY vec_id),
+    WITH coords AS MATERIALIZED (
+             SELECT vec_id, dim, v FROM {_duck_coords(_KNN_CAP)} c),
+         norms AS MATERIALIZED (
+             SELECT vec_id, sqrt({duck_exact_sum("v * v", 9)}) AS nrm
+             FROM coords GROUP BY vec_id),
          dots AS (SELECT a.vec_id AS va, b.vec_id AS vb,
-                         CAST(SUM(CAST(ROUND(a.v * b.v * 1000000000)
-                              AS BIGINT)) AS BIGINT) / 1000000000.0 AS dot
+                         {duck_exact_sum("a.v * b.v", 9)} AS dot
                   FROM coords a JOIN coords b
                     ON a.dim = b.dim AND a.vec_id < b.vec_id
                   GROUP BY a.vec_id, b.vec_id),
-         scored AS (SELECT va, vb, dot / (na.nrm * nb.nrm) AS cos
-                    FROM dots
-                    JOIN norms na ON va = na.vec_id
-                    JOIN norms nb ON vb = nb.vec_id),
+         scored AS MATERIALIZED (
+             SELECT va, vb, dot / (na.nrm * nb.nrm) AS cos
+             FROM dots
+             JOIN norms na ON va = na.vec_id
+             JOIN norms nb ON vb = nb.vec_id),
          sym AS (SELECT va AS s, vb AS d, cos FROM scored
                  UNION ALL SELECT vb, va, cos FROM scored),
-         knn AS (SELECT s, d FROM (
-                   SELECT s, d, ROW_NUMBER() OVER (PARTITION BY s
-                              ORDER BY cos DESC, d) AS rn FROM sym)
-                 WHERE rn <= {_KNN_K}),
-         mutual AS (SELECT k1.s AS a, k1.d AS b FROM knn k1
-                    JOIN knn k2 ON k1.s = k2.d AND k1.d = k2.s
-                    WHERE k1.s < k1.d),
-         deg AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS dg
-                 FROM (SELECT a AS v FROM mutual
-                       UNION ALL SELECT b FROM mutual) GROUP BY v),
-         tri AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM mutual e1
-                 JOIN mutual e2 ON e1.b = e2.a
-                 JOIN mutual e3 ON e3.a = e1.a AND e3.b = e2.b),
-         lab AS (SELECT CAST(SUM(CASE WHEN la.label = lb.label
-                                 THEN 1 ELSE 0 END) AS BIGINT) AS n_intra
-                 FROM mutual m
-                 JOIN embeddings la ON m.a = la.vec_id
-                 JOIN embeddings lb ON m.b = lb.vec_id)
+         knn AS MATERIALIZED (
+             SELECT s, d FROM (
+                 SELECT s, d, ROW_NUMBER() OVER (PARTITION BY s
+                            ORDER BY cos DESC, d) AS rn FROM sym)
+             WHERE rn <= {_KNN_K}),
+         mutual AS MATERIALIZED (
+             SELECT k1.s AS a, k1.d AS b FROM knn k1
+             JOIN knn k2 ON k1.s = k2.d AND k1.d = k2.s
+             WHERE k1.s < k1.d),
+         deg AS MATERIALIZED (
+             SELECT v, CAST(COUNT(*) AS BIGINT) AS dg
+             FROM (SELECT a AS v FROM mutual
+                   UNION ALL SELECT b FROM mutual) GROUP BY v),
+         tri AS MATERIALIZED (
+             SELECT CAST(COUNT(*) AS BIGINT) AS n FROM mutual e1
+             JOIN mutual e2 ON e1.b = e2.a
+             JOIN mutual e3 ON e3.a = e1.a AND e3.b = e2.b),
+         lab AS MATERIALIZED (
+             SELECT CAST(SUM(CASE WHEN la.label = lb.label
+                             THEN 1 ELSE 0 END) AS BIGINT) AS n_intra
+             FROM mutual m
+             JOIN embeddings la ON m.a = la.vec_id
+             JOIN embeddings lb ON m.b = lb.vec_id)
     SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM deg) AS n_vertices,
            (SELECT CAST(COUNT(*) AS BIGINT) FROM mutual) AS n_edges,
            (SELECT CAST(SUM((dg * (dg - 1)) // 2) AS BIGINT) FROM deg)
@@ -463,9 +468,6 @@ def q248_knn_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(n·k²) — no degree-orientation tricks needed (that is why dedup
     audits run on the kNN graph, not the raw similarity graph). Each
     stage is an equi-join on vertex id; nothing collects."""
-    from hive_reflex_spark.functions import exact_sum
-    from hive_reflex_spark.io import read_table
-    from hive_reflex_spark.operators.tensor import embedding_coords
 
     coords = embedding_coords(spark, sf_dir).filter(F.col("vec_id") < _KNN_CAP)
     norms = coords.groupBy("vec_id").agg(
@@ -638,8 +640,7 @@ def _hyperball_oracle() -> str:
             f"""s{t} AS (SELECT CAST({t} AS BIGINT) AS t,
                         CAST(COUNT(*) AS BIGINT) AS n_nodes,
                         CAST(SUM(mass) AS BIGINT) AS register_mass,
-                        CAST(SUM(CAST(ROUND(1e6 * e) AS BIGINT))
-                             AS BIGINT) AS nf_units
+                        {duck_unit_sum("e", 6)} AS nf_units
                  FROM (SELECT v, mass,
                               CASE WHEN e_raw <= 2.5 * {HLL_M}
                                         AND {HLL_M} - nb > 0

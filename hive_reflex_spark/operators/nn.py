@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hive_reflex_spark.functions import (
+    duck_exact_sum,
+    duck_exact_sum_round6,
     exact_sum,
     exact_sum_round6,
     spark_exact_sum,
@@ -47,9 +49,7 @@ def _attn_oracle(n_q: int, kv_lo: int, kv_hi: int) -> str:
          kv AS (SELECT vec_id AS kid, dim, v FROM coords
                 WHERE vec_id >= {kv_lo} AND vec_id < {kv_hi}),
          scores AS (SELECT qid, kid,
-                           CAST(SUM(CAST(ROUND(q.v * kv.v / {SQRT_D}
-                                * 1000000000) AS BIGINT)) AS BIGINT)
-                               / 1000000000.0 AS s
+                           {duck_exact_sum(f"q.v * kv.v / {SQRT_D}", 9)} AS s
                     FROM q JOIN kv USING (dim) GROUP BY qid, kid),
          expd AS (SELECT qid, kid,
                          ROUND(exp(s - MAX(s) OVER (PARTITION BY qid)), 6) AS e
@@ -60,8 +60,7 @@ def _attn_oracle(n_q: int, kv_lo: int, kv_hi: int) -> str:
                              AS w
                   FROM expd)
     SELECT qid, dim AS out_dim,
-           CAST(FLOOR((CAST(SUM(CAST(ROUND(attn.w * kv.v * 1000000000) AS BIGINT))
-                 AS BIGINT) + 500) / 1000.0) AS BIGINT) / 1000000.0 AS out_v
+           {duck_exact_sum_round6("attn.w * kv.v")} AS out_v
     FROM attn JOIN kv USING (kid)
     GROUP BY qid, dim
     """
@@ -259,7 +258,7 @@ def q66d_attention_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
                     FROM (SELECT unnest(range(-1, 2)) AS dy) a,
                          (SELECT unnest(range(-1, 2)) AS dx) b)
     SELECT (y - dy) AS oy, (x - dx) AS ox,
-           CAST(FLOOR((CAST(SUM(CAST(ROUND(v * w * 1000000000) AS BIGINT)) AS BIGINT) + 500) / 1000.0) AS BIGINT) / 1000000.0 AS conv_v,
+           {duck_exact_sum_round6("v * w")} AS conv_v,
            COUNT(*) AS n_taps
     FROM img, kernel
     WHERE (y - dy) BETWEEN 1 AND 30 AND (x - dx) BETWEEN 1 AND 62
@@ -354,7 +353,7 @@ def conv2d_blocked(
                     FROM (SELECT unnest(range(-1, 2)) AS dy) a,
                          (SELECT unnest(range(-1, 2)) AS dx) b)
     SELECT (y - dy) AS oy, (x - dx) AS ox,
-           CAST(FLOOR((CAST(SUM(CAST(ROUND(v * w * 1000000000) AS BIGINT)) AS BIGINT) + 500) / 1000.0) AS BIGINT) / 1000000.0 AS conv_v,
+           {duck_exact_sum_round6("v * w")} AS conv_v,
            COUNT(*) AS n_taps
     FROM img, kernel
     WHERE (y - dy) BETWEEN 1 AND 30 AND (x - dx) BETWEEN 1 AND 62
@@ -525,9 +524,7 @@ def fold_batchnorm(
     WITH coords AS (SELECT * FROM {_duck_coords(16)} c),
          toks AS (SELECT vec_id AS pos, dim, v FROM coords),
          scores AS (SELECT q.pos AS qpos, k.pos AS kpos,
-                           CAST(SUM(CAST(ROUND(q.v * k.v / {SQRT_D}
-                                * 1000000000) AS BIGINT)) AS BIGINT)
-                               / 1000000000.0 AS s
+                           {duck_exact_sum(f"q.v * k.v / {SQRT_D}", 9)} AS s
                     FROM toks q JOIN toks k USING (dim)
                     WHERE k.pos <= q.pos
                     GROUP BY q.pos, k.pos),
@@ -600,8 +597,7 @@ def q66a_causal_attention(spark: SparkSession, sf_dir: str) -> DataFrame:
                  FROM {_duck_coords(16)} c),
          kernel AS (SELECT unnest(range(-2, 3)) AS dt)
     SELECT channel, (t - dt) AS ot,
-           CAST(FLOOR((CAST(SUM(CAST(ROUND(v * 0.2 * 1000000000) AS BIGINT))
-                 AS BIGINT) + 500) / 1000.0) AS BIGINT) / 1000000.0 AS conv_v,
+           {duck_exact_sum_round6("v * 0.2")} AS conv_v,
            COUNT(*) AS n_taps
     FROM sig, kernel
     WHERE (t - dt) BETWEEN 2 AND 61
@@ -1302,8 +1298,7 @@ def _transformer_block_oracle() -> str:
                FROM {_duck_coords(TB_TOKENS)} c),
     {_tb_ln_sql('x', 'xv', 'h1')},
     sc AS (SELECT a.p AS pq, b.p AS pk,
-                  CAST(SUM(CAST(ROUND(a.h * b.h / 8.0 * 1000000000)
-                       AS BIGINT)) AS BIGINT) / 1000000000.0 AS s
+                  {duck_exact_sum("a.h * b.h / 8.0", 9)} AS s
            FROM h1 a JOIN h1 b ON a.d = b.d GROUP BY a.p, b.p),
     ex AS (SELECT pq, pk,
                   ROUND(exp(s - MAX(s) OVER (PARTITION BY pq)), 6) AS e
@@ -1313,8 +1308,7 @@ def _transformer_block_oracle() -> str:
                        OVER (PARTITION BY pq) AS BIGINT) / 1000000.0) AS w
            FROM ex),
     att AS (SELECT aw.pq AS p, k.d,
-                   CAST(SUM(CAST(ROUND(aw.w * k.h * 1000000000) AS BIGINT))
-                        AS BIGINT) / 1000000000.0 AS av
+                   {duck_exact_sum("aw.w * k.h", 9)} AS av
             FROM aw JOIN h1 k ON k.p = aw.pk GROUP BY aw.pq, k.d),
     r1 AS (SELECT x.p, x.d, x.xv + att.av AS rv
            FROM x JOIN att ON x.p = att.p AND x.d = att.d),
@@ -1323,8 +1317,7 @@ def _transformer_block_oracle() -> str:
            FROM (SELECT unnest(range(64)) AS i) i,
                 (SELECT unnest(range(64)) AS j) j),
     ff AS (SELECT h2.p, CAST(wt.j AS INT) AS d,
-                  CAST(SUM(CAST(ROUND(h2.h * wt.wv * 1000000000)
-                       AS BIGINT)) AS BIGINT) / 1000000000.0 AS f
+                  {duck_exact_sum("h2.h * wt.wv", 9)} AS f
            FROM h2 JOIN wt ON h2.d = wt.i GROUP BY h2.p, wt.j),
     gl AS (SELECT p, d,
                   0.5 * f * (1 + ROUND(1 - 2 / (exp(2 * ({_GELU_C}
@@ -1458,8 +1451,7 @@ def _mha_oracle() -> str:
                         CAST(dim // {MHA_HEAD_DIM} AS INT) AS h, v
                  FROM {_duck_coords(TB_TOKENS)} c),
     sc AS (SELECT a.h, a.p AS pq, b.p AS pk,
-                  CAST(SUM(CAST(ROUND(a.v * b.v / 4.0 * 1000000000)
-                       AS BIGINT)) AS BIGINT) / 1000000000.0 AS s
+                  {duck_exact_sum("a.v * b.v / 4.0", 9)} AS s
            FROM tok a JOIN tok b ON a.d = b.d
            GROUP BY a.h, a.p, b.p),
     ex AS (SELECT h, pq, pk,
@@ -1471,8 +1463,7 @@ def _mha_oracle() -> str:
                       AS w
            FROM ex),
     outv AS (SELECT aw.pq AS pos, k.d AS dim,
-                    CAST(FLOOR((CAST(SUM(CAST(ROUND(aw.w * k.v * 1000000000)
-                          AS BIGINT)) AS BIGINT) + 500) / 1000.0) AS BIGINT) / 1000000.0 AS out_v
+                    {duck_exact_sum_round6("aw.w * k.v")} AS out_v
              FROM aw JOIN tok k ON k.p = aw.pk AND k.h = aw.h
              GROUP BY aw.pq, k.d)
     SELECT pos, dim, out_v FROM outv
@@ -1543,24 +1534,21 @@ def _swiglu_wt_sql(name: str, rows: int, cols: int, a: int, b: int) -> str:
 
 
 def _swiglu_oracle() -> str:
-    isum = "CAST(SUM(CAST(ROUND({expr} * 1000000000) AS BIGINT)) AS BIGINT) / 1000000000.0"
     return f"""
     WITH x AS (SELECT vec_id AS p, CAST(dim AS INT) AS d, v
                FROM {_duck_coords(TB_TOKENS)} c),
     {_swiglu_wt_sql('wg', 64, SWIGLU_HIDDEN, 5, 7)},
     {_swiglu_wt_sql('wu', 64, SWIGLU_HIDDEN, 3, 5)},
     {_swiglu_wt_sql('wd', SWIGLU_HIDDEN, 64, 7, 3)},
-    g AS (SELECT x.p, wg.j AS hidx, {isum.format(expr='x.v * wg.wv')} AS gv
+    g AS (SELECT x.p, wg.j AS hidx, {duck_exact_sum("x.v * wg.wv", 9)} AS gv
           FROM x JOIN wg ON x.d = wg.i GROUP BY x.p, wg.j),
-    u AS (SELECT x.p, wu.j AS hidx, {isum.format(expr='x.v * wu.wv')} AS uv
+    u AS (SELECT x.p, wu.j AS hidx, {duck_exact_sum("x.v * wu.wv", 9)} AS uv
           FROM x JOIN wu ON x.d = wu.i GROUP BY x.p, wu.j),
     m AS (SELECT g.p, g.hidx,
                  ROUND(g.gv / (1 + exp(-g.gv)), 6) * u.uv AS mv
           FROM g JOIN u ON g.p = u.p AND g.hidx = u.hidx)
     SELECT m.p AS pos, wd.j AS dim,
-           CAST(FLOOR((CAST(SUM(CAST(ROUND(m.mv * wd.wv * 1000000000)
-                AS BIGINT)) AS BIGINT) + 500) / 1000.0) AS BIGINT)
-               / 1000000.0 AS out_v
+           {duck_exact_sum_round6("m.mv * wd.wv")} AS out_v
     FROM m JOIN wd ON m.hidx = wd.i
     GROUP BY m.p, wd.j
     """
@@ -1718,8 +1706,6 @@ def _tb_rms_sql(src: str, vcol: str, out: str) -> str:
 
 
 def _llama_block_oracle() -> str:
-    isum = ("CAST(SUM(CAST(ROUND({expr} * 1000000000) AS BIGINT)) "
-            "AS BIGINT) / 1000000000.0")
     return f"""
     WITH x AS (SELECT vec_id AS p, CAST(dim AS INT) AS d, v AS xv
                FROM {_duck_coords(TB_TOKENS)} c),
@@ -1737,7 +1723,7 @@ def _llama_block_oracle() -> str:
            SELECT p, CAST(pr * 2 + 1 AS INT) AS d,
                   ROUND(ev * sn + ov * cs, 6) AS rh FROM rang),
     sc AS (SELECT a.p AS pq, b.p AS pk,
-                  {isum.format(expr='a.rh * b.rh / 8.0')} AS s
+                  {duck_exact_sum("a.rh * b.rh / 8.0", 9)} AS s
            FROM rq a JOIN rq b ON a.d = b.d
            WHERE b.p <= a.p
            GROUP BY a.p, b.p),
@@ -1749,7 +1735,7 @@ def _llama_block_oracle() -> str:
                        OVER (PARTITION BY pq) AS BIGINT) / 1000000.0) AS w
            FROM ex),
     att AS (SELECT aw.pq AS p, k.d,
-                   {isum.format(expr='aw.w * k.h')} AS av
+                   {duck_exact_sum("aw.w * k.h", 9)} AS av
             FROM aw JOIN h1 k ON k.p = aw.pk GROUP BY aw.pq, k.d),
     r1 AS (SELECT x.p, x.d, x.xv + att.av AS rv
            FROM x JOIN att ON x.p = att.p AND x.d = att.d),
@@ -1757,14 +1743,14 @@ def _llama_block_oracle() -> str:
     {_swiglu_wt_sql('wg', 64, SWIGLU_HIDDEN, 5, 7)},
     {_swiglu_wt_sql('wu', 64, SWIGLU_HIDDEN, 3, 5)},
     {_swiglu_wt_sql('wd', SWIGLU_HIDDEN, 64, 7, 3)},
-    g AS (SELECT h2.p, wg.j AS hidx, {isum.format(expr='h2.h * wg.wv')} AS gv
+    g AS (SELECT h2.p, wg.j AS hidx, {duck_exact_sum("h2.h * wg.wv", 9)} AS gv
           FROM h2 JOIN wg ON h2.d = wg.i GROUP BY h2.p, wg.j),
-    u AS (SELECT h2.p, wu.j AS hidx, {isum.format(expr='h2.h * wu.wv')} AS uv
+    u AS (SELECT h2.p, wu.j AS hidx, {duck_exact_sum("h2.h * wu.wv", 9)} AS uv
           FROM h2 JOIN wu ON h2.d = wu.i GROUP BY h2.p, wu.j),
     m AS (SELECT g.p, g.hidx,
                  ROUND(g.gv / (1 + exp(-g.gv)), 6) * u.uv AS mv
           FROM g JOIN u ON g.p = u.p AND g.hidx = u.hidx),
-    ffo AS (SELECT m.p, wd.j AS d, {isum.format(expr='m.mv * wd.wv')} AS fv
+    ffo AS (SELECT m.p, wd.j AS d, {duck_exact_sum("m.mv * wd.wv", 9)} AS fv
             FROM m JOIN wd ON m.hidx = wd.i GROUP BY m.p, wd.j)
     SELECT r1.p AS pos, r1.d AS dim,
            FLOOR((r1.rv + ffo.fv) * 1000000.0 + 0.5) / 1000000.0 AS out_v
@@ -1925,10 +1911,8 @@ BN_FOLD_EPS = 1e-5  # qat_trainer.py fold epsilon
                   CAST(1.0 AS DOUBLE) + (i % 5) * CAST(0.1 AS DOUBLE)
                       AS gamma,
                   (i % 7) * CAST(0.01 AS DOUBLE) AS beta,
-                  CAST(SUM(CAST(ROUND(v * 1000000000) AS BIGINT)) AS BIGINT)
-                      / 1000000000.0 / COUNT(*) AS mean,
-                  CAST(SUM(CAST(ROUND(v * v * 1000000000) AS BIGINT))
-                       AS BIGINT) / 1000000000.0 / COUNT(*) AS m2
+                  {duck_exact_sum("v", 9)} / COUNT(*) AS mean,
+                  {duck_exact_sum("v * v", 9)} / COUNT(*) AS m2
            FROM coords GROUP BY i),
     bnv AS (SELECT i, gamma, beta, mean,
                    m2 - mean * mean AS var

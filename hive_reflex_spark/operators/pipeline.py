@@ -22,11 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hive_reflex_spark.functions import duck_unit_sum
 from hive_reflex_spark.io import read_table
 from hive_reflex_spark.operators.dedup import (
+    _DUCK_BANDS,
     _DUCK_DSH,
     _DUCK_MINHASH,
-    BAND_SIZE,
     MAX_SHINGLE_DF,
     neardup_dropped_ids,
 )
@@ -62,11 +63,7 @@ from hive_reflex_spark.registry import query
                  (SELECT shingle FROM dsh_all
                   GROUP BY shingle HAVING COUNT(*) > {MAX_SHINGLE_DF})),
          mh AS {_DUCK_MINHASH},
-         bands AS (SELECT doc_id, seed // {BAND_SIZE} AS band,
-                          MIN(CASE WHEN seed % {BAND_SIZE} = 0 THEN sig END)
-                          || MIN(CASE WHEN seed % {BAND_SIZE} = 1 THEN sig END)
-                              AS band_sig
-                   FROM mh GROUP BY doc_id, seed // {BAND_SIZE}),
+         bands AS {_DUCK_BANDS},
          cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
                   FROM bands a JOIN bands b
                     ON a.band = b.band AND a.band_sig = b.band_sig
@@ -162,9 +159,9 @@ def q129_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                 FROM feats JOIN wtab USING (b) GROUP BY doc_id) s),
     src AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n
             FROM documents GROUP BY source),
-    ent AS (SELECT CAST(SUM(CAST(ROUND(
-                       -(n * 1.0 / b.n_docs) * ln(n * 1.0 / b.n_docs)
-                       * 1000000000) AS BIGINT)) AS BIGINT) AS ent_units
+    ent AS (SELECT {duck_unit_sum(
+                       "-(n * 1.0 / b.n_docs) * ln(n * 1.0 / b.n_docs)", 9)}
+                       AS ent_units
             FROM src, base b)
     SELECT b.n_docs, b.n_unique,
            ROUND(1 - b.n_unique * 1.0 / b.n_docs, 6) AS exact_dup_rate,

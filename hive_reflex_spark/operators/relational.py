@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hive_reflex_spark.functions import (
+    duck_exact_sum,
+    duck_unit_sum,
     exact_sum,
     spark_exact_sum,
     spark_exact_sum_unit,
@@ -38,19 +40,19 @@ from hive_reflex_spark.registry import query
 
 @query(
     "q01_pricing_summary",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag, l_linestatus,
-           CAST(SUM(CAST(ROUND(l_quantity * 100) AS BIGINT)) AS BIGINT) / 100.0
+           {duck_exact_sum("l_quantity")}
                AS sum_qty,
-           CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) / 100.0
+           {duck_exact_sum("l_extendedprice")}
                AS sum_base_price,
-           CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT))
-               AS BIGINT) / 10000.0 AS sum_disc_price,
-           CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * (1 + l_tax)
-               * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_charge,
-           CAST(SUM(CAST(ROUND(l_quantity * 100) AS BIGINT)) AS BIGINT) / 100.0
+           {duck_exact_sum("l_extendedprice * (1 - l_discount)", 4)} AS sum_disc_price,
+           {duck_exact_sum(
+               "l_extendedprice * (1 - l_discount) * (1 + l_tax)", 4)}
+               AS sum_charge,
+           {duck_exact_sum("l_quantity")}
                / COUNT(*) AS avg_qty,
-           CAST(SUM(CAST(ROUND(l_discount * 10000) AS BIGINT)) AS BIGINT) / 10000.0
+           {duck_exact_sum("l_discount", 4)}
                / COUNT(*) AS avg_disc,
            COUNT(*) AS count_order
     FROM lineitem
@@ -148,10 +150,9 @@ def q02_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q03_top_revenue",
-    oracle="""
+    oracle=f"""
     SELECT l_orderkey,
-           CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT))
-               AS BIGINT) / 10000.0 AS revenue,
+           {duck_exact_sum("l_extendedprice * (1 - l_discount)", 4)} AS revenue,
            strftime(o_orderdate, '%Y-%m-%d') AS order_date,
            o_orderpriority
     FROM customer
@@ -258,9 +259,9 @@ def q04_priority_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q05_customers_without_orders",
-    oracle="""
+    oracle=f"""
     SELECT c_mktsegment, COUNT(*) AS n_customers,
-           CAST(SUM(CAST(ROUND(c_acctbal * 100) AS BIGINT)) AS BIGINT) / 100.0
+           {duck_exact_sum("c_acctbal")}
                AS total_acctbal
     FROM customer
     WHERE NOT EXISTS (SELECT 1 FROM orders
@@ -300,9 +301,9 @@ def q05_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q06_region_rollup",
-    oracle="""
+    oracle=f"""
     SELECT r_name, n_name, COUNT(*) AS n_customers,
-           CAST(SUM(CAST(ROUND(c_acctbal * 100) AS BIGINT)) AS BIGINT) / 100.0
+           {duck_exact_sum("c_acctbal")}
                AS total_acctbal
     FROM customer
     JOIN nation ON c_nationkey = n_nationkey
@@ -335,10 +336,10 @@ def q06_region_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q07_customer_order_stats",
-    oracle="""
+    oracle=f"""
     SELECT c_custkey, c_mktsegment,
            COUNT(o_orderkey) AS n_orders,
-           COALESCE(CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT),
+           COALESCE({duck_unit_sum("o_totalprice")},
                     0) / 100.0 AS total_spent
     FROM customer
     LEFT JOIN orders ON o_custkey = c_custkey
@@ -390,10 +391,9 @@ def q07_customer_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q08_theta_join",
-    oracle="""
+    oracle=f"""
     SELECT n_name, COUNT(*) AS n_pairs,
-           CAST(SUM(CAST(ROUND((s_acctbal - c_acctbal) * 100) AS BIGINT)) AS BIGINT)
-               / 100.0 AS total_gap
+           {duck_exact_sum("s_acctbal - c_acctbal")} AS total_gap
     FROM supplier
     JOIN customer ON s_nationkey = c_nationkey AND s_acctbal > c_acctbal
     JOIN nation ON n_nationkey = s_nationkey
@@ -428,9 +428,9 @@ def q08_theta_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q09_status_priority_cube",
-    oracle="""
+    oracle=f"""
     SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0
+           {duck_exact_sum("o_totalprice")}
                AS total_price
     FROM orders
     GROUP BY CUBE (o_orderstatus, o_orderpriority)
@@ -615,13 +615,13 @@ def q13_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q14_conditional_agg",
-    oracle="""
+    oracle=f"""
     SELECT event_type,
            COUNT(*) AS n_events,
            COUNT(DISTINCT user_id) AS n_users,
            CAST(SUM(CASE WHEN value > 100 THEN 1 ELSE 0 END) AS BIGINT)
                AS n_high_value,
-           CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) / 100.0
+           {duck_exact_sum("value")}
                AS total_value
     FROM events
     GROUP BY event_type
@@ -711,11 +711,11 @@ def q16_word_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q17_monthly_orders",
-    oracle="""
+    oracle=f"""
     SELECT CAST(EXTRACT(year FROM o_orderdate) AS INTEGER) AS order_year,
            CAST(EXTRACT(month FROM o_orderdate) AS INTEGER) AS order_month,
            COUNT(*) AS n_orders,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0
+           {duck_exact_sum("o_totalprice")}
                AS monthly_total
     FROM orders
     WHERE o_orderdate >= TIMESTAMP '1997-01-01'
@@ -748,13 +748,12 @@ def q17_monthly_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q18_above_avg_orders",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority, COUNT(*) AS n_orders,
            MIN(o_totalprice) AS min_price, MAX(o_totalprice) AS max_price
     FROM orders
     WHERE o_totalprice > (
-        SELECT CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               / 100.0 / COUNT(*)
+        SELECT {duck_exact_sum("o_totalprice")} / COUNT(*)
         FROM orders)
     GROUP BY o_orderpriority
     """,
@@ -843,10 +842,10 @@ def q19_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q20_sessionize",
-    oracle="""
+    oracle=f"""
     SELECT user_id, session_id, COUNT(*) AS n_events,
            (MAX(ts_us) - MIN(ts_us)) / 1000000.0 AS duration_sec,
-           CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) / 100.0
+           {duck_exact_sum("value")}
                AS session_value
     FROM (
         SELECT user_id, value, ts_us,
@@ -1286,10 +1285,10 @@ def q29_range_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 # NB: the divisor is CAST AS DOUBLE because Spark SQL parses a bare
 # `10000.0` literal as DECIMAL (DataFrame-API float lits are DOUBLE) —
 # without the cast the two engines return different column types.
-_Q90_SQL = """
+_Q90_SQL = f"""
     SELECT n_name,
-           CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000)
-               AS BIGINT)) AS BIGINT) / CAST(10000.0 AS DOUBLE) AS revenue,
+           {duck_unit_sum("l_extendedprice * (1 - l_discount)", 4)}
+               / CAST(10000.0 AS DOUBLE) AS revenue,
            COUNT(*) AS n_lineitems
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
@@ -1399,10 +1398,9 @@ def q125_data_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q133_regional_revenue",
-    oracle="""
+    oracle=f"""
     SELECT n_name,
-           CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000)
-                AS BIGINT)) AS BIGINT) / 10000.0 AS revenue
+           {duck_exact_sum("l_extendedprice * (1 - l_discount)", 4)} AS revenue
     FROM customer
     JOIN orders ON c_custkey = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -1461,10 +1459,9 @@ def q133_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q134_small_quantity_revenue",
-    oracle="""
+    oracle=f"""
     SELECT CAST(COUNT(*) AS BIGINT) AS n_lines,
-           CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-               / 100.0 / 7.0 AS avg_yearly
+           {duck_exact_sum("l_extendedprice")} / 7.0 AS avg_yearly
     FROM lineitem
     JOIN part ON p_partkey = l_partkey
     WHERE p_brand = 'Brand#1'
@@ -1491,11 +1488,7 @@ def q134_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_quantity") < F.col("qty_cut"))
         .agg(
             F.count("*").alias("n_lines"),
-            (
-                F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
-                / 100.0
-                / 7.0
-            ).alias("avg_yearly"),
+            (exact_sum(F.col("l_extendedprice")) / 7.0).alias("avg_yearly"),
         )
     )
 
@@ -1509,13 +1502,12 @@ def q134_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q140_rollup_grouping",
-    oracle="""
+    oracle=f"""
     SELECT o_orderstatus, o_orderpriority,
            CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT)
                AS grouping_id,
            COUNT(*) AS n_orders,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               / 100.0 AS total_price
+           {duck_exact_sum("o_totalprice")} AS total_price
     FROM orders
     GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
     """,
@@ -1550,11 +1542,11 @@ def q140_rollup_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q142_salted_join",
-    oracle="""
+    oracle=f"""
     SELECT e.event_type,
            COUNT(*) AS n_events,
            CAST(MIN(d.type_code) AS BIGINT) AS type_code,
-           CAST(SUM(CAST(ROUND(e.value * 100) AS BIGINT)) AS BIGINT) / 100.0
+           {duck_exact_sum("e.value")}
                AS total_value
     FROM events e
     JOIN (SELECT event_type,
@@ -1699,8 +1691,7 @@ _Q22_RECENT_DAYS = 90
     "q149_dormant_customers",
     oracle=f"""
     WITH mx AS (SELECT MAX(o_orderdate) AS m FROM orders),
-    ab AS (SELECT CAST(SUM(CAST(ROUND(c_acctbal * 100) AS BIGINT))
-                       AS BIGINT) / 100.0 / COUNT(*) AS a
+    ab AS (SELECT {duck_exact_sum("c_acctbal")} / COUNT(*) AS a
            FROM customer WHERE c_acctbal > 0),
     cand AS (SELECT c.c_custkey, c.c_nationkey, c.c_acctbal
              FROM customer c, ab WHERE c.c_acctbal > ab.a),
@@ -1712,8 +1703,7 @@ _Q22_RECENT_DAYS = 90
               AND o.o_orderdate > mx.m - INTERVAL {_Q22_RECENT_DAYS} DAYS))
     SELECT c_nationkey,
            COUNT(*) AS n_custs,
-           CAST(SUM(CAST(ROUND(c_acctbal * 100) AS BIGINT)) AS BIGINT)
-               / 100.0 AS total_bal
+           {duck_exact_sum("c_acctbal")} AS total_bal
     FROM dormant
     GROUP BY c_nationkey
     """,
@@ -2044,11 +2034,10 @@ def q156_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q165_market_share",
-    oracle="""
+    oracle=f"""
     WITH vol AS (
         SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year, n2.n_name AS supp_nation,
-               CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000)
-                    AS BIGINT)) AS BIGINT) / 10000.0 AS volume
+               {duck_exact_sum("l_extendedprice * (1 - l_discount)", 4)} AS volume
         FROM lineitem
         JOIN orders ON l_orderkey = o_orderkey
         JOIN part ON l_partkey = p_partkey
@@ -2219,11 +2208,10 @@ def q202_leadtime_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q203_supplier_hhi",
-    oracle="""
+    oracle=f"""
     WITH rev AS (
         SELECT n_nationkey, n_name, l_suppkey,
-               CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount)
-                    * 10000) AS BIGINT)) AS BIGINT) AS units
+               {duck_unit_sum("l_extendedprice * (1 - l_discount)", 4)} AS units
         FROM lineitem
         JOIN supplier ON l_suppkey = s_suppkey
         JOIN nation ON s_nationkey = n_nationkey
@@ -2280,10 +2268,10 @@ def q203_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q207_percent_of_parent",
-    oracle="""
+    oracle=f"""
     WITH rev AS (
         SELECT r_name AS region, n_name AS nation,
-               CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               {duck_unit_sum("o_totalprice")}
                    AS units
         FROM orders
         JOIN customer ON o_custkey = c_custkey
@@ -2618,11 +2606,10 @@ def q219_volume_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q226_returned_item_ranking",
-    oracle="""
+    oracle=f"""
     WITH rev AS (
         SELECT l_orderkey,
-               CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount)
-                    * 10000) AS BIGINT)) AS BIGINT) AS units
+               {duck_unit_sum("l_extendedprice * (1 - l_discount)", 4)} AS units
         FROM lineitem WHERE l_returnflag = 'R' GROUP BY l_orderkey),
     cust AS (
         SELECT o_custkey,
@@ -3307,10 +3294,9 @@ def q246b_salted_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q252_nation_trade_volume",
-    oracle="""
+    oracle=f"""
     SELECT supp_nation, cust_nation, ship_year,
-           CAST(SUM(CAST(ROUND(volume * 10000) AS BIGINT)) AS BIGINT)
-               / 10000.0 AS revenue,
+           {duck_exact_sum("volume", 4)} AS revenue,
            CAST(COUNT(*) AS BIGINT) AS n_lines
     FROM (SELECT ns.n_name AS supp_nation, nc.n_name AS cust_nation,
                  CAST(year(l_shipdate) AS INTEGER) AS ship_year,
@@ -3375,15 +3361,14 @@ def q252_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q253_promo_revenue_share",
-    oracle="""
+    oracle=f"""
     SELECT CAST(year(l_shipdate) AS INTEGER) AS ship_year,
            CAST(month(l_shipdate) AS INTEGER) AS ship_month,
            CAST(SUM(CASE WHEN p_type = 'PROMO'
                     THEN CAST(ROUND(l_extendedprice * (1 - l_discount)
                               * 10000) AS BIGINT) ELSE 0 END) AS BIGINT)
                / 10000.0 AS promo_revenue,
-           CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000)
-                    AS BIGINT)) AS BIGINT) / 10000.0 AS total_revenue,
+           {duck_exact_sum("l_extendedprice * (1 - l_discount)", 4)} AS total_revenue,
            ROUND(SUM(CASE WHEN p_type = 'PROMO'
                      THEN CAST(ROUND(l_extendedprice * (1 - l_discount)
                                * 10000) AS BIGINT) ELSE 0 END)
@@ -3466,10 +3451,9 @@ def q254_brand_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q255_disjunctive_revenue",
-    oracle="""
+    oracle=f"""
     SELECT CAST(COUNT(*) AS BIGINT) AS n_lines,
-           CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 10000)
-                    AS BIGINT)) AS BIGINT) / 10000.0 AS revenue
+           {duck_exact_sum("l_extendedprice * (1 - l_discount)", 4)} AS revenue
     FROM lineitem JOIN part ON l_partkey = p_partkey
     WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
            AND l_quantity BETWEEN 1 AND 11)

@@ -36,12 +36,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hive_reflex_spark.functions import duck_exact_sum, exact_sum
 from hive_reflex_spark.io import (
     corpus_checkpoint,
     maybe_local_checkpoint,
     read_table,
 )
-from hive_reflex_spark.operators.tensor import _duck_coords
+from hive_reflex_spark.operators.tensor import _duck_coords, embedding_coords
 from hive_reflex_spark.operators.text import DUCK_WORDS, doc_words
 from hive_reflex_spark.registry import query
 
@@ -463,10 +464,9 @@ TFIDF_TOP_K = 10
                  FROM wt GROUP BY doc_id),
          qvec AS (SELECT w, w9 FROM wt WHERE doc_id = {TFIDF_QUERY_DOC}),
          dots AS (SELECT wt.doc_id,
-                         CAST(SUM(CAST(ROUND(
-                             (wt.w9 / 1000000000.0)
-                             * (qvec.w9 / 1000000000.0) * 1000000000)
-                             AS BIGINT)) AS BIGINT) / 1000000000.0 AS dot
+                         {duck_exact_sum(
+                             "(wt.w9 / 1000000000.0)"
+                             " * (qvec.w9 / 1000000000.0)", 9)} AS dot
                   FROM wt JOIN qvec USING (w)
                   WHERE wt.doc_id != {TFIDF_QUERY_DOC}
                   GROUP BY wt.doc_id)
@@ -593,23 +593,19 @@ _DUCK_HYBRID_SCORED = f"""
     nv AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings),
     coords AS (SELECT * FROM {_duck_coords(None)} c),
     qc AS (SELECT dim,
-                  CAST(SUM(CAST(ROUND(v * 1000000000) AS BIGINT)) AS BIGINT)
-                      / 1000000000.0 / 4 AS qv
+                  {duck_exact_sum("v", 9)} / 4 AS qv
            FROM coords WHERE vec_id < 4 GROUP BY dim),
-    qn AS (SELECT sqrt(CAST(SUM(CAST(ROUND(qv * qv * 1000000000) AS BIGINT))
-                       AS BIGINT) / 1000000000.0) AS qnrm FROM qc),
+    qn AS (SELECT sqrt({duck_exact_sum("qv * qv", 9)}) AS qnrm FROM qc),
     link AS (SELECT bm.doc_id, bm.bm25, bm.doc_id % nv.n AS vec_id
              FROM bm, nv),
     dots AS (SELECT l.doc_id,
-                    CAST(SUM(CAST(ROUND(c.v * qc.qv * 1000000000) AS BIGINT))
-                        AS BIGINT) / 1000000000.0 AS dot
+                    {duck_exact_sum("c.v * qc.qv", 9)} AS dot
              FROM link l
              JOIN coords c ON c.vec_id = l.vec_id
              JOIN qc ON qc.dim = c.dim
              GROUP BY l.doc_id),
     nd AS (SELECT vec_id,
-                  sqrt(CAST(SUM(CAST(ROUND(v * v * 1000000000) AS BIGINT))
-                       AS BIGINT) / 1000000000.0) AS nrm
+                  sqrt({duck_exact_sum("v * v", 9)}) AS nrm
            FROM coords GROUP BY vec_id),
     scored AS (SELECT l.doc_id, l.bm25,
                       d.dot / (nd.nrm * qn.qnrm) AS cosine,
@@ -658,9 +654,6 @@ def hybrid_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, bm25, cosine, hybrid) over the BM25 top-K candidates —
     the two-stage scoring shared by q173 (blend rerank) and q287 (RRF);
     mirrors _DUCK_HYBRID_SCORED's `scored` CTE."""
-    from hive_reflex_spark.functions import exact_sum
-    from hive_reflex_spark.operators.tensor import embedding_coords
-
     # the K-row candidate table is the waist below the corpus-scale
     # BM25 pipeline; it is referenced by mx AND link, and link again by
     # dots AND the final scored join — localCheckpointed (r12) so BM25
@@ -876,9 +869,9 @@ def _retrieval_metrics_oracle() -> str:
                CAST(COUNT(DISTINCT w) AS BIGINT) AS g
         FROM words WHERE w IN ({_REL_TERMS_SQL}) GROUP BY doc_id),
     dcg AS (
-        SELECT CAST(SUM(CAST(ROUND((pow(2, COALESCE(g.g, 0)) - 1)
-                   / (ln(r.rnk + 1) / ln(2)) * 1000000000) AS BIGINT))
-                   AS BIGINT) / 1000000000.0 AS dcg,
+        SELECT {duck_exact_sum(
+                   "(pow(2, COALESCE(g.g, 0)) - 1)"
+                   " / (ln(r.rnk + 1) / ln(2))", 9)} AS dcg,
                MIN(CASE WHEN COALESCE(g.g, 0) >= 2 THEN r.rnk END)
                    AS first_rel
         FROM ranking r LEFT JOIN grades g USING (doc_id)),
@@ -888,9 +881,7 @@ def _retrieval_metrics_oracle() -> str:
         SELECT g, ROW_NUMBER() OVER (ORDER BY g DESC) AS rnk
         FROM ideal_rows),
     idcg AS (
-        SELECT CAST(SUM(CAST(ROUND((pow(2, g) - 1)
-                   / (ln(rnk + 1) / ln(2)) * 1000000000) AS BIGINT))
-                   AS BIGINT) / 1000000000.0 AS idcg
+        SELECT {duck_exact_sum("(pow(2, g) - 1) / (ln(rnk + 1) / ln(2))", 9)} AS idcg
         FROM ideal),
     nrel AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_relevant
              FROM grades WHERE g >= 2)
@@ -1148,48 +1139,43 @@ def _mmr_oracle() -> str:
     remaining candidates 0.7*rel - 0.3*max(sim to selected) and picks
     the (score DESC, cand) argmax."""
     base = f"""
-    WITH coords AS (SELECT vec_id, CAST(dim AS INTEGER) AS dim,
-                           CAST(v AS DOUBLE) AS v
-                    FROM (SELECT vec_id,
-                                 unnest(range(len(embedding))) AS dim,
-                                 unnest(embedding) AS v
-                          FROM embeddings)),
-         norms AS (SELECT vec_id,
-                          sqrt(CAST(SUM(CAST(ROUND(v * v * 1000000000)
-                               AS BIGINT)) AS BIGINT) / 1000000000.0) AS nrm
-                   FROM coords GROUP BY vec_id),
+    WITH coords AS MATERIALIZED (
+             SELECT vec_id, dim, v FROM {_duck_coords(None)} c),
+         norms AS MATERIALIZED (
+             SELECT vec_id, sqrt({duck_exact_sum("v * v", 9)}) AS nrm
+             FROM coords GROUP BY vec_id),
          rel AS (SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-                        (CAST(SUM(CAST(ROUND(q.v * c.v * 1000000000)
-                             AS BIGINT)) AS BIGINT) / 1000000000.0)
+                        ({duck_exact_sum("q.v * c.v", 9)})
                             / (nq.nrm * nc.nrm) AS rel
                  FROM coords q JOIN coords c ON q.dim = c.dim
                  JOIN norms nq ON q.vec_id = nq.vec_id
                  JOIN norms nc ON c.vec_id = nc.vec_id
                  WHERE q.vec_id < {_MMR_NQ} AND c.vec_id >= {_MMR_NQ}
                  GROUP BY q.vec_id, c.vec_id, nq.nrm, nc.nrm),
-         cand AS (SELECT query_id, cand_id, rel FROM (
-                    SELECT query_id, cand_id, rel,
-                           ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY rel DESC, cand_id) AS rnk
-                    FROM rel) WHERE rnk <= {_MMR_CAND}),
-         sims AS (SELECT a.query_id, a.cand_id AS ca, b.cand_id AS cb,
-                         (CAST(SUM(CAST(ROUND(x.v * y.v * 1000000000)
-                              AS BIGINT)) AS BIGINT) / 1000000000.0)
-                             / (na.nrm * nb.nrm) AS sim
-                  FROM cand a JOIN cand b
-                    ON a.query_id = b.query_id AND a.cand_id != b.cand_id
-                  JOIN coords x ON x.vec_id = a.cand_id
-                  JOIN coords y ON y.vec_id = b.cand_id AND x.dim = y.dim
-                  JOIN norms na ON a.cand_id = na.vec_id
-                  JOIN norms nb ON b.cand_id = nb.vec_id
-                  GROUP BY a.query_id, a.cand_id, b.cand_id,
-                           na.nrm, nb.nrm),
-         sel1 AS (SELECT query_id, cand_id,
-                         {_MMR_LAMBDA} * rel AS mmr_score, 1 AS rank
-                  FROM (SELECT query_id, cand_id, rel,
-                               ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY rel DESC, cand_id) AS rn
-                        FROM cand) WHERE rn = 1)"""
+         cand AS MATERIALIZED (
+             SELECT query_id, cand_id, rel FROM (
+                 SELECT query_id, cand_id, rel,
+                        ROW_NUMBER() OVER (PARTITION BY query_id
+                            ORDER BY rel DESC, cand_id) AS rnk
+                 FROM rel) WHERE rnk <= {_MMR_CAND}),
+         sims AS MATERIALIZED (
+             SELECT a.query_id, a.cand_id AS ca, b.cand_id AS cb,
+                    ({duck_exact_sum("x.v * y.v", 9)})
+                        / (na.nrm * nb.nrm) AS sim
+             FROM cand a JOIN cand b
+               ON a.query_id = b.query_id AND a.cand_id != b.cand_id
+             JOIN coords x ON x.vec_id = a.cand_id
+             JOIN coords y ON y.vec_id = b.cand_id AND x.dim = y.dim
+             JOIN norms na ON a.cand_id = na.vec_id
+             JOIN norms nb ON b.cand_id = nb.vec_id
+             GROUP BY a.query_id, a.cand_id, b.cand_id, na.nrm, nb.nrm),
+         sel1 AS MATERIALIZED (
+             SELECT query_id, cand_id,
+                    {_MMR_LAMBDA} * rel AS mmr_score, 1 AS rank
+             FROM (SELECT query_id, cand_id, rel,
+                          ROW_NUMBER() OVER (PARTITION BY query_id
+                              ORDER BY rel DESC, cand_id) AS rn
+                   FROM cand) WHERE rn = 1)"""
     prev_union = "SELECT query_id, cand_id FROM sel1"
     ctes = [base]
     for k in range(2, _MMR_K + 1):
@@ -1208,12 +1194,12 @@ def _mmr_oracle() -> str:
                          SELECT cand_id FROM ({prev_union}) p
                          WHERE p.query_id = c.query_id)
                      GROUP BY c.query_id, c.cand_id, c.rel),
-         sel{k} AS (SELECT query_id, cand_id, mmr_score, {k} AS rank
-                    FROM (SELECT query_id, cand_id, mmr_score,
-                                 ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY mmr_score DESC, cand_id)
-                                     AS rn
-                          FROM pick{k}) WHERE rn = 1)""")
+         sel{k} AS MATERIALIZED (
+             SELECT query_id, cand_id, mmr_score, {k} AS rank
+             FROM (SELECT query_id, cand_id, mmr_score,
+                          ROW_NUMBER() OVER (PARTITION BY query_id
+                              ORDER BY mmr_score DESC, cand_id) AS rn
+                   FROM pick{k}) WHERE rn = 1)""")
         prev_union += f" UNION ALL SELECT query_id, cand_id FROM sel{k}"
     selects = " UNION ALL ".join(
         f"SELECT query_id, cand_id, mmr_score, rank FROM sel{k}"
@@ -1249,9 +1235,6 @@ def q261_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage. Swap the candidate source for q102's IVF-PQ under the same
     replay to serve at billion-vector scale."""
     import pandas as pd
-
-    from hive_reflex_spark.functions import exact_sum
-    from hive_reflex_spark.operators.tensor import embedding_coords
 
     coords = embedding_coords(spark, sf_dir)
     # per-vector norms are referenced FOUR times (nq/nc/na/nb

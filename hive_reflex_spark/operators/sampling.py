@@ -30,9 +30,11 @@ from pyspark.sql import functions as F
 
 from hive_reflex_spark.functions import (
     duck_dyadic_md5_uniform,
+    duck_unit_sum,
     dyadic_md5_uniform,
 )
 from hive_reflex_spark.io import read_table
+from hive_reflex_spark.operators.text import DUCK_SHINGLES, word_shingles
 from hive_reflex_spark.registry import query
 
 SAMPLE_PER_STRATUM = 10
@@ -142,16 +144,8 @@ def _shingles4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (doc_id, 4-word shingle): scan-side transform over the
     token array (same no-window shape as text.doc_shingles, one word
     longer for decontamination specificity)."""
-    docs = read_table(spark, sf_dir, "documents")
-    with_tokens = docs.select("doc_id", F.split("text", " ").alias("ws"))
-    shingles = F.expr(
-        "CASE WHEN size(ws) >= 4 THEN "
-        "transform(sequence(0, size(ws) - 4), "
-        "i -> concat_ws(' ', ws[i], ws[i+1], ws[i+2], ws[i+3])) "
-        "ELSE array() END"
-    )
-    return with_tokens.select(
-        "doc_id", F.explode(shingles).alias("shingle")
+    return word_shingles(
+        read_table(spark, sf_dir, "documents"), 4
     ).dropDuplicates(["doc_id", "shingle"])
 
 
@@ -1032,8 +1026,7 @@ _PRI_SCALE = 4503599627370496.0  # 16^13: md5's first 13 hex digits span
             LIMIT {_PRI_K}),
     est AS (
         SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_sampled,
-               CAST(SUM(CAST(ROUND(GREATEST(CAST(w AS DOUBLE), tau))
-                             AS BIGINT)) AS BIGINT) AS est_cents
+               {duck_unit_sum("GREATEST(CAST(w AS DOUBLE), tau)", 0)} AS est_cents
         FROM smp, tau GROUP BY 1),
     truth AS (SELECT o_orderpriority, CAST(SUM(w) AS BIGINT) AS true_cents
               FROM keyed GROUP BY 1)
@@ -1296,8 +1289,6 @@ def _coverage_oracle() -> str:
     """Unrolled greedy max-coverage: sel1 = candidate with the most
     distinct shingles; each later step picks the candidate adding the
     most UNSEEN shingles (ties -> smaller doc_id)."""
-    from hive_reflex_spark.operators.text import DUCK_SHINGLES
-
     base = f"""
     WITH dsh AS MATERIALIZED (SELECT DISTINCT doc_id, shingle
                   FROM {DUCK_SHINGLES} sh),
@@ -1311,7 +1302,7 @@ def _coverage_oracle() -> str:
                    JOIN cand USING (doc_id)),
          universe AS (SELECT CAST(COUNT(DISTINCT shingle) AS BIGINT) AS u
                       FROM ctoks),
-         sel1 AS (SELECT doc_id, n AS gain, 1 AS rank FROM (
+         sel1 AS MATERIALIZED (SELECT doc_id, n AS gain, 1 AS rank FROM (
                     SELECT doc_id, n, ROW_NUMBER() OVER (
                         ORDER BY n DESC, doc_id) AS rn FROM cand)
                   WHERE rn = 1)"""
@@ -1331,7 +1322,7 @@ def _coverage_oracle() -> str:
                             COALESCE(g.gain, 0) AS gain
                      FROM cand LEFT JOIN gains{k} g USING (doc_id)
                      WHERE cand.doc_id NOT IN ({prev_sel})),
-         sel{k} AS (SELECT doc_id, gain, {k} AS rank FROM (
+         sel{k} AS MATERIALIZED (SELECT doc_id, gain, {k} AS rank FROM (
                       SELECT doc_id, gain, ROW_NUMBER() OVER (
                           ORDER BY gain DESC, doc_id) AS rn
                       FROM allg{k}) WHERE rn = 1)""")

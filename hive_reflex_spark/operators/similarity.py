@@ -25,7 +25,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hive_reflex_spark.functions import exact_sum
+from hive_reflex_spark.functions import (
+    duck_exact_sum,
+    duck_unit_sum,
+    exact_sum,
+)
 from hive_reflex_spark.io import (
     corpus_checkpoint,
     maybe_local_checkpoint,
@@ -43,12 +47,10 @@ N_PLANES = 8
 _COSINE_TOPK_ORACLE = f"""
     WITH coords AS (SELECT * FROM {_duck_coords(None)} c),
          norms AS (SELECT vec_id,
-                          sqrt(CAST(SUM(CAST(ROUND(v * v * 1000000000) AS BIGINT))
-                               AS BIGINT) / 1000000000.0) AS nrm
+                          sqrt({duck_exact_sum("v * v", 9)}) AS nrm
                    FROM coords GROUP BY vec_id),
          dots AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                         CAST(SUM(CAST(ROUND(q.v * c.v * 1000000000) AS BIGINT))
-                              AS BIGINT) / 1000000000.0 AS dot
+                         {duck_exact_sum("q.v * c.v", 9)} AS dot
                   FROM coords q JOIN coords c ON q.dim = c.dim
                   WHERE q.vec_id < {N_QUERIES} AND q.vec_id != c.vec_id
                   GROUP BY q.vec_id, c.vec_id),
@@ -298,10 +300,9 @@ def q52a_cosine_topk_units(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH coords AS (SELECT * FROM {_duck_coords(None)} c),
          planes AS (SELECT unnest(range({N_PLANES})) AS p),
          proj AS (SELECT vec_id, p,
-                         CAST(SUM(CAST(ROUND(
-                             CASE WHEN substr(md5(p || ':' || dim), 1, 1) >= '8'
-                                  THEN -v ELSE v END * 1000000000) AS BIGINT))
-                             AS BIGINT) / 1000000000.0 AS s
+                         {duck_exact_sum(
+                             "CASE WHEN substr(md5(p || ':' || dim), 1, 1) >= '8'"
+                             " THEN -v ELSE v END", 9)} AS s
                   FROM coords, planes
                   GROUP BY vec_id, p),
          buckets AS (SELECT vec_id,
@@ -417,6 +418,22 @@ def _coarse_ranked(coords: DataFrame, cid: str = "cid") -> DataFrame:
     )
 
 
+def _duck_coarse_ranked(cid: str = "cid") -> str:
+    """DuckDB twin of :func:`_coarse_ranked` over the ``coords``
+    (vec_id, dim, v) relation in scope, as a FROM-able subquery:
+    (vec_id, <cid>, dot, rn)."""
+    return f"""(
+        SELECT vec_id, {cid}, dot,
+               ROW_NUMBER() OVER (PARTITION BY vec_id
+                                  ORDER BY dot DESC, {cid}) AS rn
+        FROM (SELECT x.vec_id, c.{cid},
+                     {duck_exact_sum("x.v * c.cv", 9)} AS dot
+              FROM coords x
+              JOIN (SELECT vec_id AS {cid}, dim, v AS cv FROM coords
+                    WHERE vec_id % {N_CENTROIDS_STRIDE} = 0) c USING (dim)
+              GROUP BY x.vec_id, c.{cid}))"""
+
+
 def _probe_candidates(
     coords: DataFrame, n_queries: int, cid: str = "cid"
 ) -> DataFrame:
@@ -448,18 +465,8 @@ def _probe_candidates(
     "q54a_ivf_assign",
     oracle=f"""
     WITH coords AS (SELECT * FROM {_duck_coords(None)} c),
-         cents AS (SELECT vec_id AS cid, dim, v FROM coords
-                   WHERE vec_id % {N_CENTROIDS_STRIDE} = 0),
-         dots AS (SELECT x.vec_id, c.cid,
-                         CAST(SUM(CAST(ROUND(x.v * c.v * 1000000000) AS BIGINT))
-                              AS BIGINT) / 1000000000.0 AS dot
-                  FROM coords x JOIN cents c USING (dim)
-                  GROUP BY x.vec_id, c.cid),
-         assign AS (SELECT vec_id, cid FROM (
-                        SELECT vec_id, cid,
-                               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                                  ORDER BY dot DESC, cid) AS rn
-                        FROM dots) WHERE rn = 1)
+         assign AS (SELECT vec_id, cid FROM {_duck_coarse_ranked()} r
+                    WHERE rn = 1)
     SELECT cid AS centroid_id, COUNT(*) AS n_assigned,
            MIN(vec_id) AS min_vec, MAX(vec_id) AS max_vec
     FROM assign GROUP BY cid
@@ -485,34 +492,18 @@ def q54a_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q54b_ivf_topk",
     oracle=f"""
     WITH coords AS (SELECT * FROM {_duck_coords(None)} c),
-         cents AS (SELECT vec_id AS cid, dim, v AS cv FROM coords
-                   WHERE vec_id % {N_CENTROIDS_STRIDE} = 0),
-         cdots AS (SELECT x.vec_id, c.cid,
-                          CAST(SUM(CAST(ROUND(x.v * c.cv * 1000000000)
-                               AS BIGINT)) AS BIGINT) / 1000000000.0 AS dot
-                   FROM coords x JOIN cents c USING (dim)
-                   GROUP BY x.vec_id, c.cid),
-         assign AS (SELECT vec_id, cid FROM (
-                        SELECT vec_id, cid,
-                               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                                  ORDER BY dot DESC, cid) AS rn
-                        FROM cdots) WHERE rn = 1),
-         probes AS (SELECT vec_id AS query_id, cid FROM (
-                        SELECT vec_id, cid,
-                               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                                  ORDER BY dot DESC, cid) AS rn
-                        FROM cdots WHERE vec_id < {N_QUERIES})
-                    WHERE rn <= {N_PROBE}),
+         ranked AS MATERIALIZED {_duck_coarse_ranked()},
+         assign AS (SELECT vec_id, cid FROM ranked WHERE rn = 1),
+         probes AS (SELECT vec_id AS query_id, cid FROM ranked
+                    WHERE vec_id < {N_QUERIES} AND rn <= {N_PROBE}),
          cand AS (SELECT p.query_id, a.vec_id AS neighbor_id
                   FROM probes p JOIN assign a ON p.cid = a.cid
                   WHERE p.query_id != a.vec_id),
          norms AS (SELECT vec_id,
-                          sqrt(CAST(SUM(CAST(ROUND(v * v * 1000000000)
-                               AS BIGINT)) AS BIGINT) / 1000000000.0) AS nrm
+                          sqrt({duck_exact_sum("v * v", 9)}) AS nrm
                    FROM coords GROUP BY vec_id),
          dots AS (SELECT k.query_id, k.neighbor_id,
-                         CAST(SUM(CAST(ROUND(q.v * c.v * 1000000000)
-                              AS BIGINT)) AS BIGINT) / 1000000000.0 AS dot
+                         {duck_exact_sum("q.v * c.v", 9)} AS dot
                   FROM cand k
                   JOIN coords q ON q.vec_id = k.query_id
                   JOIN coords c ON c.vec_id = k.neighbor_id
@@ -585,13 +576,6 @@ def q54b_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 KM_ITERS = 2
 _E9 = 1_000_000_000
-
-
-def _km_sum(expr: str) -> str:
-    return (
-        f"CAST(SUM(CAST(ROUND(({expr}) * {_E9}) AS BIGINT)) AS BIGINT)"
-        f" / {_E9}.0"
-    )
 
 
 def kmeans_train(
@@ -691,7 +675,7 @@ def _kmeans_oracle() -> str:
     for k in range(1, KM_ITERS + 1):
         parts.append(
             f"""d{k} AS (SELECT x.vec_id, c.cid,
-                ROUND({_km_sum("(x.v - c.cv) * (x.v - c.cv)")}, 6) AS d2
+                ROUND({duck_exact_sum("(x.v - c.cv) * (x.v - c.cv)", 9)}, 6) AS d2
                 FROM coords x JOIN {prev} c USING (dim)
                 GROUP BY x.vec_id, c.cid)"""
         )
@@ -704,7 +688,7 @@ def _kmeans_oracle() -> str:
         )
         parts.append(
             f"""mn{k} AS (SELECT a.cid, x.dim,
-                ROUND(({_km_sum("x.v")}) / COUNT(*), 9) AS mv
+                ROUND(({duck_exact_sum("x.v", 9)}) / COUNT(*), 9) AS mv
                 FROM a{k} a JOIN coords x USING (vec_id)
                 GROUP BY a.cid, x.dim)"""
         )
@@ -715,12 +699,11 @@ def _kmeans_oracle() -> str:
         )
         parts.append(
             f"""m{k} AS (SELECT {k} AS iter,
-                (SELECT ROUND({_km_sum("d2")}, 6) FROM a{k}) AS inertia,
+                (SELECT ROUND({duck_exact_sum("d2", 9)}, 6) FROM a{k}) AS inertia,
                 (SELECT CAST(COUNT(DISTINCT cid) AS BIGINT) FROM a{k}) AS k_live,
                 (SELECT CAST(MAX(n) AS BIGINT) FROM
                     (SELECT COUNT(*) AS n FROM a{k} GROUP BY cid) cz) AS max_cluster,
-                (SELECT ROUND(CAST(SUM(CAST(ROUND(ABS(n.cv - o.cv) * {_E9})
-                                            AS BIGINT)) AS BIGINT) / {_E9}.0, 6)
+                (SELECT ROUND({duck_exact_sum("ABS(n.cv - o.cv)", 9)}, 6)
                  FROM c{k} n JOIN {prev} o
                    ON n.cid = o.cid AND n.dim = o.dim) AS centroid_shift)"""
         )
@@ -780,16 +763,12 @@ def q88_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
                    END * scale AS r
             FROM scaled),
     per_vec AS (SELECT vec_id, label,
-                       CAST(SUM(CAST(ROUND((v - r) * (v - r) * 1e9)
-                           AS BIGINT)) AS BIGINT) AS e2_9,
+                       {duck_unit_sum("(v - r) * (v - r)", 9)} AS e2_9,
                        MAX(ROUND(abs(v - r), 9)) AS max_err,
                        COUNT(*) AS d,
-                       CAST(SUM(CAST(ROUND(v * r * 1e9) AS BIGINT))
-                           AS BIGINT) AS dot_9,
-                       CAST(SUM(CAST(ROUND(v * v * 1e9) AS BIGINT))
-                           AS BIGINT) AS n2a_9,
-                       CAST(SUM(CAST(ROUND(r * r * 1e9) AS BIGINT))
-                           AS BIGINT) AS n2b_9
+                       {duck_unit_sum("v * r", 9)} AS dot_9,
+                       {duck_unit_sum("v * v", 9)} AS n2a_9,
+                       {duck_unit_sum("r * r", 9)} AS n2b_9
                 FROM rec GROUP BY vec_id, label),
     cosv AS (SELECT vec_id, label, e2_9, max_err, d,
                     CAST(ROUND(dot_9 / sqrt(n2a_9 * 1.0)
@@ -919,7 +898,7 @@ def _pq_cte_prefix() -> str:
     """Shared CTE chain (coords → seed codebook → Lloyd step → final
     assignment a1 / codebook cb1) for the PQ oracles."""
     stride = N_CENTROIDS_STRIDE
-    sq = _km_sum("(x.v - c.cv) * (x.v - c.cv)")
+    sq = duck_exact_sum("(x.v - c.cv) * (x.v - c.cv)", 9)
     return f"""
     WITH coords AS (SELECT vec_id, CAST(dim // {PQ_SUBDIM} AS INT) AS sub,
                            dim, v
@@ -935,7 +914,7 @@ def _pq_cte_prefix() -> str:
                                          ORDER BY d2, cid) AS rn
                FROM d0) WHERE rn = 1),
     mn AS (SELECT a.sub, a.cid, x.dim,
-                  ROUND(({_km_sum("x.v")}) / COUNT(*), 9) AS mv
+                  ROUND(({duck_exact_sum("x.v", 9)}) / COUNT(*), 9) AS mv
            FROM a0 a JOIN coords x ON a.vec_id = x.vec_id AND a.sub = x.sub
            GROUP BY a.sub, a.cid, x.dim),
     cb1 AS (SELECT s.sub, s.dim, s.cid, COALESCE(m.mv, s.cv) AS cv
@@ -954,17 +933,16 @@ def _pq_cte_prefix() -> str:
 def _pq_oracle() -> str:
     return _pq_cte_prefix() + f"""
     SELECT sub, cid, CAST(COUNT(*) AS BIGINT) AS n_vectors,
-           ROUND(({_km_sum("d2")}) / COUNT(*), 6) AS avg_qerr
+           ROUND(({duck_exact_sum("d2", 9)}) / COUNT(*), 6) AS avg_qerr
     FROM a1 GROUP BY sub, cid
     """
 
 
 PQ_N_QUERIES = 4  # query vectors for the oracled ADC search
-_E6 = 1_000_000
 
 
 def _pq_adc_oracle() -> str:
-    sqq = _km_sum("(q.qv - c.cv) * (q.qv - c.cv)")
+    sqq = duck_exact_sum("(q.qv - c.cv) * (q.qv - c.cv)", 9)
     return _pq_cte_prefix() + f""",
     qd AS (SELECT vec_id AS query_id, sub, dim, v AS qv FROM coords
            WHERE vec_id < {PQ_N_QUERIES}),
@@ -972,8 +950,7 @@ def _pq_adc_oracle() -> str:
            FROM qd q JOIN cb1 c ON q.sub = c.sub AND q.dim = c.dim
            GROUP BY q.query_id, c.sub, c.cid),
     ad AS (SELECT d.query_id, a.vec_id AS neighbor_id,
-                  CAST(SUM(CAST(ROUND(d.dpart * {_E6}) AS BIGINT))
-                       AS BIGINT) / {_E6}.0 AS adist
+                  {duck_exact_sum("d.dpart", 6)} AS adist
            FROM a1 a JOIN dt d ON a.sub = d.sub AND a.cid = d.cid
            GROUP BY d.query_id, a.vec_id)
     SELECT query_id, neighbor_id, adist, rnk FROM (
@@ -1118,19 +1095,9 @@ def _ivfpq_oracle() -> str:
     """q54b's pinned dot-based coarse probing composed with q102a's ADC
     chain, restricted to probed candidates — the full IVF-PQ pipeline as
     one CTE graph."""
-    sqq = _km_sum("(q.qv - c.cv) * (q.qv - c.cv)")
+    sqq = duck_exact_sum("(q.qv - c.cv) * (q.qv - c.cv)", 9)
     return _pq_cte_prefix() + f""",
-    cents AS (SELECT vec_id AS ccid, dim, v AS cv FROM coords
-              WHERE vec_id % {N_CENTROIDS_STRIDE} = 0),
-    cdots AS (SELECT x.vec_id, c.ccid,
-                     CAST(SUM(CAST(ROUND(x.v * c.cv * 1000000000) AS BIGINT))
-                          AS BIGINT) / 1000000000.0 AS dot
-              FROM coords x JOIN cents c ON x.dim = c.dim
-              GROUP BY x.vec_id, c.ccid),
-    cranked AS (SELECT vec_id, ccid,
-                       ROW_NUMBER() OVER (PARTITION BY vec_id
-                                          ORDER BY dot DESC, ccid) AS rn
-                FROM cdots),
+    cranked AS MATERIALIZED {_duck_coarse_ranked("ccid")},
     cassign AS (SELECT vec_id, ccid FROM cranked WHERE rn = 1),
     probes AS (SELECT vec_id AS query_id, ccid FROM cranked
                WHERE vec_id < {PQ_N_QUERIES} AND rn <= {N_PROBE}),
@@ -1143,8 +1110,7 @@ def _ivfpq_oracle() -> str:
            FROM qd q JOIN cb1 c ON q.sub = c.sub AND q.dim = c.dim
            GROUP BY q.query_id, c.sub, c.cid),
     ad AS (SELECT k.query_id, k.neighbor_id,
-                  CAST(SUM(CAST(ROUND(d.dpart * {_E6}) AS BIGINT))
-                       AS BIGINT) / {_E6}.0 AS adist
+                  {duck_exact_sum("d.dpart", 6)} AS adist
            FROM cand k
            JOIN a1 a ON a.vec_id = k.neighbor_id
            JOIN dt d ON d.query_id = k.query_id AND d.sub = a.sub
@@ -1179,18 +1145,8 @@ def q102b_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q106_diversity_sample",
     oracle=f"""
     WITH coords AS (SELECT * FROM {_duck_coords(None)} c),
-         cents AS (SELECT vec_id AS cid, dim, v FROM coords
-                   WHERE vec_id % {N_CENTROIDS_STRIDE} = 0),
-         dots AS (SELECT x.vec_id, c.cid,
-                         CAST(SUM(CAST(ROUND(x.v * c.v * 1000000000) AS BIGINT))
-                              AS BIGINT) / 1000000000.0 AS dot
-                  FROM coords x JOIN cents c USING (dim)
-                  GROUP BY x.vec_id, c.cid),
-         assign AS (SELECT vec_id, cid, dot FROM (
-                        SELECT vec_id, cid, dot,
-                               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                                  ORDER BY dot DESC, cid) AS rn
-                        FROM dots) WHERE rn = 1),
+         assign AS (SELECT vec_id, cid, dot FROM {_duck_coarse_ranked()} r
+                    WHERE rn = 1),
          sized AS (SELECT vec_id, cid, dot,
                           ROW_NUMBER() OVER (PARTITION BY cid
                                              ORDER BY dot DESC, vec_id) AS rnk,
@@ -1247,8 +1203,7 @@ def q106_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH coords AS (SELECT * FROM {_duck_coords(None)} c),
          cent AS (SELECT label, vec_id % 2 AS half, dim,
                          CAST(COUNT(DISTINCT vec_id) AS BIGINT) AS n,
-                         CAST(SUM(CAST(ROUND(v * 1000000000) AS BIGINT))
-                              AS BIGINT) / 1000000000.0
+                         {duck_exact_sum("v", 9)}
                              / COUNT(DISTINCT vec_id) AS c
                   FROM coords GROUP BY label, half, dim),
          paired AS (SELECT a.label, a.dim,
@@ -1258,15 +1213,10 @@ def q106_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                       ON a.label = b.label AND a.dim = b.dim
                      AND a.half = 0 AND b.half = 1),
          sums AS (SELECT label, MIN(n_ref) AS n_ref, MIN(n_cand) AS n_cand,
-                         CAST(SUM(CAST(ROUND(ca * cb * 1000000000) AS BIGINT))
-                              AS BIGINT) / 1000000000.0 AS dot,
-                         CAST(SUM(CAST(ROUND(ca * ca * 1000000000) AS BIGINT))
-                              AS BIGINT) / 1000000000.0 AS na,
-                         CAST(SUM(CAST(ROUND(cb * cb * 1000000000) AS BIGINT))
-                              AS BIGINT) / 1000000000.0 AS nb,
-                         CAST(SUM(CAST(ROUND((ca - cb) * (ca - cb)
-                              * 1000000000) AS BIGINT)) AS BIGINT)
-                             / 1000000000.0 AS sq
+                         {duck_exact_sum("ca * cb", 9)} AS dot,
+                         {duck_exact_sum("ca * ca", 9)} AS na,
+                         {duck_exact_sum("cb * cb", 9)} AS nb,
+                         {duck_exact_sum("(ca - cb) * (ca - cb)", 9)} AS sq
                   FROM paired GROUP BY label)
     SELECT label, n_ref, n_cand,
            ROUND(sqrt(sq), 6) AS l2_drift,
@@ -1334,10 +1284,9 @@ _BUCKETS_SQL = f"""(
            CAST(SUM(CASE WHEN s > 0 THEN CAST(pow(2, p) AS BIGINT)
                     ELSE 0 END) AS BIGINT) AS bucket
     FROM (SELECT vec_id, p,
-                 CAST(SUM(CAST(ROUND(
-                     CASE WHEN substr(md5(p || ':' || dim), 1, 1) >= '8'
-                          THEN -v ELSE v END * 1000000000) AS BIGINT))
-                     AS BIGINT) / 1000000000.0 AS s
+                 {duck_exact_sum(
+                     "CASE WHEN substr(md5(p || ':' || dim), 1, 1) >= '8'"
+                     " THEN -v ELSE v END", 9)} AS s
           FROM {_duck_coords(None)} c,
                (SELECT unnest(range({N_PLANES})) AS p) planes
           GROUP BY vec_id, p)
@@ -1423,7 +1372,7 @@ def q178_multiprobe_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH coords AS (SELECT * FROM {_duck_coords(None)} c),
     per AS (SELECT label, dim, CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(CAST(ROUND(v * 1000000) AS BIGINT)) AS BIGINT)
+                   {duck_unit_sum("v", 6)}
                        AS s,
                    CAST(SUM(CAST(ROUND(v * 1000) AS BIGINT)
                         * CAST(ROUND(v * 1000) AS BIGINT)) AS BIGINT)
@@ -1676,8 +1625,7 @@ JL_PAIR_CAP = 128  # distortion audit fence: pairs among the first 128 vectors
     oracle=f"""
     WITH coords AS (SELECT * FROM {_duck_coords(JL_PAIR_CAP)} c),
          proj AS (SELECT vec_id, j,
-                         0.25 * (CAST(SUM(CAST(ROUND(v * s * 1000000000)
-                             AS BIGINT)) AS BIGINT) / 1000000000.0) AS y
+                         0.25 * ({duck_exact_sum("v * s", 9)}) AS y
                   FROM (SELECT vec_id, dim, v, j,
                                CASE WHEN substr(md5('jl' || CAST(j AS VARCHAR)
                                         || ':' || CAST(dim AS VARCHAR)), 1, 1)
@@ -1687,16 +1635,12 @@ JL_PAIR_CAP = 128  # distortion audit fence: pairs among the first 128 vectors
                              (SELECT unnest(range({JL_DIMS})) AS j) js)
                   GROUP BY vec_id, j),
          od AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                       CAST(SUM(CAST(ROUND((a.v - b.v) * (a.v - b.v)
-                            * 1000000000) AS BIGINT)) AS BIGINT)
-                           / 1000000000.0 AS d2
+                       {duck_exact_sum("(a.v - b.v) * (a.v - b.v)", 9)} AS d2
                 FROM coords a JOIN coords b
                   ON a.dim = b.dim AND a.vec_id < b.vec_id
                 GROUP BY a.vec_id, b.vec_id),
          pd AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                       CAST(SUM(CAST(ROUND((a.y - b.y) * (a.y - b.y)
-                            * 1000000000) AS BIGINT)) AS BIGINT)
-                           / 1000000000.0 AS d2
+                       {duck_exact_sum("(a.y - b.y) * (a.y - b.y)", 9)} AS d2
                 FROM proj a JOIN proj b
                   ON a.j = b.j AND a.vec_id < b.vec_id
                 GROUP BY a.vec_id, b.vec_id),
@@ -1706,10 +1650,8 @@ JL_PAIR_CAP = 128  # distortion audit fence: pairs among the first 128 vectors
                     WHERE od.d2 > 0)
     SELECT LEAST(CAST(floor(r * 4) AS BIGINT), CAST(7 AS BIGINT)) AS bucket,
            CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           CAST(SUM(CAST(ROUND(r * 1000000) AS BIGINT)) AS BIGINT)
-               / 1000000.0 / COUNT(*) AS mean_ratio_raw,
-           ROUND(CAST(SUM(CAST(ROUND(r * 1000000) AS BIGINT)) AS BIGINT)
-               / 1000000.0 / COUNT(*), 6) AS mean_ratio
+           {duck_exact_sum("r", 6)} / COUNT(*) AS mean_ratio_raw,
+           ROUND({duck_exact_sum("r", 6)} / COUNT(*), 6) AS mean_ratio
     FROM ratios GROUP BY 1
     """,
 )
@@ -1899,29 +1841,14 @@ def ivf_own_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q294_simplified_silhouette",
     oracle=f"""
     WITH coords AS (SELECT * FROM {_duck_coords(None)} c),
-         cents AS (SELECT vec_id AS cid, dim, v AS cv FROM coords
-                   WHERE vec_id % {N_CENTROIDS_STRIDE} = 0),
-         dots AS (SELECT x.vec_id, c.cid,
-                         CAST(SUM(CAST(ROUND(x.v * c.cv * 1000000000)
-                              AS BIGINT)) AS BIGINT) / 1000000000.0 AS dot
-                  FROM coords x JOIN cents c USING (dim)
-                  GROUP BY x.vec_id, c.cid),
-         nx AS (SELECT vec_id,
-                       sqrt(CAST(SUM(CAST(ROUND(v * v * 1000000000)
-                            AS BIGINT)) AS BIGINT) / 1000000000.0) AS nrm
-                FROM coords GROUP BY vec_id),
-         nc AS (SELECT cid,
-                       sqrt(CAST(SUM(CAST(ROUND(cv * cv * 1000000000)
-                            AS BIGINT)) AS BIGINT) / 1000000000.0) AS cnrm
-                FROM cents GROUP BY cid),
+         nx AS MATERIALIZED (
+             SELECT vec_id, sqrt({duck_exact_sum("v * v", 9)}) AS nrm
+             FROM coords GROUP BY vec_id),
          dist AS (SELECT d.vec_id, d.cid,
-                         1.0 - d.dot / (nx.nrm * nc.cnrm) AS dd,
-                         ROW_NUMBER() OVER (PARTITION BY d.vec_id
-                                            ORDER BY d.dot DESC, d.cid)
-                             AS rn
-                  FROM dots d
+                         1.0 - d.dot / (nx.nrm * nc.nrm) AS dd, d.rn
+                  FROM {_duck_coarse_ranked()} d
                   JOIN nx ON nx.vec_id = d.vec_id
-                  JOIN nc ON nc.cid = d.cid),
+                  JOIN nx nc ON nc.vec_id = d.cid),
          per_vec AS (SELECT vec_id,
                             MAX(CASE WHEN rn = 1 THEN cid END) AS own,
                             MAX(CASE WHEN rn = 1 THEN dd END) AS a,
@@ -2016,19 +1943,8 @@ def q294_simplified_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q297_cluster_label_nmi",
     oracle=f"""
     WITH coords AS (SELECT * FROM {_duck_coords(None)} c),
-         cents AS (SELECT vec_id AS cid, dim, v AS cv FROM coords
-                   WHERE vec_id % {N_CENTROIDS_STRIDE} = 0),
-         dots AS (SELECT x.vec_id, c.cid,
-                         CAST(SUM(CAST(ROUND(x.v * c.cv * 1000000000)
-                              AS BIGINT)) AS BIGINT) / 1000000000.0 AS dot
-                  FROM coords x JOIN cents c USING (dim)
-                  GROUP BY x.vec_id, c.cid),
-         assign AS (SELECT vec_id, cid FROM (
-                        SELECT vec_id, cid,
-                               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                                  ORDER BY dot DESC, cid)
-                                   AS rn
-                        FROM dots) WHERE rn = 1),
+         assign AS (SELECT vec_id, cid FROM {_duck_coarse_ranked()} r
+                    WHERE rn = 1),
          joint AS (SELECT a.cid, e.label,
                           CAST(COUNT(*) AS BIGINT) AS n_cl
                    FROM assign a JOIN embeddings e USING (vec_id)
@@ -2038,21 +1954,21 @@ def q294_simplified_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
          ml AS (SELECT label, CAST(SUM(n_cl) AS BIGINT) AS n_l
                 FROM joint GROUP BY label),
          tot AS (SELECT CAST(SUM(n_cl) AS BIGINT) AS n FROM joint),
-         iu AS (SELECT CAST(SUM(CAST(ROUND(1e9 * (j.n_cl * 1.0 / tot.n)
-                            * ln(tot.n * 1.0 * j.n_cl
-                                 / (mc.n_c * 1.0 * ml.n_l)))
-                            AS BIGINT)) AS BIGINT) AS i_units
+         iu AS (SELECT {duck_unit_sum(
+                            "1e9 * (j.n_cl * 1.0 / tot.n)"
+                            " * ln(tot.n * 1.0 * j.n_cl"
+                            " / (mc.n_c * 1.0 * ml.n_l))", 0)} AS i_units
                FROM joint j
                JOIN mc ON mc.cid = j.cid
                JOIN ml ON ml.label = j.label
                CROSS JOIN tot),
-         hcu AS (SELECT CAST(SUM(CAST(ROUND(1e9 * (mc.n_c * 1.0 / tot.n)
-                             * ln(tot.n * 1.0 / mc.n_c)) AS BIGINT))
-                        AS BIGINT) AS hc_units
+         hcu AS (SELECT {duck_unit_sum(
+                             "1e9 * (mc.n_c * 1.0 / tot.n)"
+                             " * ln(tot.n * 1.0 / mc.n_c)", 0)} AS hc_units
                 FROM mc, tot),
-         hlu AS (SELECT CAST(SUM(CAST(ROUND(1e9 * (ml.n_l * 1.0 / tot.n)
-                             * ln(tot.n * 1.0 / ml.n_l)) AS BIGINT))
-                        AS BIGINT) AS hl_units
+         hlu AS (SELECT {duck_unit_sum(
+                             "1e9 * (ml.n_l * 1.0 / tot.n)"
+                             " * ln(tot.n * 1.0 / ml.n_l)", 0)} AS hl_units
                 FROM ml, tot),
          pur AS (SELECT CAST(SUM(mx) AS BIGINT) AS n_majority
                  FROM (SELECT cid, MAX(n_cl) AS mx

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hive_reflex_spark.functions import duck_exact_sum, exact_sum
 from hive_reflex_spark.io import maybe_local_checkpoint, read_table
 from hive_reflex_spark.registry import query
 
@@ -154,11 +155,10 @@ def q139_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q168_bucketed_colocated_join",
-    oracle="""
+    oracle=f"""
     SELECT c_mktsegment,
            COUNT(*) AS n_orders,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-               / 100.0 AS total_price
+           {duck_exact_sum("o_totalprice")} AS total_price
     FROM orders JOIN customer ON o_custkey = c_custkey
     GROUP BY c_mktsegment
     """,
@@ -183,8 +183,6 @@ def q168_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = colocated_join(
         spark, "hrs_q168_orders", "hrs_q168_customer", "o_custkey"
     )
-    from hive_reflex_spark.functions import exact_sum
-
     return joined.groupBy("c_mktsegment").agg(
         F.count("*").alias("n_orders"),
         exact_sum(F.col("o_totalprice"), 2).alias("total_price"),

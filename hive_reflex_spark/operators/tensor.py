@@ -25,7 +25,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hive_reflex_spark.functions import exact_sum, spark_exact_sum
+from hive_reflex_spark.functions import (
+    duck_exact_sum,
+    exact_sum,
+    spark_exact_sum,
+)
 from hive_reflex_spark.functions.tensor_fns import (
     gelu,
     relu,
@@ -222,8 +226,7 @@ def _duck_coords(max_vec: int | None = None) -> str:
     "q30_coord_matmul_gram",
     oracle=f"""
     SELECT a.vec_id AS i, b.vec_id AS j,
-           CAST(SUM(CAST(ROUND(a.v * b.v * 1000000000) AS BIGINT)) AS BIGINT)
-               / 1000000000.0 AS dot
+           {duck_exact_sum("a.v * b.v", 9)} AS dot
     FROM {_duck_coords(24)} a JOIN {_duck_coords(24)} b ON a.dim = b.dim
     WHERE a.vec_id <= b.vec_id
     GROUP BY a.vec_id, b.vec_id
@@ -250,8 +253,7 @@ def q30_coord_matmul_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q30a_gram_matmul_array",
     oracle=f"""
     SELECT a.vec_id AS i, b.vec_id AS j,
-           CAST(SUM(CAST(ROUND(a.v * b.v * 1000000000) AS BIGINT)) AS BIGINT)
-               / 1000000000.0 AS dot
+           {duck_exact_sum("a.v * b.v", 9)} AS dot
     FROM {_duck_coords(256)} a JOIN {_duck_coords(256)} b ON a.dim = b.dim
     WHERE a.vec_id <= b.vec_id
     GROUP BY a.vec_id, b.vec_id
@@ -306,8 +308,7 @@ def q30a_gram_matmul_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q30b_gram_matmul_numpy",
     oracle=f"""
     SELECT a.vec_id AS i, b.vec_id AS j,
-           CAST(SUM(CAST(ROUND(a.v * b.v * 1000000000) AS BIGINT)) AS BIGINT)
-               / 1000000000.0 AS dot
+           {duck_exact_sum("a.v * b.v", 9)} AS dot
     FROM {_duck_coords(256)} a JOIN {_duck_coords(256)} b ON a.dim = b.dim
     WHERE a.vec_id <= b.vec_id
     GROUP BY a.vec_id, b.vec_id
@@ -380,8 +381,7 @@ def q30b_gram_matmul_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q31_sparse_matmul",
     oracle=f"""
     SELECT a.vec_id AS i, b.vec_id AS j,
-           CAST(SUM(CAST(ROUND(a.v * b.v * 1000000000) AS BIGINT)) AS BIGINT)
-               / 1000000000.0 AS dot,
+           {duck_exact_sum("a.v * b.v", 9)} AS dot,
            COUNT(*) AS n_macs
     FROM {_duck_coords(24)} a JOIN {_duck_coords(24)} b ON a.dim = b.dim
     WHERE a.vec_id <= b.vec_id AND abs(a.v) >= 0.05 AND abs(b.v) >= 0.05
@@ -449,12 +449,12 @@ def q32_quantize_symmetric(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q33_quant_error",
     oracle=f"""
     SELECT vec_id,
-           CAST(SUM(CAST(ROUND(abs(v - ROUND(least(greatest(ROUND(v / (mx / 127.0)),
-               -127), 127)) * (mx / 127.0)) * 1000000000) AS BIGINT)) AS BIGINT)
-               / 1000000000.0 / COUNT(*) AS mae,
-           CAST(SUM(CAST(ROUND(pow(v - ROUND(least(greatest(ROUND(v / (mx / 127.0)),
-               -127), 127)) * (mx / 127.0), 2) * 1000000000) AS BIGINT)) AS BIGINT)
-               / 1000000000.0 / COUNT(*) AS mse
+           {duck_exact_sum(
+               "abs(v - ROUND(least(greatest(ROUND(v / (mx / 127.0)), -127),"
+               " 127)) * (mx / 127.0))", 9)} / COUNT(*) AS mae,
+           {duck_exact_sum(
+               "pow(v - ROUND(least(greatest(ROUND(v / (mx / 127.0)), -127),"
+               " 127)) * (mx / 127.0), 2)", 9)} / COUNT(*) AS mse
     FROM (SELECT vec_id, v, MAX(abs(v)) OVER (PARTITION BY vec_id) AS mx
           FROM {_duck_coords(None)})
     GROUP BY vec_id
@@ -631,11 +631,9 @@ def q37_magnitude_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q38_channel_norms",
     oracle=f"""
     SELECT dim,
-           ROUND(sqrt(CAST(SUM(CAST(ROUND(v * v * 1000000000) AS BIGINT))
-                           AS BIGINT) / 1000000000.0), 6) AS l2_norm,
+           ROUND(sqrt({duck_exact_sum("v * v", 9)}), 6) AS l2_norm,
            ROW_NUMBER() OVER (
-               ORDER BY sqrt(CAST(SUM(CAST(ROUND(v * v * 1000000000) AS BIGINT))
-                             AS BIGINT) / 1000000000.0), dim) AS norm_rank
+               ORDER BY sqrt({duck_exact_sum("v * v", 9)}), dim) AS norm_rank
     FROM {_duck_coords(None)}
     GROUP BY dim
     """,
@@ -665,17 +663,13 @@ def q38_channel_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q39_activation_stats",
     oracle=f"""
     SELECT label,
-           CAST(SUM(CAST(ROUND(greatest(v, 0) * 1000000) AS BIGINT)) AS BIGINT)
-               / 1000000.0 AS sum_relu,
-           CAST(SUM(CAST(ROUND(ROUND(1 / (1 + exp(-v)), 6) * 1000000) AS BIGINT))
-               AS BIGINT) / 1000000.0 AS sum_sigmoid,
-           CAST(SUM(CAST(ROUND(ROUND(1 - 2 / (exp(2 * v) + 1), 6) * 1000000)
-               AS BIGINT)) AS BIGINT) / 1000000.0 AS sum_tanh,
-           CAST(SUM(CAST(ROUND(ROUND(0.5 * v * (2 - 2 / (exp(2 *
-               (0.7978845608028654 * (v + 0.044715 * v * v * v))) + 1)), 6)
-               * 1000000) AS BIGINT)) AS BIGINT) / 1000000.0 AS sum_gelu,
-           CAST(SUM(CAST(ROUND(ROUND(v / (1 + exp(-v)), 6) * 1000000) AS BIGINT))
-               AS BIGINT) / 1000000.0 AS sum_silu
+           {duck_exact_sum("greatest(v, 0)", 6)} AS sum_relu,
+           {duck_exact_sum("ROUND(1 / (1 + exp(-v)), 6)", 6)} AS sum_sigmoid,
+           {duck_exact_sum("ROUND(1 - 2 / (exp(2 * v) + 1), 6)", 6)} AS sum_tanh,
+           {duck_exact_sum(
+               "ROUND(0.5 * v * (2 - 2 / (exp(2 * (0.7978845608028654"
+               " * (v + 0.044715 * v * v * v))) + 1)), 6)", 6)} AS sum_gelu,
+           {duck_exact_sum("ROUND(v / (1 + exp(-v)), 6)", 6)} AS sum_silu
     FROM {_duck_coords(None)}
     GROUP BY label
     """,
@@ -700,8 +694,7 @@ def q39_activation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q40_pooling",
     oracle=f"""
     SELECT label, CAST(dim // 8 AS INTEGER) AS bucket,
-           CAST(SUM(CAST(ROUND(v * 1000000000) AS BIGINT)) AS BIGINT)
-               / 1000000000.0 / COUNT(*) AS avg_pool,
+           {duck_exact_sum("v", 9)} / COUNT(*) AS avg_pool,
            MAX(v) AS max_pool,
            COUNT(*) AS n_elems
     FROM {_duck_coords(None)}
@@ -732,11 +725,10 @@ def q40_pooling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q41_embedding_lookup",
-    oracle="""
+    oracle=f"""
     SELECT event_type,
            COUNT(*) AS n,
-           CAST(SUM(CAST(ROUND(CAST(embedding[1] AS DOUBLE) * 1000000000)
-               AS BIGINT)) AS BIGINT) / 1000000000.0 AS sum_dim0
+           {duck_exact_sum("CAST(embedding[1] AS DOUBLE)", 9)} AS sum_dim0
     FROM events JOIN embeddings ON user_id = vec_id
     GROUP BY event_type
     """,
@@ -882,8 +874,7 @@ HOF_POS_THRESHOLD = 0.5
            CAST(COUNT(*) AS INTEGER) AS n_dims,
            CAST(SUM(CASE WHEN v > 0 THEN 1 ELSE 0 END) AS INTEGER)
                AS n_positive,
-           CAST(SUM(CAST(ROUND(v * 1000000000) AS BIGINT)) AS BIGINT)
-               / 1000000000.0 AS total,
+           {duck_exact_sum("v", 9)} AS total,
            ROUND(MAX(v), 6) AS vmax,
            CAST(MIN(CASE WHEN v > {HOF_POS_THRESHOLD!r} THEN dim END)
                 AS INTEGER) AS first_hot_dim

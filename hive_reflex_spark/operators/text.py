@@ -20,6 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hive_reflex_spark.functions import duck_exact_sum, duck_unit_sum
 from hive_reflex_spark.io import (
     chain_checkpoint,
     corpus_checkpoint,
@@ -59,23 +60,28 @@ DUCK_WORDS = """(
           FROM documents))"""
 
 
-def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-word shingles per document (the dedup unit): array-slide via
-    transform over the token array — a pure scan-side projection (no
-    window, no shuffle, no sort), then explode. At 100 TB this keeps
-    shingling embarrassingly parallel; the first shuffle in the dedup
-    pipeline is the signature/collision join itself. (doc_id, shingle)."""
-    docs = read_table(spark, sf_dir, "documents")
+def word_shingles(docs: DataFrame, n: int) -> DataFrame:
+    """(doc_id, shingle) for every n-word window of ``docs.text``:
+    array-slide via transform over the token array — a pure scan-side
+    projection (no window, no shuffle, no sort), then explode. At 100 TB
+    this keeps shingling embarrassingly parallel; the first shuffle in
+    the dedup pipeline is the signature/collision join itself."""
     # Materialize the token array once per row (a lambda referencing
     # split(...) directly re-splits per element: O(len^2) per doc).
     with_tokens = docs.select("doc_id", F.split("text", " ").alias("ws"))
+    words = ", ".join(["ws[i]"] + [f"ws[i+{k}]" for k in range(1, n)])
     shingles = F.expr(
-        "CASE WHEN size(ws) >= 3 THEN "
-        "transform(sequence(0, size(ws) - 3), "
-        "i -> concat_ws(' ', ws[i], ws[i+1], ws[i+2])) "
+        f"CASE WHEN size(ws) >= {n} THEN "
+        f"transform(sequence(0, size(ws) - {n}), "
+        f"i -> concat_ws(' ', {words})) "
         "ELSE array() END"
     )
     return with_tokens.select("doc_id", F.explode(shingles).alias("shingle"))
+
+
+def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """3-word shingles per document (the dedup unit): (doc_id, shingle)."""
+    return word_shingles(read_table(spark, sf_dir, "documents"), 3)
 
 
 DUCK_SHINGLES = f"""(
@@ -192,8 +198,7 @@ _ENTROPY_TAU = 0.94  # low-entropy flag: norm below the fixture's ~5% tail
                       CAST(SUM(c) AS BIGINT) AS n_tokens,
                       CAST(COUNT(*) AS BIGINT) AS n_types,
                       CAST(MAX(c) AS BIGINT) AS max_count,
-                      CAST(SUM(CAST(ROUND(c * ln(c) * 1000000000) AS BIGINT))
-                           AS BIGINT) / 1000000000.0 AS s
+                      {duck_exact_sum("c * ln(c)", 9)} AS s
                FROM c GROUP BY doc_id)
     SELECT doc_id, n_tokens, n_types,
            ROUND(max_count * 1.0 / n_tokens, 6) AS top_share,
@@ -1581,12 +1586,9 @@ _ZIPF_TOP = 1000
     sums AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-               CAST(SUM(CAST(ROUND((x / 1000000000.0) * y) AS BIGINT))
-                   AS BIGINT) AS sxy,
-               CAST(SUM(CAST(ROUND((x / 1000000000.0) * x) AS BIGINT))
-                   AS BIGINT) AS sxx,
-               CAST(SUM(CAST(ROUND((y / 1000000000.0) * y) AS BIGINT))
-                   AS BIGINT) AS syy
+               {duck_unit_sum("(x / 1000000000.0) * y", 0)} AS sxy,
+               {duck_unit_sum("(x / 1000000000.0) * x", 0)} AS sxx,
+               {duck_unit_sum("(y / 1000000000.0) * y", 0)} AS syy
         FROM units)
     SELECT n AS n_words,
            ROUND((n * sxy - sx * (sy / 1000000000.0))
@@ -1913,7 +1915,7 @@ def q284_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q292_source_divergence",
-    oracle="""
+    oracle=f"""
     WITH words AS (SELECT source, unnest(string_split(text, ' ')) AS w
                    FROM documents),
          cnt AS (SELECT source, w, CAST(COUNT(*) AS BIGINT) AS c
@@ -1935,16 +1937,13 @@ def q284_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
                    FROM p a JOIN p b
                      ON a.w = b.w AND a.source < b.source),
          units AS (SELECT source_a, source_b,
-                          CAST(SUM(CAST(ROUND(1e9 * pa * ln(pa / pb))
-                                        AS BIGINT)) AS BIGINT)
+                          {duck_unit_sum("1e9 * pa * ln(pa / pb)", 0)}
                               AS kl_ab_units,
-                          CAST(SUM(CAST(ROUND(1e9 * pb * ln(pb / pa))
-                                        AS BIGINT)) AS BIGINT)
+                          {duck_unit_sum("1e9 * pb * ln(pb / pa)", 0)}
                               AS kl_ba_units,
-                          CAST(SUM(CAST(ROUND(1e9 * (
-                               0.5 * pa * ln(pa / ((pa + pb) / 2))
-                               + 0.5 * pb * ln(pb / ((pa + pb) / 2))))
-                                        AS BIGINT)) AS BIGINT)
+                          {duck_unit_sum(
+                              "0.5 * pa * ln(pa / ((pa + pb) / 2))"
+                              " + 0.5 * pb * ln(pb / ((pa + pb) / 2))", 9)}
                               AS js_units
                    FROM pairs GROUP BY source_a, source_b)
     SELECT source_a, source_b, kl_ab_units, kl_ba_units, js_units,

@@ -18,7 +18,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hive_reflex_spark.functions import exact_sum
+from hive_reflex_spark.functions import (
+    duck_exact_sum,
+    duck_unit_sum,
+    exact_sum,
+)
 from hive_reflex_spark.io import read_table
 from hive_reflex_spark.registry import query
 
@@ -391,10 +395,10 @@ def q57_gap_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q58_phase_windows",
-    oracle="""
+    oracle=f"""
     SELECT CAST(phase_bucket AS INTEGER) AS phase_bucket, event_type,
            COUNT(*) AS n,
-           CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) / 100.0
+           {duck_exact_sum("value")}
                AS total_value
     FROM (SELECT event_type, value,
                  (epoch_us(ts) % 3600000000) // 600000000 AS phase_bucket
@@ -1077,12 +1081,11 @@ def q209_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q241_seasonal_decompose",
-    oracle="""
+    oracle=f"""
     WITH hourly AS (SELECT event_type,
                            epoch_us(ts) // 3600000000 AS hr,
                            CAST(hour(ts) AS INTEGER) AS hod,
-                           CAST(SUM(CAST(ROUND(value * 100) AS BIGINT))
-                               AS BIGINT) AS vc
+                           {duck_unit_sum("value")} AS vc
                     FROM events GROUP BY 1, 2, 3),
     ma AS (SELECT event_type, hr, hod, vc,
                   SUM(vc) OVER (PARTITION BY event_type ORDER BY hr

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_reflex_spark.io import tracked_persist
-from hive_reflex_spark.functions import exact_sum
+from hive_reflex_spark.functions import duck_exact_sum, exact_sum
 from hive_reflex_spark.operators.tensor import _duck_coords, embedding_coords
 from hive_reflex_spark.registry import query
 
@@ -283,10 +283,6 @@ def distill_train_logistic(
 # ---------------------------------------------------------------------------
 
 
-def _sql_exact_sum(expr: str) -> str:
-    return f"CAST(SUM(CAST(ROUND(({expr}) * {_E9}) AS BIGINT)) AS BIGINT) / {_E9}.0"
-
-
 def _sql_clamp_p(z: str) -> str:
     return f"LEAST(GREATEST(ROUND(1.0 / (1.0 + exp(-({z}))), 6), 0.000001), 0.999999)"
 
@@ -294,10 +290,8 @@ def _sql_clamp_p(z: str) -> str:
 def _qat_oracle() -> str:
     parts = [
         f"""coords AS (
-        SELECT vec_id, CAST(label % 2 AS INTEGER) AS y,
-               CAST(dim AS INTEGER) AS dim, CAST(v AS DOUBLE) AS x
-        FROM (SELECT vec_id, label, unnest(range(len(embedding))) AS dim,
-                     unnest(embedding) AS v FROM embeddings)),
+        SELECT vec_id, CAST(label % 2 AS INTEGER) AS y, dim, v AS x
+        FROM {_duck_coords(None)} c),
     nn AS (SELECT COUNT(DISTINCT vec_id) AS n FROM coords),
     w0 AS (SELECT CAST(range AS INTEGER) AS dim, 0.0 AS w
            FROM range({N_DIMS}))"""
@@ -320,7 +314,7 @@ def _qat_oracle() -> str:
         )
         parts.append(
             f"""f{k} AS (SELECT c.vec_id, c.y,
-                       ROUND({_sql_exact_sum("c.x * q.wq")}, 6) AS z
+                       ROUND({duck_exact_sum("c.x * q.wq", 9)}, 6) AS z
                 FROM coords c JOIN wq{k} q USING (dim)
                 GROUP BY c.vec_id, c.y)"""
         )
@@ -329,19 +323,20 @@ def _qat_oracle() -> str:
         )
         parts.append(
             f"""m{k} AS (SELECT {k} AS epoch,
-                ROUND(({_sql_exact_sum(
-                    "ROUND(-y * ln(p) - (1 - y) * ln(1 - p), 6)"
+                ROUND(({duck_exact_sum(
+                    "ROUND(-y * ln(p) - (1 - y) * ln(1 - p), 6)", 9
                 )}) / (SELECT n FROM nn), 6) AS loss,
                 ROUND(CAST(SUM(CASE WHEN (p >= 0.5) = (y = 1)
                                     THEN 1 ELSE 0 END) AS BIGINT) * 1.0
                       / (SELECT n FROM nn), 6) AS accuracy,
-                (SELECT ROUND(sqrt({_sql_exact_sum("ROUND(wq * wq, 9)")}
+                (SELECT ROUND(sqrt({duck_exact_sum("ROUND(wq * wq, 9)", 9)}
                      * {_E9}.0 / {_E9}.0), 6) FROM wq{k}) AS wq_norm,
                 (SELECT ROUND(s, 9) FROM s{k}) AS q_scale
                 FROM p{k})"""
         )
         parts.append(
-            f"""g{k} AS (SELECT c.dim, {_sql_exact_sum("(p.p - p.y) * c.x")} AS g
+            f"""g{k} AS (SELECT c.dim,
+                       {duck_exact_sum("(p.p - p.y) * c.x", 9)} AS g
                 FROM p{k} p JOIN coords c USING (vec_id)
                 GROUP BY c.dim)"""
         )
@@ -366,16 +361,14 @@ def _distill_oracle() -> str:
     at2 = D_ALPHA * D_TEMP * D_TEMP
     parts = [
         f"""coords AS (
-        SELECT vec_id, CAST(label % 2 AS INTEGER) AS y,
-               CAST(dim AS INTEGER) AS dim, CAST(v AS DOUBLE) AS x
-        FROM (SELECT vec_id, label, unnest(range(len(embedding))) AS dim,
-                     unnest(embedding) AS v FROM embeddings)),
+        SELECT vec_id, CAST(label % 2 AS INTEGER) AS y, dim, v AS x
+        FROM {_duck_coords(None)} c),
     nn AS (SELECT COUNT(DISTINCT vec_id) AS n FROM coords),
     wt AS (SELECT CAST(range AS INTEGER) AS dim,
                   ((CAST(range AS INTEGER) * 37) % 13 - 6) / 20.0 AS w
            FROM range({N_DIMS})),
     tf AS (SELECT c.vec_id,
-                  ROUND({_sql_exact_sum("c.x * t.w")}, 6) AS zt
+                  ROUND({duck_exact_sum("c.x * t.w", 9)}, 6) AS zt
            FROM coords c JOIN wt t USING (dim) GROUP BY c.vec_id),
     tq AS (SELECT vec_id, {_sql_clamp_p('zt')} AS q,
                   {_sql_clamp_p(f'zt / {D_TEMP}')} AS q_t
@@ -388,7 +381,7 @@ def _distill_oracle() -> str:
     for k in range(1, EPOCHS + 1):
         parts.append(
             f"""f{k} AS (SELECT c.vec_id, c.y,
-                       ROUND({_sql_exact_sum("c.x * q.w")}, 6) AS z
+                       ROUND({duck_exact_sum("c.x * q.w", 9)}, 6) AS z
                 FROM coords c JOIN {prev} q USING (dim)
                 GROUP BY c.vec_id, c.y)"""
         )
@@ -400,17 +393,19 @@ def _distill_oracle() -> str:
         )
         parts.append(
             f"""m{k} AS (SELECT {k} AS epoch,
-                ROUND({at2} * ({_sql_exact_sum(
-                    "ROUND(q_t * ln(q_t / p_t) + (1 - q_t) * ln((1 - q_t) / (1 - p_t)), 6)"
+                ROUND({at2} * ({duck_exact_sum(
+                    "ROUND(q_t * ln(q_t / p_t)"
+                    " + (1 - q_t) * ln((1 - q_t) / (1 - p_t)), 6)", 9
                 )}) / (SELECT n FROM nn), 6) AS soft_loss,
-                ROUND({1 - D_ALPHA} * ({_sql_exact_sum(
-                    "ROUND(-y * ln(p) - (1 - y) * ln(1 - p), 6)"
+                ROUND({1 - D_ALPHA} * ({duck_exact_sum(
+                    "ROUND(-y * ln(p) - (1 - y) * ln(1 - p), 6)", 9
                 )}) / (SELECT n FROM nn), 6) AS hard_loss,
-                ROUND(ROUND({at2} * ({_sql_exact_sum(
-                    "ROUND(q_t * ln(q_t / p_t) + (1 - q_t) * ln((1 - q_t) / (1 - p_t)), 6)"
+                ROUND(ROUND({at2} * ({duck_exact_sum(
+                    "ROUND(q_t * ln(q_t / p_t)"
+                    " + (1 - q_t) * ln((1 - q_t) / (1 - p_t)), 6)", 9
                 )}) / (SELECT n FROM nn), 6)
-                    + ROUND({1 - D_ALPHA} * ({_sql_exact_sum(
-                    "ROUND(-y * ln(p) - (1 - y) * ln(1 - p), 6)"
+                    + ROUND({1 - D_ALPHA} * ({duck_exact_sum(
+                    "ROUND(-y * ln(p) - (1 - y) * ln(1 - p), 6)", 9
                 )}) / (SELECT n FROM nn), 6), 6) AS distill_loss,
                 ROUND(CAST(SUM(CASE WHEN (p >= 0.5) = (q >= 0.5)
                                     THEN 1 ELSE 0 END) AS BIGINT) * 1.0
@@ -418,9 +413,9 @@ def _distill_oracle() -> str:
                 FROM p{k})"""
         )
         parts.append(
-            f"""g{k} AS (SELECT c.dim, {_sql_exact_sum(
+            f"""g{k} AS (SELECT c.dim, {duck_exact_sum(
                 f"ROUND({D_ALPHA * D_TEMP} * (p.p_t - p.q_t)"
-                f" + {1 - D_ALPHA} * (p.p - p.y), 6) * c.x"
+                f" + {1 - D_ALPHA} * (p.p - p.y), 6) * c.x", 9
             )} AS g
                 FROM p{k} p JOIN coords c USING (vec_id)
                 GROUP BY c.dim)"""

@@ -9,6 +9,13 @@ Rules for oracle-checked queries (SURVEY §7 watch-list #4/#5):
 - alias every computed column identically in Spark and SQL;
 - round float aggregates (distributed sums are order-sensitive);
 - cast DuckDB integer SUMs to BIGINT (DuckDB widens to HUGEINT);
+- spell an oracle's exact float sum with functions.duck_exact_sum /
+  duck_unit_sum (the DuckDB twins of exact_sum), never by hand, and a
+  shared vector step with its SQL twin (tensor._duck_coords,
+  similarity._duck_coarse_ranked, dedup._DUCK_BANDS);
+- mark an expensive CTE that is referenced more than once
+  ``AS MATERIALIZED``: DuckDB 1.0 re-inlines it at every reference, so
+  an unrolled greedy re-expands every earlier step;
 - keep outputs small (grouped/top-k) so value-hashing is robust;
 - NEVER float-ROUND an exact-unit sum to FEWER decimals than its unit
   scale (a ...500-unit sum sits exactly on the .5 boundary and the

@@ -31,6 +31,7 @@ from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
+from hive_reflex_spark.functions import duck_exact_sum, exact_sum
 from hive_reflex_spark.io import read_table
 from hive_reflex_spark.registry import query
 from hive_reflex_spark.session import scratch_path
@@ -116,11 +117,11 @@ def run_to_memory(df: DataFrame, mode: str = "complete") -> DataFrame:
 
 @query(
     "q62_streaming_hourly",
-    oracle="""
+    oracle=f"""
     SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S')
                AS window_start,
            event_type, COUNT(*) AS n,
-           CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) / 100.0
+           {duck_exact_sum("value")}
                AS total_value
     FROM events
     GROUP BY 1, 2
@@ -134,9 +135,7 @@ def q62_streaming_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = stream_events(spark, sf_dir)
     agg = stream.groupBy(F.window("ts", "1 hour"), "event_type").agg(
         F.count("*").alias("n"),
-        (F.sum(F.round(F.col("value") * 100).cast("long")) / 100.0).alias(
-            "total_value"
-        ),
+        exact_sum(F.col("value")).alias("total_value"),
     )
     out = run_to_memory(agg, mode="complete")
     return out.select(
@@ -470,7 +469,7 @@ def can_bus_socket_stream(
     return decode_can_frames(parse_slcan_frames(lines, n_nodes=n_nodes))
 
 
-_CAN_ROLLUP_ORACLE = """
+_CAN_ROLLUP_ORACLE = f"""
     WITH f AS (SELECT event_id AS v FROM events WHERE event_id % 8 != 0),
     d AS (SELECT CAST(v % 4 AS INTEGER) AS node_id,
                  CAST(((v * 37 + 13) % 36000) - 18000 AS DOUBLE) * 0.01
@@ -480,10 +479,8 @@ _CAN_ROLLUP_ORACLE = """
     SELECT node_id, COUNT(*) AS n_cmd,
            ROUND(MIN(angle), 6) AS min_angle,
            ROUND(MAX(angle), 6) AS max_angle,
-           ROUND(CAST(SUM(CAST(ROUND(angle * 1000000000) AS BIGINT))
-                 AS BIGINT) / 1000000000.0, 6) AS sum_angle,
-           ROUND(CAST(SUM(CAST(ROUND(compliance * 1000000000) AS BIGINT))
-                 AS BIGINT) / 1000000000.0, 6) AS sum_compliance
+           ROUND({duck_exact_sum("angle", 9)}, 6) AS sum_angle,
+           ROUND({duck_exact_sum("compliance", 9)}, 6) AS sum_compliance
     FROM d GROUP BY node_id
     """
 
@@ -511,8 +508,6 @@ def _event_can_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _can_rollup(frames: DataFrame) -> DataFrame:
     """Decode ``frames`` and roll them up per node: the answer every q160
     transport must reproduce for ``_CAN_ROLLUP_ORACLE``."""
-    from hive_reflex_spark.functions import exact_sum
-
     decoded = decode_can_frames(frames)
     return decoded.groupBy("node_id").agg(
         F.count("*").alias("n_cmd"),
@@ -783,12 +778,12 @@ DUP_MOD = 97  # event_id % 97 == 0 -> planted duplicate (~1% of the stream)
 
 @query(
     "q97_stream_dedup",
-    oracle="""
+    oracle=f"""
     SELECT event_type,
            COUNT(*) AS n_unique,
            CAST(SUM(CASE WHEN event_id % 97 = 0 THEN 1 ELSE 0 END)
                AS BIGINT) AS n_had_dupe,
-           CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) / 100.0
+           {duck_exact_sum("value")}
                AS total_value
     FROM events
     GROUP BY event_type
@@ -826,9 +821,7 @@ def q97_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(((F.col("event_id") % DUP_MOD) == 0).cast("int"))
         .cast("long")
         .alias("n_had_dupe"),
-        (F.sum(F.round(F.col("value") * 100).cast("long")) / 100.0).alias(
-            "total_value"
-        ),
+        exact_sum(F.col("value")).alias("total_value"),
     )
 
 
@@ -906,11 +899,11 @@ def _error_click_join(
 
 @query(
     "q104_incremental_rollup",
-    oracle="""
+    oracle=f"""
     SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S')
                AS window_start,
            event_type, COUNT(*) AS n,
-           CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) / 100.0
+           {duck_exact_sum("value")}
                AS total_value
     FROM events
     GROUP BY 1, 2
@@ -1279,12 +1272,11 @@ def q171_incremental_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q172_log_shipping_roundtrip",
-    oracle="""
+    oracle=f"""
     SELECT event_type, COUNT(*) AS n,
            CAST(MIN(event_id) AS BIGINT) AS min_event,
            CAST(MAX(event_id) AS BIGINT) AS max_event,
-           ROUND(CAST(SUM(CAST(ROUND(value * 1000000) AS BIGINT)) AS BIGINT)
-                 / 1000000.0, 6) AS total_value
+           ROUND({duck_exact_sum("value", 6)}, 6) AS total_value
     FROM events GROUP BY event_type
     """,
 )
@@ -1311,11 +1303,7 @@ def q172_log_shipping_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"),
         F.min("event_id").alias("min_event"),
         F.max("event_id").alias("max_event"),
-        F.round(
-            F.sum(F.round(F.col("value") * 1_000_000).cast("long"))
-            / 1_000_000.0,
-            6,
-        ).alias("total_value"),
+        F.round(exact_sum(F.col("value"), 6), 6).alias("total_value"),
     )
 
 

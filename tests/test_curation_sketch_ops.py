@@ -100,9 +100,9 @@ def test_semdedup_drops_verified_by_bruteforce(spark):
     cosine >= tau (with the same 1e-9 integer-unit dot discipline)."""
     from hive_reflex_spark.operators.dedup import (
         SEMDEDUP_TAU,
-        _SEM_STRIDE,
         q269_semantic_dedup,
     )
+    from hive_reflex_spark.operators.similarity import N_CENTROIDS_STRIDE
 
     con = duckdb.connect()
     raw = con.execute(
@@ -115,7 +115,7 @@ def test_semdedup_drops_verified_by_bruteforce(spark):
     def xdot(a: np.ndarray, b: np.ndarray) -> float:
         return float(np.sum(np.round(a * b * 1e9)).astype(np.int64)) / 1e9
 
-    cent_mask = ids % _SEM_STRIDE == 0
+    cent_mask = ids % N_CENTROIDS_STRIDE == 0
     cids, C = ids[cent_mask], X[cent_mask]
     assign = {}
     for i, vid in enumerate(ids):

@@ -3,14 +3,26 @@ Oracle parity is covered by check_oracle (q85-q87); these pin the
 pipeline-contract properties: split determinism, quota exactness, and
 decontamination self-exclusion."""
 
+import os
+import sys
+
+import duckdb
 from pyspark.sql import functions as F
 
+from hive_reflex_spark.io import TABLES
 from hive_reflex_spark.operators.sampling import (
     SAMPLE_PER_STRATUM,
     q85_hash_split,
     q86_stratified_sample,
     q87_decontaminate,
+    q262_coverage_selection,
 )
+from hive_reflex_spark.registry import ORACLES
+
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts")
+)
+from check_oracle import canon_rows  # noqa: E402
 
 
 def test_split_fractions_and_totals(spark, sf_smoke):
@@ -144,8 +156,6 @@ def test_coverage_selection_is_submodular_greedy(spark, sf_smoke):
     """Greedy max-coverage invariants: marginal gains are non-increasing
     (submodularity of the greedy sequence), running coverage is the
     cumulative gain sum, and the fraction is monotone in (0, 1]."""
-    from hive_reflex_spark.operators.sampling import q262_coverage_selection
-
     rows = sorted(
         q262_coverage_selection(spark, sf_smoke).collect(),
         key=lambda r: r.rank,
@@ -160,3 +170,20 @@ def test_coverage_selection_is_submodular_greedy(spark, sf_smoke):
         assert r.covered == cum
         assert prev_frac <= r.coverage_frac <= 1.0
         prev_frac = r.coverage_frac
+
+
+def test_coverage_oracle_fits_bounded_duckdb_memory(spark, sf_smoke):
+    """q262's oracle unrolls the greedy as CTEs; each step is
+    MATERIALIZED, so no later step re-expands the earlier ones. It runs
+    in 2 GB of DuckDB memory and matches the Spark build row for row."""
+    con = duckdb.connect()
+    con.execute("SET memory_limit='2GB'")
+    for t in TABLES:
+        p = os.path.join(sf_smoke, f"{t}.parquet")
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    res = con.execute(ORACLES["q262_coverage_selection"])
+    want = canon_rows([d[0] for d in res.description], res.fetchall())
+    sdf = q262_coverage_selection(spark, sf_smoke)
+    got = canon_rows(sdf.columns, [tuple(r) for r in sdf.collect()])
+    assert want[1] and got == want
